@@ -21,52 +21,28 @@ import time
 
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-LOAD_MAX = float(os.environ.get("SPARK_GRAFT_LOAD_MAX", "4"))
 
+import bench  # noqa: E402 - the frozen harness's gating helpers
 
-def external_running(samples: int = 8, interval: float = 0.08) -> float:
-    """Instantaneous external runnable-task estimate (bench.py twin)."""
-    vals = []
-    for _ in range(samples):
-        try:
-            with open("/proc/loadavg") as f:
-                run = int(f.read().split()[3].split("/")[0])
-        except (OSError, ValueError, IndexError):
-            return 0.0
-        vals.append(max(0, run - 1))
-        time.sleep(interval)
-    return sum(vals) / len(vals)
-
-
-def wait_clean(budget: float = 600.0) -> bool:
-    est = external_running()
-    while est > LOAD_MAX and budget > 0:
-        time.sleep(10)
-        budget -= 10
-        est = external_running()
-    return est <= LOAD_MAX
+SF_DIR = bench.SF_DIR
+CPUS = bench.CPUS
 
 
 def timed_passes(fn, n: int = 3, label: str = "") -> list[dict]:
-    """n gated passes of fn(); each tagged clean/tainted."""
+    """n load-gated passes of fn(), each tagged clean/tainted; ``tps`` is
+    passes per second, the key bench._best_pass ranks by."""
+    gate = bench._LoadGate()
     out = []
     for i in range(n):
-        pre_clean = wait_clean()
+        gate.wait_clean(f"{label} pass{i}")
         t0 = time.time()
         fn()
         dt = time.time() - t0
-        post = external_running(samples=3)
-        out.append({"sec": round(dt, 3), "clean": pre_clean and post <= LOAD_MAX})
+        gate.post_check(bench._external_running(samples=3))
+        out.append({"sec": round(dt, 3), "tps": 1.0 / dt, "clean": gate.events[-1]["clean"]})
         if label:
             print(f"  {label} pass{i}: {dt:.3f}s clean={out[-1]['clean']}", file=sys.stderr)
     return out
-
-
-def best(passes: list[dict]) -> float:
-    clean = [p for p in passes if p["clean"]]
-    return min(p["sec"] for p in (clean or passes))
 
 
 def _spark(app: str):
@@ -101,7 +77,7 @@ def run_queries(names: list[str]) -> None:
             df = queries[name](spark, SF_DIR)
             df.write.format("noop").mode("overwrite").save()
 
-        result[name] = best(timed_passes(one, 3, label=name))
+        result[name] = bench._best_pass(timed_passes(one, 3, label=name))["sec"]
     print(json.dumps(result))
 
 
@@ -120,7 +96,7 @@ def run_lift(n_pages: int) -> None:
     df = lift_html_pages(spark.read.parquet(corpus))
     n = df.count()  # warm-up
     passes = timed_passes(lambda: df.count(), 4, label="lift")
-    b = best(passes)
+    b = bench._best_pass(passes)["sec"]
     print(json.dumps({"pages": n_pages, "triples": n, "sec": b, "tps": round(n / b, 1), "passes": passes}))
 
 
@@ -134,7 +110,7 @@ def run_pipeline() -> None:
     spark = _spark("bench-extra-pipeline")
     pipe_out = os.path.join(tempfile.gettempdir(), "cyclegraph_extra_pipeline")
     shutil.rmtree(pipe_out, ignore_errors=True)
-    wait_clean()
+    bench._LoadGate().wait_clean("pipeline")
     t0 = time.time()
     pm = run_pipeline(
         spark,

@@ -24,7 +24,6 @@ from __future__ import annotations
 import re
 
 import pandas as pd
-from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -107,14 +106,3 @@ def extract_text_udf(html: pd.Series) -> pd.Series:
 def with_extracted_text(df, html_col: str = "html", out_col: str = "text") -> "object":
     """pages(url, warc_ts, html, ...) → + ``out_col`` extracted text."""
     return df.withColumn(out_col, extract_text_udf(F.col(html_col)))
-
-
-def text_quality_columns(text_col: Column) -> dict[str, Column]:
-    """JVM-side quality features over extracted text (no UDF)."""
-    n_chars = F.length(text_col)
-    n_tokens = F.size(F.split(F.trim(text_col), r"\s+"))
-    return {
-        "n_chars": n_chars,
-        "n_tokens": n_tokens,
-        "avg_token_len": n_chars / F.greatest(n_tokens, F.lit(1)),
-    }

@@ -30,11 +30,10 @@ Scale notes:
 - Each star step is one hash aggregation (min per node — map-side
   partial agg, so a hot node — the "Boris Johnson problem", one entity
   on ~20% of pages — does not funnel through one reducer) + one join
-  of edges against that per-node minimum. The join IS skewed on a hot
-  node, so minima rows for nodes with degree > ``hot_degree`` are
-  split off and broadcast (their edges never shuffle by node at all);
-  the residual join is skew-free, and AQE skew-join remains on as a
-  backstop.
+  of edges against that per-node minimum. The join is skewed on a hot
+  node; AQE's skew-join splits the oversized partition (an explicit
+  broadcast split of hot minima measured slower on every planted-hub
+  graph, tools/skew_stress.py).
 - ``localCheckpoint`` every round truncates the lineage chain — without
   it the plan doubles per iteration and the driver OOMs compiling it
   (this is the Spark analog of the reference's incremental checkpoint
@@ -54,33 +53,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _attach_min(
-    by_u: DataFrame, w: DataFrame, hot_degree: int, split_hot: bool
-) -> DataFrame:
-    """Join edges grouped-by ``u`` to per-node minima ``w(u, m, deg)``.
-
-    Hot nodes' minima (degree > hot_degree; by construction a tiny
-    relation, ≤ 2|E|/hot_degree rows) are broadcast so a hub's edge
-    rows never shuffle on the hub id; everything else takes the
-    ordinary (now skew-free) shuffled hash join. Hot nodes EMERGE
-    during contraction (a component's min accumulates the whole
-    component as direct children), so hotness is re-derived from each
-    step's ``w``, not detected once up front; the ``isEmpty`` probe
-    keeps the common no-hot-node step on the plain single-join plan.
-    """
-    if not split_hot:
-        return by_u.join(w.select("u", "m"), "u")
-    hot = w.filter(F.col("deg") > F.lit(hot_degree)).select("u", "m")
-    if hot.isEmpty():
-        return by_u.join(w.select("u", "m"), "u")
-    hot_part = by_u.join(F.broadcast(hot), "u")
-    cold_part = by_u.join(
-        F.broadcast(hot.select("u")), "u", "left_anti"
-    ).join(w.select("u", "m"), "u")
-    return cold_part.unionByName(hot_part)
-
-
-def _large_star(e: DataFrame, hot_degree: int, split_hot: bool) -> DataFrame:
+def _large_star(e: DataFrame) -> DataFrame:
     """(u,v) undirected → for each node, larger neighbors hook to m(u).
 
     Output is a MULTISET: the trailing distinct this step used to carry
@@ -95,18 +68,15 @@ def _large_star(e: DataFrame, hot_degree: int, split_hot: bool) -> DataFrame:
     sym = e.unionByName(
         e.select(F.col("v").alias("u"), F.col("u").alias("v"))
     ).filter(F.col("u") != F.col("v"))
-    w = sym.groupBy("u").agg(
-        F.least(F.min("v"), F.first("u")).alias("m"),
-        F.count(F.lit(1)).alias("deg"),
-    )
+    w = sym.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("m"))
     return (
-        _attach_min(sym, w, hot_degree, split_hot)
+        sym.join(w, "u")
         .filter(F.col("v") > F.col("u"))
         .select(F.col("v").alias("u"), F.col("m").alias("v"))
     )
 
 
-def _small_star(e: DataFrame, hot_degree: int, split_hot: bool) -> DataFrame:
+def _small_star(e: DataFrame) -> DataFrame:
     """(u,v) → orient u=larger endpoint; u and its smaller neighbors hook to m(u)."""
     d = (
         e.filter(F.col("u") != F.col("v"))
@@ -115,10 +85,8 @@ def _small_star(e: DataFrame, hot_degree: int, split_hot: bool) -> DataFrame:
         )
         .distinct()
     )
-    w = d.groupBy("u").agg(
-        F.min("v").alias("m"), F.count(F.lit(1)).alias("deg")
-    )
-    hooked = _attach_min(d, w, hot_degree, split_hot)
+    w = d.groupBy("u").agg(F.min("v").alias("m"))
+    hooked = d.join(w, "u")
     out = hooked.select(F.col("v").alias("u"), F.col("m").alias("v")).unionByName(
         w.select(F.col("u"), F.col("m").alias("v"))
     )
@@ -130,9 +98,6 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 25,
-    salt: int = 8,
-    hot_degree: int = 1_000_000,
-    skew_factor: int = 8,
     stats: dict | None = None,
 ) -> DataFrame:
     """edges(src, dst) → labels(id, component); component = min id.
@@ -142,56 +107,11 @@ def connected_components(
     fingerprint action; stop at a fingerprint fixpoint. O(log n) rounds
     on any topology, independent of where the component minimum sits.
 
-    ``salt`` > 1 enables the hot-node broadcast split (kept under the
-    historical name; the split now broadcasts hot minima instead of
-    sharding edges — same goal, fewer moving parts). Results are
-    identical either way — the levers only change the physical join
-    strategy.
-
-    Hotness is RELATIVE to the round's shuffle layout, floored by an
-    absolute minimum: a node is hot when its degree exceeds
-
-        max(hot_degree, skew_factor * 4n // P)
-
-    where n is the round fingerprint's oriented-distinct edge count
-    (the star-join's shuffled side has ≤ 4n rows, so 4n/P bounds the
-    average rows per shuffle partition) and P =
-    ``spark.sql.shuffle.partitions``. Rationale, both directions:
-
-    - An ABSOLUTE threshold is wrong at web scale: on a 10^12-edge
-      round with P=2*10^5, the average partition holds ~2*10^7 rows —
-      a degree-10^6 key is *under* average (not skewed), yet a fixed
-      10^6 cutoff would flag up to 4*10^6 such keys and try to
-      broadcast them all. The relative form caps the hot relation at
-      Σdeg/thr ≤ 4n / (skew_factor*4n/P) = **P/skew_factor rows at any
-      scale** — always broadcastable.
-    - The ``hot_degree`` floor keeps the split out of the way on small
-      graphs where even a maximal hub fits one task trivially
-      (MEASURED, r5 tools/skew_stress.py, local[16] idle: a planted
-      100k-degree hub + 25k chains ran 36.8 s with a 1000-threshold
-      split vs 25.7 s without, identical labels — a 100k-row join
-      partition is not a straggler; a planted 2M-degree hub above the
-      floor ran 40.4 s armed vs 27.2 s disarmed for the same reason:
-      in a single JVM no partition straggles, so the probes + split
-      plan are pure insurance premium. The premium only pays off when
-      one key's rows dwarf the average partition on a real cluster).
-    - ``skew_factor`` ≈ AQE's skewedPartitionFactor (5× median) with
-      slack; 0 disables the relative term (pure absolute threshold —
-      used by regression tests that force the split on planted hubs).
-
     Pass ``stats={}`` to get convergence telemetry back: ``rounds``
     (star rounds until fixpoint), ``edge_counts`` (surviving edge
-    count per round — the observable for the O(log n) claim), and
-    ``hot_thresholds`` (the effective per-round threshold, None for a
-    round whose probes were pigeonhole-skipped).
+    count per round — the observable for the O(log n) claim) and
+    ``converged``.
     """
-    split_hot = salt > 1
-    try:
-        shuffle_p = int(
-            edges.sparkSession.conf.get("spark.sql.shuffle.partitions")
-        )
-    except (TypeError, ValueError):
-        shuffle_p = 200
     # materialize the caller's edge lineage exactly ONCE: verts and e
     # both derive from it, and checkpointing each separately (the old
     # shape) recomputed the caller's (possibly expensive, un-checkpointed)
@@ -200,7 +120,7 @@ def connected_components(
     # fusing the checkpoint into the next action looks like it saves a
     # job per round, but a lazy localCheckpoint freezes a physical plan
     # BEFORE AQE's runtime re-optimization (no shuffle-partition
-    # coalescing on the small contracted relations), and the armed-path
+    # coalescing on the small contracted relations), and a planted-hub
     # pathology test regressed 24.7 → 45.9 s when all CC checkpoints
     # went lazy (r5, local[32] idle, identical labels).
     # Round-6 A/B (kept as-is): skipping this checkpoint when the
@@ -235,7 +155,6 @@ def connected_components(
     if stats is not None:
         stats["rounds"] = 0
         stats["edge_counts"] = []
-        stats["hot_thresholds"] = []
 
     def _fingerprint(d: DataFrame) -> tuple:
         row = d.agg(
@@ -257,33 +176,13 @@ def connected_components(
     )
     converged = False
     for _ in range(max_iter):
-        # Effective threshold = absolute floor ∨ relative skew bound
-        # (docstring); re-derived every round from the fingerprint n
-        # already in hand, so it tracks the contracting edge set.
-        thr = hot_degree
-        if skew_factor > 0:
-            thr = max(thr, skew_factor * 4 * prev_fp[0] // shuffle_p)
-        # Pigeonhole gate for the hot probes (replaces the r3 `n < 10k`
-        # heuristic; ADVICE r4 #3): a node's degree is bounded by the
-        # round's edge count |e| ≤ 2n (n = the fingerprint's oriented-
-        # distinct count, valid for the e this round consumes), so when
-        # 2n ≤ thr NO node can qualify and both star steps' hot probes
-        # (2 minima-agg actions per round — measured 6.5 s over 4
-        # rounds on the 300k-edge skew-stress graph at local[16]) are
-        # skipped PROVABLY without changing the physical plan choice.
-        # A graph that contracts below the bound stops paying mid-run
-        # while web-scale rounds keep the broadcast-split insurance.
-        probe_hot = split_hot and 2 * prev_fp[0] > thr
-        e = _small_star(
-            _large_star(e, thr, probe_hot), thr, probe_hot
-        ).localCheckpoint(eager=True)  # truncate lineage every round;
-        # eager on purpose (see the seed-checkpoint comment: lazy loses
-        # AQE re-optimization and measured ~1.9x slower on the armed path)
+        # truncate lineage every round; eager on purpose (see the
+        # seed-checkpoint comment: lazy loses AQE re-optimization)
+        e = _small_star(_large_star(e)).localCheckpoint(eager=True)
         fp = _fingerprint(e)
         if stats is not None:
             stats["rounds"] += 1
             stats["edge_counts"].append(fp[0])
-            stats["hot_thresholds"].append(thr if probe_hot else None)
         if fp == prev_fp:
             converged = True
             break

@@ -81,7 +81,7 @@ def candidate_ngrams(
         def keep(i):
             ok = i <= F.size(toks) - n
             if first_words is not None:
-                ok = ok & F.element_at(toks, i + 1).isin(first_words)
+                ok = ok & F.try_element_at(toks, i + 1).isin(first_words)
             return ok
 
         def build(i):
@@ -187,36 +187,6 @@ def link_mentions(
         scored.groupBy(*w_keys)
         .agg(F.min_by(payload, order_key).alias("best"))
         .select(*w_keys, "best.alias", "best.entity_id", F.round("best.score", 6).alias("score"))
-    )
-
-
-def link_mentions_window(
-    pages: DataFrame,
-    aliases: DataFrame,
-    text_col: str = "text",
-    key_cols: tuple[str, ...] = ("url",),
-    context_weight: float = 0.1,
-) -> DataFrame:
-    """row_number variant of the same semantics (O3 keep-best idiom) —
-    kept for plan comparison in tests/bench; one extra sort vs min_by."""
-    cands = candidate_ngrams(pages, text_col, key_cols)
-    joined = cands.join(F.broadcast(aliases), cands["gram"] == aliases["alias"])
-    w_support = Window.partitionBy(*key_cols, "entity_id")
-    score = F.col("prior") * (
-        1.0
-        + context_weight
-        * F.log(1.0 + (F.size(F.collect_set("pos").over(w_support)) - 1).cast("double"))
-    )
-    scored = joined.withColumn("_score", score)  # project before nesting
-    w = Window.partitionBy(*[*key_cols, "pos"]).orderBy(
-        F.col("n").desc(), F.col("_score").desc(), F.col("entity_id").asc()
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            *key_cols, "pos", "alias", "entity_id", F.round("_score", 6).alias("score")
-        )
     )
 
 

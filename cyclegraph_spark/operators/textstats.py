@@ -1,5 +1,5 @@
 """Text analysis operators for large-scale corpus pipelines — language
-ID, quality scoring, token counting, document fingerprinting.
+ID, token counting, PII scrubbing.
 
 All pure Column expressions (whole-stage codegen; no UDF). The scalar
 surface mirrors the reference's string/regex normalization family
@@ -10,7 +10,7 @@ core/src/physics.rs:446-507, safe-slug trend9.py:267).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # marker stopwords per language — a deterministic n-gram-style heuristic
@@ -51,62 +51,6 @@ def lang_id(text_col: Column) -> Column:
         best_lang = F.when(take & better, F.lit(lang)).otherwise(best_lang)
         best_score = F.when(take & better, score).otherwise(best_score)
     return best_lang
-
-
-def quality_features(text_col: Column) -> dict[str, Column]:
-    """Length/punctuation/stopword ratio features (quality scoring for a
-    training-data pipeline; A19 estimated-error heuristic analog)."""
-    n_chars = F.length(text_col)
-    n_tokens = token_count(text_col)
-    n_punct = F.regexp_count(text_col, F.lit(r"[.,;:!?]"))
-    n_upper = F.regexp_count(text_col, F.lit(r"[A-Z]"))
-    n_stop = marker_score(text_col, "en")
-    safe_tokens = F.greatest(n_tokens, F.lit(1))
-    safe_chars = F.greatest(n_chars, F.lit(1))
-    return {
-        "n_chars": n_chars,
-        "n_tokens": n_tokens,
-        "avg_token_len": n_chars.cast("double") / safe_tokens,
-        "punct_ratio": n_punct.cast("double") / safe_chars,
-        "upper_ratio": n_upper.cast("double") / safe_chars,
-        "stopword_ratio": n_stop.cast("double") / safe_tokens,
-    }
-
-
-def quality_score(text_col: Column) -> Column:
-    """Composite [0,1] quality score — multiplicative penalty chain, the
-    reference's weather-adjustment idiom (core/src/metrics.rs:19-28)."""
-    f = quality_features(text_col)
-    base = F.lit(1.0)
-    score = (
-        base
-        * F.when(f["n_tokens"] < 10, 0.5).otherwise(1.0)
-        * F.when(f["avg_token_len"] > 12, 0.8).otherwise(1.0)
-        * F.when(f["punct_ratio"] > 0.1, 0.9).otherwise(1.0)
-        * F.when(f["stopword_ratio"] < 0.01, 0.85).otherwise(1.0)
-    )
-    return F.least(F.greatest(score, F.lit(0.0)), F.lit(1.0))
-
-
-def fingerprint(text_col: Column) -> Column:
-    """Deterministic document fingerprint: md5 of the
-    whitespace-normalized, lower-cased text (final14.py sha256-manifest
-    idiom applied per document)."""
-    norm = F.regexp_replace(F.lower(F.trim(text_col)), r"\s+", " ")
-    return F.md5(norm)
-
-
-def with_text_features(df: DataFrame, text_col: str = "text") -> DataFrame:
-    c = F.col(text_col)
-    feats = quality_features(c)
-    out = df
-    for name, col in feats.items():
-        out = out.withColumn(name, col)
-    return (
-        out.withColumn("lang_pred", lang_id(c))
-        .withColumn("quality", quality_score(c))
-        .withColumn("fingerprint", fingerprint(c))
-    )
 
 
 # --------------------------------------------------------------------------

@@ -375,7 +375,7 @@ def _parse_pages_arrow(batches):
 
 def _coerce_raw_triples(raw: DataFrame) -> DataFrame:
     """(src, subj, pred, raw, kind) → typed (src, subj, pred, obj,
-    obj_dtype); shared by the UDF and JVM parse paths."""
+    obj_dtype)."""
     # substring-after-last-'/' without the regex split + array alloc of
     # element_at(split(...)) — same value for every input (split("/")[-1]
     # IS the text after the last '/', or the whole string when absent)
@@ -409,159 +409,9 @@ def lift_html_pages(pages: DataFrame, url_col: str = "url") -> DataFrame:
     mapInArrow is the guide-§4 column-pruning discipline: Spark cannot
     see which columns an opaque function touches, so without it every
     page column would be read and shipped to Python.
-    This is the GENERAL path (arbitrary nesting, tolerant decode); the
-    zero-Python alternative is :func:`lift_html_pages_jvm`.
     """
     raw = pages.select(F.col(url_col).alias("src"), "html").mapInArrow(
         _parse_pages_arrow, _RAW_TRIPLE_FIELDS
-    )
-    return _coerce_raw_triples(raw)
-
-
-# Java-regex twins of the Python parser patterns (JVM path)
-_J_MICRO = r'(?s)<(\w+)[^>]*\bitemscope\b[^>]*\bitemtype="([^"]+)"[^>]*\bitemid="([^"]+)"[^>]*>(.*?)</\1\s*>'
-_J_MICRO_PROP = r'\bitemprop="([^"]+)"[^>]*>([^<]*)<'
-_J_RDFA = r'(?s)<(\w+)[^>]*\btypeof="([^"]+)"[^>]*\babout="([^"]+)"[^>]*>(.*?)</\1\s*>'
-_J_RDFA_PROP = r'\bproperty="(?:schema:)?([^"]+)"[^>]*\bcontent="([^"]*)"'
-_J_JSONLD = r'(?s)<script[^>]*type="application/ld\+json"[^>]*>(.*?)</script\s*>'
-
-# schema of the generator's JSON-LD island (the JVM path compiles a
-# shape-specific plan; arbitrary-nesting documents take the UDF path)
-_JSONLD_SCHEMA = (
-    "struct<`@id`:string, `@type`:string, identifier:string, "
-    "agent:array<struct<`@id`:string, sameAs:string>>>"
-)
-
-
-def _expand_col(term: Column) -> Column:
-    return F.when(
-        term.startswith("http://") | term.startswith("https://"), term
-    ).otherwise(
-        F.when(
-            term.startswith("schema:"),
-            F.concat(F.lit(SCHEMA), F.substring(term, 8, 100000)),
-        ).otherwise(F.concat(F.lit(SCHEMA), term))
-    )
-
-
-def lift_html_pages_jvm(pages: DataFrame, url_col: str = "url") -> DataFrame:
-    """Pure-JVM island lifting — no Python worker at all.
-
-    Semantics-equivalent to :func:`lift_html_pages` on UTF-8 pages with
-    the generator's JSON-LD shape (parity-tested in tests/test_triples).
-
-    Plan shape: ONE projection builds the complete raw-triple array per
-    page (microdata + RDFa via regexp_extract_all + transform/flatten;
-    JSON-LD via from_json on a compiled schema) → ONE explode →
-    coercion. The html string is scanned once per island family in the
-    same pass — no union fan-out re-reading the scan, no Arrow hop.
-
-    MEASURED (sf-corpus 400k pages, local[8]): ~142k triples/s vs ~355k
-    for the pandas-UDF path — Java's backtracking DOTALL patterns with
-    backreferences lose to compiled sre + Arrow batching, and
-    regexp_extract re-matches the pattern once per extracted group. Kept
-    as the zero-Python alternative (e.g. Python-less executors); the UDF
-    path is the default hot path, which the input contract explicitly
-    permits (vectorized pandas/Arrow UDFs, no per-row Python).
-    """
-
-    def _island(pattern: str, prop_pattern: str, expand_type: bool) -> Column:
-        items = F.regexp_extract_all(F.col("h"), F.lit(pattern), F.lit(0))
-
-        def per_item(item: Column) -> Column:
-            itemid = F.regexp_extract(item, pattern, 3)
-            # microdata itemtype is an absolute URL by spec and the Python
-            # parser emits it verbatim; only RDFa typeof (CURIE-friendly)
-            # goes through _expand — keep both engines identical on bare
-            # or prefixed types, not just the corpus's absolute URIs
-            rawtype = F.regexp_extract(item, pattern, 2)
-            itemtype = _expand_col(rawtype) if expand_type else rawtype
-            type_t = F.array(
-                F.struct(
-                    itemid.alias("subj"),
-                    F.lit(RDF_TYPE).alias("pred"),
-                    itemtype.alias("raw"),
-                    F.lit("uri").alias("kind"),
-                )
-            )
-            props = F.transform(
-                F.regexp_extract_all(item, F.lit(prop_pattern), F.lit(0)),
-                lambda p: F.struct(
-                    itemid.alias("subj"),
-                    _expand_col(F.regexp_extract(p, prop_pattern, 1)).alias("pred"),
-                    F.regexp_extract(p, prop_pattern, 2).alias("raw"),
-                    F.lit("raw").alias("kind"),
-                ),
-            )
-            return F.concat(type_t, props)
-
-        return F.flatten(F.transform(items, per_item))
-
-    j = F.from_json(F.regexp_extract(F.col("h"), _J_JSONLD, 1), _JSONLD_SCHEMA)
-
-    def _t(subj: Column, pred: str, raw: Column) -> Column:
-        return F.struct(
-            subj.alias("subj"),
-            F.lit(pred).alias("pred"),
-            raw.alias("raw"),
-            F.lit("uri").alias("kind"),
-        )
-
-    nid = j.getField("@id")
-    _empty = F.expr("array()").cast(
-        "array<struct<subj:string,pred:string,raw:string,kind:string>>"
-    )
-    # the Python walker skips falsy @id ("" as well as null) for the
-    # root's @type/identifier triples but still RECURSES into agent
-    # objects — so agent sameAs triples depend only on their own @id,
-    # never on the root's
-    root_triples = F.when(
-        j.isNotNull() & nid.isNotNull() & (nid != F.lit("")),
-        F.concat(
-            F.when(
-                j.getField("@type").isNotNull(),
-                F.array(_t(nid, RDF_TYPE, _expand_col(j.getField("@type")))),
-            ).otherwise(_empty),
-            F.when(
-                j.getField("identifier").isNotNull(),
-                F.array(
-                    F.struct(
-                        nid.alias("subj"),
-                        F.lit(SCHEMA + "identifier").alias("pred"),
-                        j.getField("identifier").alias("raw"),
-                        F.lit("raw").alias("kind"),  # string literal
-                    )
-                ),
-            ).otherwise(_empty),
-        ),
-    ).otherwise(_empty)
-    agent_triples = F.when(
-        j.isNotNull(),
-        F.transform(
-            F.filter(
-                F.coalesce(j.getField("agent"), F.expr("array()").cast(
-                    "array<struct<`@id`:string,sameAs:string>>"
-                )),
-                lambda a: a.getField("@id").isNotNull()
-                & (a.getField("@id") != F.lit(""))
-                & a.getField("sameAs").isNotNull(),
-            ),
-            lambda a: _t(a.getField("@id"), OWL_SAMEAS, a.getField("sameAs")),
-        ),
-    ).otherwise(_empty)
-    jsonld_triples = F.concat(root_triples, agent_triples)
-
-    all_triples = F.concat(
-        _island(_J_MICRO, _J_MICRO_PROP, expand_type=False),
-        _island(_J_RDFA, _J_RDFA_PROP, expand_type=True),
-        jsonld_triples,
-    )
-    raw = (
-        pages.select(
-            F.col(url_col).alias("src"), F.col("html").cast("string").alias("h")
-        )
-        .select("src", F.explode(all_triples).alias("t"))
-        .select("src", "t.subj", "t.pred", "t.raw", "t.kind")
     )
     return _coerce_raw_triples(raw)
 

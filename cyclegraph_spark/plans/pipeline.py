@@ -13,18 +13,19 @@ pages(url, warc_ts, html, [text], lang)
 Per-stage lineage rows mirror the reference's per-step duration logging
 (/root/reference/cli/session.py:338-352 ``_timed``).
 
-The pipeline is lazy end-to-end until materialize; stage row counts are
-collected from the materialized outputs (one extra partition-pruned
-scan), not from mid-plan ``.count()`` actions that would re-execute the
-expensive prefix.
+The pipeline is lazy end-to-end until materialize; stage row counts come
+from an ``Observation`` on each write (the count rides on the write job),
+not from mid-plan ``.count()`` actions that would re-execute the
+expensive prefix or from re-reading what was just written.
 """
 
 from __future__ import annotations
 
 import os
 import time
+from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from cyclegraph_spark.extract.text import extract_text_udf
@@ -33,6 +34,7 @@ from cyclegraph_spark.operators.linking import link_mentions
 from cyclegraph_spark.operators.shacl import NodeShape, validate
 from cyclegraph_spark.operators.triples import OWL_SAMEAS, lift_html_pages
 from cyclegraph_spark.plans.materialize import (
+    LABELS,
     CheckpointManifest,
     append_lineage,
     materialize_triples,
@@ -40,6 +42,18 @@ from cyclegraph_spark.plans.materialize import (
     recanonicalize_store,
     write_labels,
 )
+
+
+def _write_counted(df: DataFrame, write: Callable[[DataFrame], None]) -> int:
+    """Run ``write`` on ``df`` and return the number of rows it wrote,
+    counted by an Observation on the write job itself.
+
+    ``df`` must already carry any rebalance hint: the Observation has to
+    sit above the exchange, because AQE replaces an empty exchange's
+    whole stage, CollectMetrics included, and the count would be lost."""
+    obs = Observation()
+    write(df.observe(obs, F.count(F.lit(1)).alias("rows")))
+    return obs.get["rows"]
 
 
 def run_pipeline(
@@ -128,6 +142,13 @@ def run_pipeline(
     # rewrite replays as a no-op; persisting first would hide the merge
     # (prior == new ⇒ empty remap) and leave stale rows forever.
     write_labels(labels, out_dir)
+    written_labels = read_labels(spark, out_dir)
+    if written_labels is None:
+        raise RuntimeError(
+            f"labels written to {os.path.join(out_dir, LABELS)} have no _SUCCESS "
+            "marker, so they cannot be read back; enable "
+            "mapreduce.fileoutputcommitter.marksuccessfuljobs"
+        )
     # canonicalize against the labels JUST WRITTEN, read back from
     # parquet, not the in-memory CC plan: the file-backed side (a) stops
     # the materialize action from re-executing the whole CC tail (verts
@@ -136,9 +157,7 @@ def run_pipeline(
     # file-based size stats, so the planner's broadcast-vs-shuffle choice
     # for the labels join stays correct at any scale (guide §3.1: size
     # estimates through joins/aggs are unreliable; file stats are not).
-    canon = canonicalize_triples(
-        triples, read_labels(spark, out_dir), keep_cols=("src", "part_id")
-    )
+    canon = canonicalize_triples(triples, written_labels, keep_cols=("src", "part_id"))
     metrics["cc"] = {
         "sec": round(time.time() - t0, 3),
         "rounds": cc_stats.get("rounds"),
@@ -156,17 +175,16 @@ def run_pipeline(
         links = link_mentions(
             pages.select("url", "text", "part_id"), aliases, key_cols=("url", "part_id")
         ).select("url", "pos", "alias", "entity_id", "score", "part_id")
-        (
+        n = _write_counted(
             # rebalance-by-bucket before the write: one file per bucket
             # instead of (write tasks × buckets) splinters (guide §6)
-            links.hint("rebalance", "part_id")
-            .write.partitionBy("part_id")
+            links.hint("rebalance", "part_id"),
+            lambda d: d.write.partitionBy("part_id")
             .option("partitionOverwriteMode", "dynamic")
             .mode("overwrite")
-            .parquet(os.path.join(out_dir, "links"))
+            .parquet(os.path.join(out_dir, "links")),
         )
         spark.catalog.refreshByPath(os.path.join(out_dir, "links"))
-        n = spark.read.parquet(os.path.join(out_dir, "links")).count()
         metrics["link"] = {"rows": n, "sec": round(time.time() - t0, 3)}
 
     # --- materialize canonical triples (manifest + lineage; bucket =
@@ -190,8 +208,10 @@ def run_pipeline(
         t0 = time.time()
         store = spark.read.parquet(os.path.join(out_dir, "data"))
         report = validate(store, shapes)
-        report.write.mode("overwrite").parquet(os.path.join(out_dir, "violations"))
-        n = spark.read.parquet(os.path.join(out_dir, "violations")).count()
+        n = _write_counted(
+            report,
+            lambda d: d.write.mode("overwrite").parquet(os.path.join(out_dir, "violations")),
+        )
         metrics["validate"] = {"rows": n, "sec": round(time.time() - t0, 3)}
 
     # --- node table (north-rule companion artifact): derived wholly
@@ -204,17 +224,16 @@ def run_pipeline(
     nodes = node_table(store).withColumn(
         "bucket", F.pmod(F.xxhash64("id"), F.lit(n_buckets)).cast("int")
     )
-    (
+    n = _write_counted(
         # rebalance (AQE-splittable) rather than a hard repartition: same
         # one-file-per-bucket layout locally, but a hot bucket can still
         # fan out over several write tasks at scale
-        nodes.hint("rebalance", "bucket")
-        .write.partitionBy("bucket")
+        nodes.hint("rebalance", "bucket"),
+        lambda d: d.write.partitionBy("bucket")
         .mode("overwrite")
-        .parquet(os.path.join(out_dir, "nodes"))
+        .parquet(os.path.join(out_dir, "nodes")),
     )
     spark.catalog.refreshByPath(os.path.join(out_dir, "nodes"))
-    n = spark.read.parquet(os.path.join(out_dir, "nodes")).count()
     metrics["nodes"] = {"rows": n, "sec": round(time.time() - t0, 3)}
 
     append_lineage(

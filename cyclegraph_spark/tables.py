@@ -30,12 +30,6 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-def register_all(spark: SparkSession, sf_dir: str) -> None:
-    """Register every testdata table as a temp view (for spark.sql paths)."""
-    for name in TESTDATA_TABLES:
-        load(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
 def ensure_min_partitions(df: DataFrame, min_parts: int | None = None) -> DataFrame:
     """Widen a too-narrow input before per-row-heavy work (explode, UDF).
 

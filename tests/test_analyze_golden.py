@@ -4,15 +4,13 @@ indoor (power only), hr-only (LIMITED mode) — required report fields
 (docs/schema.md:10-11), status/reason enums, and series invariants."""
 
 import json
-from pathlib import Path
 
 import pytest
+from conftest import reference_path
 from pyspark.sql import functions as F
 
 from cyclegraph_spark.analyze import analyze_sessions, per_sample_series
 from cyclegraph_spark.sources.csv_sessions import read_session_csv
-
-DATA = Path("/root/reference/tests/data")
 
 REQUIRED = [
     "session_id", "duration_s", "samples", "avg_power", "np", "if_", "vi",
@@ -22,7 +20,7 @@ REQUIRED = [
 
 
 def _weather():
-    doc = json.loads((DATA / "golden_weather.json").read_text())
+    doc = json.loads(reference_path("tests/data/golden_weather.json").read_text())
     s0 = doc["samples"][0]
     return {
         "wind_ms": s0["wind_ms"],
@@ -36,7 +34,7 @@ def _weather():
 def golden_samples(spark):
     parts = []
     for name in ("golden_outdoor", "golden_indoor", "golden_hr_only"):
-        df = read_session_csv(spark, str(DATA / f"{name}.csv")).withColumn(
+        df = read_session_csv(spark, str(reference_path(f"tests/data/{name}.csv"))).withColumn(
             "activity_id", F.lit(name)
         )
         parts.append(df)

@@ -2,7 +2,7 @@
 decimal commas, km/h inference — against generated fixture files and the
 reference's own golden CSVs."""
 
-from pathlib import Path
+from conftest import reference_path
 
 from cyclegraph_spark.operators.metrics import session_metrics
 from cyclegraph_spark.sources.csv_sessions import (
@@ -11,11 +11,13 @@ from cyclegraph_spark.sources.csv_sessions import (
     sniff_format,
 )
 
+SESS01 = "core/tests/golden/data/sess01_streams.csv"
+
 
 def test_reference_golden_outdoor_csv(spark):
     """tests/data/golden_outdoor.csv: time_s,latitude,longitude,v_ms,hr,watts
     — 'time_s' isn't an alias; falls back to row index; other cols map."""
-    df = read_session_csv(spark, "/root/reference/tests/data/golden_outdoor.csv")
+    df = read_session_csv(spark, str(reference_path("tests/data/golden_outdoor.csv")))
     rows = df.collect()
     assert len(rows) > 0
     assert all(r.watts is not None and r.hr is not None for r in rows)
@@ -23,7 +25,7 @@ def test_reference_golden_outdoor_csv(spark):
 
 
 def test_reference_rust_golden_csv(spark):
-    df = read_session_csv(spark, "/root/reference/core/tests/golden/data/sess01_streams.csv")
+    df = read_session_csv(spark, str(reference_path(SESS01)))
     rows = df.collect()
     assert len(rows) == 30
     assert rows[0].t is not None
@@ -58,7 +60,7 @@ def test_latin1_fallback_and_filter(spark, tmp_path):
 
 def test_end_to_end_csv_to_metrics(spark):
     """S1 → metrics: the reference CLI's main analysis path, distributed."""
-    df = read_session_csv(spark, "/root/reference/core/tests/golden/data/sess01_streams.csv")
+    df = read_session_csv(spark, str(reference_path(SESS01)))
     df = df.withColumn("activity_id", df.t * 0 + 1)  # single session
     out = session_metrics(df, ftp=250.0).collect()[0]
     assert abs(out.np - 195.0) <= 0.5

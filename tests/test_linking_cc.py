@@ -8,11 +8,7 @@ from cyclegraph_spark.operators.cc import (
     connected_components,
     reference_components,
 )
-from cyclegraph_spark.operators.linking import (
-    link_mentions,
-    link_mentions_window,
-    reference_link,
-)
+from cyclegraph_spark.operators.linking import link_mentions, reference_link
 from cyclegraph_spark.sources.pages import alias_df, build_alias_rows, pages_with_text
 
 EDGE_SCHEMA = T.StructType(
@@ -37,12 +33,6 @@ def test_link_parity_with_oracle(spark):
     assert got == exp, (
         f"missing={sorted(exp - got)[:3]} extra={sorted(got - exp)[:3]}"
     )
-    # window variant computes the same relation
-    got_w = {
-        (r.url, r.pos, r.alias, r.entity_id, r.score)
-        for r in link_mentions_window(pages, aliases).collect()
-    }
-    assert got_w == got
 
 
 def test_link_context_feature_flips_ambiguous_alias(spark):
@@ -138,8 +128,7 @@ def test_cc_long_chain_converges_logarithmically(spark):
 def test_cc_10k_chain_multi_hub_topology(spark):
     """Nasty topology: a 10k-link path (worst case for plain min-label
     propagation — O(n) rounds without shortcutting) fused with four
-    1.5k-leaf hubs (degree > hot_degree → exercises the salted path),
-    plus a disjoint pair to catch cross-component label leaks.
+    1.5k-leaf hubs, plus a disjoint pair to catch cross-component label leaks.
 
     Asserts union-find parity AND that star contraction converges in
     O(log n) rounds (log2(10001) ≈ 13.3; bound 18 leaves slack for the
@@ -156,85 +145,13 @@ def test_cc_10k_chain_multi_hub_topology(spark):
 
     df = spark.createDataFrame(edges, EDGE_SCHEMA).repartition(32)
     stats: dict = {}
-    # skew_factor=0: pure absolute threshold so the 1.5k-degree hubs
-    # trip the split (the relative default would put the bar at
-    # ~8*4n/32 ≈ 16k here and leave the armed path unexercised)
-    labels = connected_components(
-        df, max_iter=20, hot_degree=1000, skew_factor=0, stats=stats
-    )
+    labels = connected_components(df, max_iter=20, stats=stats)
     got = {(r.id, r.component) for r in labels.collect()}
     exp = set(reference_components(edges).items())
     assert got == exp
     assert stats["rounds"] <= 18, stats
     # the contracted edge set must reach a fixpoint, not plateau mid-merge
     assert stats["edge_counts"][-1] == stats["edge_counts"][-2]
-
-
-def test_cc_relative_hot_threshold_telemetry(spark):
-    """The effective hot threshold is max(floor, skew_factor*4n//P),
-    re-derived per round, and the pigeonhole gate skips probes (None in
-    stats) exactly when 2n ≤ threshold. Labels are identical across all
-    three policies (the levers only change the physical plan)."""
-    shuffle_p = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    edges = [("h", f"leaf{i:03d}") for i in range(200)]
-    df = spark.createDataFrame(edges, EDGE_SCHEMA)
-    exp = set(reference_components(edges).items())
-
-    # relative term dominates a tiny floor; probes armed (2n > thr)
-    stats: dict = {}
-    got = {
-        (r.id, r.component)
-        for r in connected_components(
-            df, hot_degree=50, skew_factor=8, stats=stats
-        ).collect()
-    }
-    assert got == exp
-    thr0 = max(50, 8 * 4 * 200 // shuffle_p)
-    assert stats["hot_thresholds"][0] == thr0
-    assert 2 * 200 > thr0  # the telemetry proves the probes ran
-
-    # default floor ≫ 2n: every round pigeonhole-skips its probes
-    stats2: dict = {}
-    got2 = {
-        (r.id, r.component)
-        for r in connected_components(df, stats=stats2).collect()
-    }
-    assert got2 == exp
-    assert stats2["hot_thresholds"] == [None] * stats2["rounds"]
-
-    # skew_factor=0 → pure absolute threshold (the forced-split tests'
-    # escape hatch)
-    stats3: dict = {}
-    got3 = {
-        (r.id, r.component)
-        for r in connected_components(
-            df, hot_degree=50, skew_factor=0, stats=stats3
-        ).collect()
-    }
-    assert got3 == exp
-    assert stats3["hot_thresholds"][0] == 50
-
-
-def test_cc_salted_path_equals_unsalted(spark):
-    """Targeted salting (hot_degree low enough to trip on the corpus's
-    hot entity) must produce the identical labeling as the plain path."""
-    from cyclegraph_spark.operators.triples import OWL_SAMEAS, lift_html_pages
-    from cyclegraph_spark.sources.pages import pages_df
-
-    triples = lift_html_pages(pages_df(spark, 300, partitions=8))
-    edges = triples.filter(F.col("pred") == OWL_SAMEAS).select(
-        F.col("subj").alias("src"), F.col("dst_") if False else F.col("obj").alias("dst")
-    )
-    plain = {(r.id, r.component) for r in connected_components(edges, salt=0).collect()}
-    salted = {
-        (r.id, r.component)
-        for r in connected_components(
-            edges, salt=8, hot_degree=10, skew_factor=0
-        ).collect()
-    }
-    assert plain == salted
-    exp = reference_components([(r.src, r.dst) for r in edges.collect()])
-    assert salted == set(exp.items())
 
 
 def test_cc_hot_entity_skew_from_corpus(spark):

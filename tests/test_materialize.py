@@ -4,8 +4,11 @@ import json
 import os
 
 import pytest
+from conftest import reference_path
 from pyspark.sql import functions as F
 
+from cyclegraph_spark.operators.shacl import NodeShape, PropertyShape
+from cyclegraph_spark.operators.triples import SCHEMA, XSD_INT
 from cyclegraph_spark.plans.materialize import (
     CheckpointManifest,
     compact_store,
@@ -95,12 +98,10 @@ def test_fingerprint_parallelism_invariant(spark, tmp_path):
 
 
 def test_full_pipeline_and_compaction(spark, tmp_path):
-    from pathlib import Path
-
     from cyclegraph_spark.operators.shacl import parse_shapes_ttl
 
     out = str(tmp_path / "kg")
-    shapes = parse_shapes_ttl(Path("/root/reference/shapes/session_shape.ttl").read_text())
+    shapes = parse_shapes_ttl(reference_path("shapes/session_shape.ttl").read_text())
     aliases = alias_df(spark, n_entities=100)
     pages = pages_df(spark, 120, n_entities=100, partitions=4)
 
@@ -151,6 +152,69 @@ def test_full_pipeline_and_compaction(spark, tmp_path):
     store2 = spark.read.parquet(out + "/data")
     n = compact_store(spark, out, str(tmp_path / "compact"), n_buckets=8)
     assert 0 < n <= store2.select("subj", "pred", "obj", "obj_dtype").distinct().count()
+
+
+def test_pipeline_stage_counts_match_written_outputs(spark, tmp_path):
+    """Hermetic run (shapes built in code): the row counts a run reports
+    equal the rows that landed, and lineage.jsonl holds one row per
+    stage. A resume's link.rows counts only the buckets it processed; a
+    rerun with every bucket done writes, and reports, no links."""
+    out = str(tmp_path / "kg")
+    buckets = 8
+    shapes = [
+        NodeShape(
+            "ExerciseActionShape",
+            SCHEMA + "ExerciseAction",
+            [PropertyShape(SCHEMA + p, XSD_INT, 1, 1) for p in ("power", "heartRate")],
+        )
+    ]
+    aliases = alias_df(spark, 100)
+    pages = pages_df(spark, 120, n_entities=100, partitions=4)
+    part = F.pmod(F.xxhash64(F.col("url")), F.lit(buckets))
+
+    def run(run_id, pg):
+        return run_pipeline(
+            spark, pg, out, run_id, shapes=shapes, aliases=aliases, n_buckets=buckets
+        )
+
+    m1 = run("r1", pages.filter(part < 4))
+    assert m1["link"]["rows"] == spark.read.parquet(out + "/links").count() > 0
+    assert m1["validate"]["rows"] == spark.read.parquet(out + "/violations").count() > 0
+    assert m1["nodes"]["rows"] == spark.read.parquet(out + "/nodes").count() > 0
+    with open(out + "/lineage.jsonl", encoding="utf-8") as f:
+        stage_rows = [r for r in map(json.loads, f) if "partition" not in r]
+    assert [r["stage"] for r in stage_rows] == list(m1)
+    assert all(r["run_id"] == "r1" for r in stage_rows)
+
+    done = sorted(CheckpointManifest(out).completed())
+    m2 = run("r2", pages)
+    links = spark.read.parquet(out + "/links")
+    resumed = links.filter(~F.col("part_id").isin(*done)).count()
+    assert m2["link"]["rows"] == resumed < links.count()
+    assert m2["nodes"]["rows"] == spark.read.parquet(out + "/nodes").count()
+
+    m3 = run("r3", pages)
+    assert m3["link"]["rows"] == 0
+    assert m3["materialize"]["rows"] == 0
+
+
+def test_pipeline_fails_loudly_without_success_marker(spark, tmp_path):
+    """A committer that writes no _SUCCESS marker leaves the labels just
+    written unreadable; the run must say so instead of crashing later."""
+    key = "mapreduce.fileoutputcommitter.marksuccessfuljobs"
+    out = str(tmp_path / "kg")
+    before = spark.conf.get(key, None)
+    spark.conf.set(key, "false")
+    try:
+        with pytest.raises(RuntimeError) as err:
+            run_pipeline(spark, pages_df(spark, 30, partitions=2), out, "r1", n_buckets=4)
+    finally:
+        if before is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, before)
+    assert os.path.join(out, "labels") in str(err.value)
+    assert key in str(err.value)
 
 
 def test_partial_resume_through_cc_matches_fresh_run(spark, tmp_path):

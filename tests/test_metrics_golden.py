@@ -13,9 +13,9 @@ round-2 contract.
 
 import csv
 import json
-from pathlib import Path
 
 import pytest
+from conftest import REFERENCE_DIR, reference_path
 from pyspark.sql import types as T
 
 from cyclegraph_spark.operators.metrics import (
@@ -25,7 +25,7 @@ from cyclegraph_spark.operators.metrics import (
     session_metrics,
 )
 
-GOLDEN = Path("/root/reference/core/tests/golden")
+GOLDEN = REFERENCE_DIR / "core/tests/golden"
 
 SCHEMA = T.StructType(
     [
@@ -61,7 +61,9 @@ def metrics_rows(spark):
 
 def test_sess01_matches_reference_golden(metrics_rows):
     out, _ = metrics_rows
-    exp = json.loads((GOLDEN / "expected/sess01_expected.json").read_text())
+    exp = json.loads(
+        reference_path("core/tests/golden/expected/sess01_expected.json").read_text()
+    )
     got = out["sess01"]
     assert abs(got.np - exp["np"]["value"]) <= exp["np"]["tol"]
     assert abs(got["if_"] - exp["if"]["value"]) <= exp["if"]["tol"]

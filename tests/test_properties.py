@@ -636,13 +636,8 @@ def test_linking_twin_matches_spark(spark, case):
     """reference_link GENERATES the kg_entity_links VALUES oracle, so it
     must equal link_mentions — positions, longest-alias/score/entity
     tie-break, ln-support context scores, and the rounded score's exact
-    lexical value — on arbitrary docs, not just the seeded corpus. The
-    row_number variant must compute the identical relation."""
-    from cyclegraph_spark.operators.linking import (
-        link_mentions,
-        link_mentions_window,
-        reference_link,
-    )
+    lexical value — on arbitrary docs, not just the seeded corpus."""
+    from cyclegraph_spark.operators.linking import link_mentions, reference_link
 
     docs, alias_rows = case
     pages = spark.createDataFrame(
@@ -664,12 +659,6 @@ def test_linking_twin_matches_spark(spark, case):
     assert got == exp, (
         f"missing={sorted(exp - got)[:3]} extra={sorted(got - exp)[:3]}"
     )
-
-    got_w = {
-        (r.url, r.pos, r.alias, r.entity_id, r.score)
-        for r in link_mentions_window(pages, aliases).collect()
-    }
-    assert got_w == got
 
 
 _lift_values = st.sampled_from(
@@ -720,9 +709,9 @@ def _lift_pages(draw):
                     f'<section typeof="{draw(_lift_types)}" '
                     f'about="{iid}">{props}</section>'
                 )
-            elif "ld+json" not in "".join(parts):  # JVM path reads 1st only
-                # empty @id must yield NO triples on every path (the
-                # Python walker skips falsy @id, not just null)
+            elif "ld+json" not in "".join(parts):  # one script per page
+                # empty @id must yield NO triples (the Python walker
+                # skips falsy @id, not just null)
                 doc = {"@id": draw(st.sampled_from([iid, iid, iid, ""]))}
                 if draw(st.booleans()):
                     doc["@type"] = draw(_lift_types)
@@ -749,9 +738,8 @@ def _lift_pages(draw):
 def test_html_lift_twin_and_jvm_match_udf(spark, pages):
     """The HTML-lift twin (_lift_page_rows, which GENERATES the
     kg_html_lift VALUES oracle) must equal lift_html_pages as a MULTISET
-    on arbitrary islands, and the zero-Python lift_html_pages_jvm must
-    equal the pandas-UDF path row for row — including bare/CURIE
-    itemtypes, which only the corpus's absolute URIs left untested."""
+    on arbitrary islands — including bare/CURIE itemtypes, which only
+    the corpus's absolute URIs left untested."""
     from collections import Counter
 
     import importlib.util
@@ -767,10 +755,7 @@ def test_html_lift_twin_and_jvm_match_udf(spark, pages):
         sys.modules["gen_value_oracles"] = mod
         spec.loader.exec_module(mod)
     twin = sys.modules["gen_value_oracles"]
-    from cyclegraph_spark.operators.triples import (
-        lift_html_pages,
-        lift_html_pages_jvm,
-    )
+    from cyclegraph_spark.operators.triples import lift_html_pages
 
     df = spark.createDataFrame(pages, "url string, html binary")
     got = Counter(
@@ -785,15 +770,6 @@ def test_html_lift_twin_and_jvm_match_udf(spark, pages):
     assert got == exp, (
         f"missing={sorted((exp - got).keys())[:3]} "
         f"extra={sorted((got - exp).keys())[:3]}"
-    )
-
-    got_jvm = Counter(
-        (r.src, r.subj, r.pred, r.obj, r.obj_dtype)
-        for r in lift_html_pages_jvm(df).collect()
-    )
-    assert got_jvm == got, (
-        f"missing={sorted((got - got_jvm).keys())[:3]} "
-        f"extra={sorted((got_jvm - got).keys())[:3]}"
     )
 
 

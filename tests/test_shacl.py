@@ -6,9 +6,8 @@ conforming graph yields zero violations; mutated graphs yield exactly
 the pyshacl-style violation rows (minCount / maxCount / datatype).
 """
 
-from pathlib import Path
-
 import pytest
+from conftest import reference_path
 from pyspark.sql import types as T
 
 from cyclegraph_spark.operators.shacl import (
@@ -19,7 +18,6 @@ from cyclegraph_spark.operators.shacl import (
     validate,
 )
 
-SHAPES_TTL = Path("/root/reference/shapes/session_shape.ttl")
 EX = "http://example.org/cyclegraph/"
 SCHEMA = "http://schema.org/"
 XSD = "http://www.w3.org/2001/XMLSchema#"
@@ -44,7 +42,7 @@ def _sample_graph() -> set[tuple[str, str, str, str]]:
 
 @pytest.fixture(scope="module")
 def shapes():
-    return parse_shapes_ttl(SHAPES_TTL.read_text())
+    return parse_shapes_ttl(reference_path("shapes/session_shape.ttl").read_text())
 
 
 def _df(spark, graph):

@@ -97,17 +97,6 @@ def test_html_lift_pr_gate(spark):
     assert got == expected
 
 
-def test_jvm_lift_parity_with_udf_lift(spark):
-    """lift_html_pages_jvm (zero-Python plan) must produce the identical
-    triple set as the pandas-UDF path on the synthetic corpus."""
-    from cyclegraph_spark.operators.triples import lift_html_pages_jvm
-
-    pg = pages_df(spark, 250, partitions=4)
-    a = {(r.src, r.subj, r.pred, r.obj, r.obj_dtype) for r in lift_html_pages(pg).collect()}
-    b = {(r.src, r.subj, r.pred, r.obj, r.obj_dtype) for r in lift_html_pages_jvm(pg).collect()}
-    assert a == b, f"missing={list(a - b)[:3]} extra={list(b - a)[:3]}"
-
-
 def test_out_of_dictionary_itemprop_parity(spark):
     """Unknown raw predicates (not in PROPERTY_RULES) must take the string
     rule — trim + empty-skip — exactly like reference_lift_page. Includes

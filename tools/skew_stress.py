@@ -12,25 +12,15 @@ recorded run plants REAL skew at bench scale and times the claims:
   shuffle on the dictionary side) and the support window partitions by
   (url, entity), so the hot ENTITY never concentrates in one task.
 - cc: a 100k-degree hub + 25k 8-node chains (300k edges total) through
-  ``connected_components`` twice — hot-split machinery armed (salt=8,
-  the default) vs disarmed (salt=1) on the SAME checkpointed input;
-  chains force multiple star rounds so the comparison is not a 1-round
-  fluke. With the r5 defaults the two should be within host noise: this
-  graph sits below the pigeonhole bound (2n ≤ hot_degree), so the armed
-  path provably skips its per-round hot probes — the A/B is the
-  regression guard for that. (The original run at hot_degree=1000
-  measured the premium being eliminated: 36.8 s armed vs 25.7 s
-  disarmed, identical labels.)
+  one ``connected_components`` run; the chains force several star
+  rounds, and the hub's skewed star join is left to AQE's skew-join.
+  (Recorded r5: an explicit broadcast split of hot minima ran 36.8 s vs
+  25.7 s without it on this graph, and 40-45 s vs 27-29 s with a 2M-degree
+  hub, identical labels — see BENCH/BASELINE.md.)
 
 Runs pinned to $SPARK_GRAFT_SCALE_4N cores (default 16 = the bench's 4N
-level) in a subprocess. Prints ONE JSON line; paste the numbers into
-BENCH/BASELINE.md.
-
-For the ABOVE-floor A/B (hub degree over the 10^6 absolute floor, so
-the armed path's probes/split actually engage — recorded r5 at 2M
-degree: armed 40-45 s vs disarmed 27-29 s, identical labels; see
-BENCH/BASELINE.md "Above-the-floor A/B"), set
-SPARK_GRAFT_SKEW_HUB=2000000.
+level) in a subprocess; set SPARK_GRAFT_SKEW_HUB to change the hub
+degree. Prints ONE JSON line; paste the numbers into BENCH/BASELINE.md.
 """
 
 from __future__ import annotations
@@ -95,23 +85,17 @@ chain = (
 )
 edges = hub.unionByName(chain).repartition({cores} * 4).localCheckpoint(eager=True)
 
-for label, salt in (("split_on", 8), ("split_off", 1)):
-    stats = {{}}
-    t0 = time.time()
-    labels = connected_components(edges, salt=salt, stats=stats)
-    n_labeled = labels.count()
-    n_comp = labels.select("component").distinct().count()
-    out[f"cc_{{label}}"] = {{
-        "sec": round(time.time() - t0, 2),
-        "salt": salt,
-        "rounds": stats.get("rounds"),
-        "vertices": n_labeled,
-        "components": n_comp,
-    }}
-
-# identical results either way is part of the claim
-assert out["cc_split_on"]["components"] == out["cc_split_off"]["components"]
-assert out["cc_split_on"]["vertices"] == out["cc_split_off"]["vertices"]
+stats = {{}}
+t0 = time.time()
+labels = connected_components(edges, stats=stats)
+n_labeled = labels.count()
+n_comp = labels.select("component").distinct().count()
+out["cc"] = {{
+    "sec": round(time.time() - t0, 2),
+    "rounds": stats.get("rounds"),
+    "vertices": n_labeled,
+    "components": n_comp,
+}}
 print(json.dumps(out))
 """
 
