@@ -266,6 +266,7 @@ def kg_resume_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
+    from cyclegraph_spark.plans.materialize import bucket
     from cyclegraph_spark.plans.pipeline import run_pipeline
     from cyclegraph_spark.sources.pages import pages_df, resume_chain_records
 
@@ -281,12 +282,7 @@ def kg_resume_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
             "url string, warc_ts long, html binary, lang string",
         ).withColumn("warc_ts", F.timestamp_seconds("warc_ts"))
         pages = pages_df(spark, n_pages, partitions=8).unionByName(crafted)
-        part = F.pmod(F.xxhash64(F.col("url")), F.lit(buckets)).cast("int")
-        subset = (
-            pages.withColumn("_p", part)
-            .filter(F.col("_p") < buckets // 2)
-            .drop("_p")
-        )
+        subset = pages.filter(bucket("url", buckets) < buckets // 2)
         run_pipeline(spark, subset, out, run_id="phase1", n_buckets=buckets)
         run_pipeline(spark, pages, out, run_id="phase2", n_buckets=buckets)
         store = (

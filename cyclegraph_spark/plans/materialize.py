@@ -17,14 +17,16 @@ Reference semantics transplanted:
 
 Layout (Iceberg-style: data files + manifest metadata):
     out_dir/data/part_id=<k>/*.parquet
-    out_dir/manifest.json        {run_id, partitions: {k: {rows, xhash}}}
+    out_dir/manifest.json        {run_id, partitions: {k: {rows, xhash}}, sha256}
     out_dir/lineage.jsonl        one row per (run, stage, partition)
 
-Partitioning: part_id = pmod(xxhash64(subj), n_buckets) — subject-hash
-bucketing co-locates all triples of an entity (the access pattern of
-SHACL validation and star queries) and spreads hot predicates evenly.
-n_buckets is explicit (north rule: explicit partition counts); at 100 TB
-you'd raise it to O(10⁴-10⁵) so each bucket stays ≲ 1 GB.
+Partitioning: part_id = bucket(src, n_buckets) = pmod(xxhash64(src), n) —
+provenance bucketing: a page's url and every triple lifted from it land
+in the same bucket, so a resumed run prunes completed buckets before
+extraction. Only the compacted, query-optimized copy (compact_store) is
+bucketed by subject, co-locating all triples of an entity. n_buckets is
+explicit (north rule: explicit partition counts); at 100 TB you'd raise
+it to O(10⁴-10⁵) so each bucket stays ≲ 1 GB.
 """
 
 from __future__ import annotations
@@ -32,9 +34,8 @@ from __future__ import annotations
 import hashlib
 import json
 import os
-import time
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 MANIFEST = "manifest.json"
@@ -57,7 +58,10 @@ class CheckpointManifest:
         self.state["partitions"][str(part_id)] = {"rows": rows, "xhash": xhash}
 
     def save(self, run_id: str) -> None:
+        """Write the manifest atomically. ``sha256`` digests the saved
+        state without itself, so it verifies after any re-save too."""
         self.state["run_id"] = run_id
+        self.state.pop("sha256", None)
         body = json.dumps(self.state, sort_keys=True, indent=1)
         self.state["sha256"] = hashlib.sha256(body.encode()).hexdigest()
         tmp = self.path + ".tmp"
@@ -73,71 +77,64 @@ def append_lineage(out_dir: str, rows: list[dict]) -> None:
             f.write(json.dumps(r, sort_keys=True) + "\n")
 
 
-def with_bucket(triples: DataFrame, n_buckets: int, on: str = "subj") -> DataFrame:
-    """Attach the bucket id. ``on="subj"`` gives the entity-co-located
-    store layout; ``on="src"`` (source url) buckets by provenance so a
-    resumed run can prune completed buckets BEFORE extraction."""
-    return triples.withColumn(
-        "part_id", F.pmod(F.xxhash64(F.col(on)), F.lit(n_buckets)).cast("int")
-    )
+def bucket(col: str | Column, n: int) -> Column:
+    """The store's one bucket rule, ``pmod(xxhash64(col), n)`` as int.
+    Pages are bucketed on ``url`` and their triples on ``src`` (the same
+    value), so a resumed run's source prune and the manifest's bucket
+    ids agree."""
+    return F.pmod(F.xxhash64(col), F.lit(n)).cast("int")
 
 
-def materialize_triples(
-    triples: DataFrame,
-    out_dir: str,
-    run_id: str,
-    n_buckets: int = 32,
-    stage: str = "materialize",
-    bucket_on: str = "subj",
-) -> dict:
-    """Write triples bucketed by hash; skip buckets already in the
-    checkpoint manifest; record lineage + fingerprints.
+def write_parquet(
+    df: DataFrame, path: str, by: str | None = None, dynamic: bool = False
+) -> int:
+    """Overwrite ``path`` with ``df`` as parquet, partitioned by column
+    ``by`` if given, and return the number of rows written.
 
-    Returns {written: [part_ids], skipped: [part_ids], rows: n}.
+    The count comes from an Observation on the write job itself. It sits
+    ABOVE the rebalance hint: below it, AQE would replace an empty
+    exchange's whole stage, CollectMetrics included, and lose the count.
+
+    With ``by``, rows are rebalanced by that column before the write, so
+    each bucket lands in one file instead of (write tasks × buckets)
+    splinters (measured 589 files / 1.84 s for a 25 MB store vs 32 files
+    / 0.60 s). The hint (vs a plain repartition) lets AQE split an
+    oversized bucket over several write tasks at scale (guide §6).
+
+    ``dynamic`` overwrites only the partitions ``df`` holds: a bucket
+    being (re)processed replaces its directory on job commit, so a
+    replayed crashed run cannot double-append rows, and every other
+    bucket is left untouched.
     """
-    os.makedirs(out_dir, exist_ok=True)
-    manifest = CheckpointManifest(out_dir)
-    done = manifest.completed()
-    data_dir = os.path.join(out_dir, "data")
+    if by is not None:
+        df = df.hint("rebalance", by)
+    obs = Observation()
+    df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
+    writer = df.write.mode("overwrite")
+    if by is not None:
+        writer = writer.partitionBy(by)
+    if dynamic:
+        writer = writer.option("partitionOverwriteMode", "dynamic")
+    writer.parquet(path)
+    # the overwrite replaced files under path — drop the session's cached
+    # file listing or later reads resolve to deleted parquet parts
+    df.sparkSession.catalog.refreshByPath(path)
+    return obs.get["rows"]
 
-    bt = triples if "part_id" in triples.columns else with_bucket(triples, n_buckets, bucket_on)
-    if done:
-        bt = bt.filter(~F.col("part_id").isin(*[int(d) for d in done]))
 
-    t0 = time.time()
-    # REBALANCE by bucket before the partitioned write (guide §6): with
-    # the source's own partitioning every task holding rows of bucket k
-    # opens a file under part_id=k — measured 589 files / 1.84 s for a
-    # 25 MB store vs 32 files / 0.60 s rebalanced. The hint (vs a plain
-    # repartition) lets AQE split oversized buckets into several write
-    # tasks at scale, so one hot bucket cannot serialize the write.
-    bt = bt.hint("rebalance", "part_id")
-    # DYNAMIC partition overwrite, not append: a bucket that is being
-    # (re)processed replaces its directory atomically on job commit, so
-    # replaying a crashed run (manifest never committed) cannot
-    # double-append rows; completed buckets are filtered out above and
-    # therefore never touched.
-    (
-        bt.write.partitionBy("part_id")
-        .option("partitionOverwriteMode", "dynamic")
-        .mode("overwrite")
-        .parquet(data_dir)
-    )
-    # the overwrite replaced files under data_dir — drop the session's
-    # cached file listing or later reads resolve to deleted parquet parts
-    bt.sparkSession.catalog.refreshByPath(data_dir)
+def _commit_buckets(spark, out_dir: str, run_id: str, stage: str, where: Column) -> list[int]:
+    """Fingerprint the store buckets selected by ``where`` from what
+    landed on disk, record them in the checkpoint manifest, save it, and
+    append one ``stage`` lineage row per bucket. Returns their ids.
 
-    # per-partition stats from what we just wrote (scan is partition-pruned
-    # to the new buckets); bit_xor of row hashes = order-independent
-    # content fingerprint, reproducible at any parallelism. Hash covers
-    # every data column (incl. provenance) so duplicate quads from two
-    # sources can't cancel out of the xor.
-    store = bt.sparkSession.read.parquet(data_dir)
+    bit_xor of row hashes is an order-independent content fingerprint,
+    reproducible at any parallelism. It covers every data column (incl.
+    provenance) so duplicate quads from two sources can't cancel out.
+    """
+    store = spark.read.parquet(os.path.join(out_dir, "data"))
     hash_cols = ", ".join(c for c in store.columns if c != "part_id")
-    written = (
-        store.filter(
-            ~F.col("part_id").isin(*[int(d) for d in done]) if done else F.lit(True)
-        )
+    stats = (
+        store.filter(where)
         .groupBy("part_id")
         .agg(
             F.count(F.lit(1)).alias("rows"),
@@ -145,9 +142,9 @@ def materialize_triples(
         )
         .collect()
     )
-    dur = time.time() - t0
+    manifest = CheckpointManifest(out_dir)
     lineage_rows = []
-    for r in written:
+    for r in stats:
         manifest.record(int(r.part_id), int(r.rows), int(r.xhash))
         lineage_rows.append(
             {
@@ -156,16 +153,32 @@ def materialize_triples(
                 "partition": int(r.part_id),
                 "output_rows": int(r.rows),
                 "xhash": int(r.xhash),
-                "duration_s": round(dur, 3),
             }
         )
     manifest.save(run_id)
     append_lineage(out_dir, lineage_rows)
-    return {
-        "written": sorted(int(r.part_id) for r in written),
-        "skipped": sorted(done),
-        "rows": sum(int(r.rows) for r in written),
-    }
+    return sorted(int(r.part_id) for r in stats)
+
+
+def materialize_triples(triples: DataFrame, out_dir: str, run_id: str) -> dict:
+    """Write triples into their ``part_id`` buckets (attach it with
+    ``bucket``); skip buckets already in the checkpoint manifest; record
+    lineage + fingerprints.
+
+    Returns {written: [part_ids], skipped: [part_ids], rows: n}.
+    """
+    if "part_id" not in triples.columns:
+        raise ValueError("materialize_triples needs a part_id column; attach it with bucket()")
+    os.makedirs(out_dir, exist_ok=True)
+    done = sorted(CheckpointManifest(out_dir).completed())
+    # completed buckets are filtered out here, so the dynamic overwrite
+    # never touches them
+    pending = ~F.col("part_id").isin(*done) if done else F.lit(True)
+    rows = write_parquet(
+        triples.filter(pending), os.path.join(out_dir, "data"), by="part_id", dynamic=True
+    )
+    written = _commit_buckets(triples.sparkSession, out_dir, run_id, "materialize", pending)
+    return {"written": written, "skipped": done, "rows": rows}
 
 
 LABELS = "labels"
@@ -254,50 +267,18 @@ def recanonicalize_store(
         .distinct()  # merged components can collapse previously-distinct rows
         .localCheckpoint(eager=True)  # materialize BEFORE overwriting the source
     )
-    (
-        rewritten.write.partitionBy("part_id")
-        .option("partitionOverwriteMode", "dynamic")
-        .mode("overwrite")
-        .parquet(data_dir)
-    )
-    spark.catalog.refreshByPath(data_dir)
-
-    manifest = CheckpointManifest(out_dir)
-    hash_cols = ", ".join(data_cols)
-    stats = (
-        spark.read.parquet(data_dir)
-        .filter(F.col("part_id").isin(parts))
-        .groupBy("part_id")
-        .agg(
-            F.count(F.lit(1)).alias("rows"),
-            F.expr(f"bit_xor(xxhash64({hash_cols}))").alias("xhash"),
-        )
-        .collect()
-    )
-    lineage_rows = []
-    for r in stats:
-        manifest.record(int(r.part_id), int(r.rows), int(r.xhash))
-        lineage_rows.append(
-            {
-                "run_id": run_id,
-                "stage": "recanonicalize",
-                "partition": int(r.part_id),
-                "output_rows": int(r.rows),
-                "xhash": int(r.xhash),
-            }
-        )
-    manifest.save(run_id)
-    append_lineage(out_dir, lineage_rows)
-    return {"rows": sum(int(r.rows) for r in stats), "partitions": parts}
+    rows = write_parquet(rewritten, data_dir, by="part_id", dynamic=True)
+    _commit_buckets(spark, out_dir, run_id, "recanonicalize", F.col("part_id").isin(parts))
+    return {"rows": rows, "partitions": parts}
 
 
 def compact_store(spark, out_dir: str, compact_dir: str, n_buckets: int = 32) -> int:
     """Compaction: provenance-partitioned append log → globally deduped,
     subject-bucketed layout (the query-optimized table; Iceberg rewrite
-    analog). One shuffle (distinct) + one repartition-by-bucket write.
+    analog). One shuffle (distinct) + one rebalanced-by-bucket write.
+    Returns the rows written.
     """
     store = spark.read.parquet(os.path.join(out_dir, "data"))
     quads = store.select("subj", "pred", "obj", "obj_dtype").distinct()
-    bq = with_bucket(quads, n_buckets, on="subj").repartition(n_buckets, "part_id")
-    bq.write.partitionBy("part_id").mode("overwrite").parquet(compact_dir)
-    return spark.read.parquet(compact_dir).count()
+    bq = quads.withColumn("part_id", bucket("subj", n_buckets))
+    return write_parquet(bq, compact_dir, by="part_id")

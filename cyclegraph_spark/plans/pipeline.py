@@ -23,9 +23,8 @@ from __future__ import annotations
 
 import os
 import time
-from collections.abc import Callable
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cyclegraph_spark.extract.text import extract_text_udf
@@ -37,23 +36,13 @@ from cyclegraph_spark.plans.materialize import (
     LABELS,
     CheckpointManifest,
     append_lineage,
+    bucket,
     materialize_triples,
     read_labels,
     recanonicalize_store,
     write_labels,
+    write_parquet,
 )
-
-
-def _write_counted(df: DataFrame, write: Callable[[DataFrame], None]) -> int:
-    """Run ``write`` on ``df`` and return the number of rows it wrote,
-    counted by an Observation on the write job itself.
-
-    ``df`` must already carry any rebalance hint: the Observation has to
-    sit above the exchange, because AQE replaces an empty exchange's
-    whole stage, CollectMetrics included, and the count would be lost."""
-    obs = Observation()
-    write(df.observe(obs, F.count(F.lit(1)).alias("rows")))
-    return obs.get["rows"]
 
 
 def run_pipeline(
@@ -71,9 +60,7 @@ def run_pipeline(
 
     # --- resume prune on source bucket (high-watermark analog)
     done = CheckpointManifest(out_dir).completed()
-    pages = pages.withColumn(
-        "part_id", F.pmod(F.xxhash64(F.col("url")), F.lit(n_buckets)).cast("int")
-    )
+    pages = pages.withColumn("part_id", bucket("url", n_buckets))
     if done:
         pages = pages.filter(~F.col("part_id").isin(*[int(d) for d in done]))
 
@@ -95,7 +82,7 @@ def run_pipeline(
     t0 = time.time()
     triples = (
         lift_html_pages(pages)
-        .withColumn("part_id", F.pmod(F.xxhash64(F.col("src")), F.lit(n_buckets)).cast("int"))
+        .withColumn("part_id", bucket("src", n_buckets))
         .localCheckpoint(eager=True)
     )
     metrics["lift"] = {"sec": round(time.time() - t0, 3)}
@@ -134,9 +121,10 @@ def run_pipeline(
             )
             .distinct()
         )
+        t_rc = time.time()
         rc = recanonicalize_store(spark, out_dir, remap, run_id)
         if rc["partitions"]:
-            metrics["recanonicalize"] = {"rows": rc["rows"], "sec": round(time.time() - t0, 3)}
+            metrics["recanonicalize"] = {"rows": rc["rows"], "sec": round(time.time() - t_rc, 3)}
     # persist AFTER the store rewrite: if we crash in between, the next
     # resume recomputes the same merge against the OLD labels and the
     # rewrite replays as a no-op; persisting first would hide the merge
@@ -175,25 +163,14 @@ def run_pipeline(
         links = link_mentions(
             pages.select("url", "text", "part_id"), aliases, key_cols=("url", "part_id")
         ).select("url", "pos", "alias", "entity_id", "score", "part_id")
-        n = _write_counted(
-            # rebalance-by-bucket before the write: one file per bucket
-            # instead of (write tasks × buckets) splinters (guide §6)
-            links.hint("rebalance", "part_id"),
-            lambda d: d.write.partitionBy("part_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .mode("overwrite")
-            .parquet(os.path.join(out_dir, "links")),
-        )
-        spark.catalog.refreshByPath(os.path.join(out_dir, "links"))
+        n = write_parquet(links, os.path.join(out_dir, "links"), by="part_id", dynamic=True)
         metrics["link"] = {"rows": n, "sec": round(time.time() - t0, 3)}
 
     # --- materialize canonical triples (manifest + lineage; bucket =
     # provenance/url bucket so resume-prune and manifest ids agree).
     # Commits the checkpoint manifest — completion marker for the run.
     t0 = time.time()
-    res = materialize_triples(
-        canon, out_dir, run_id, n_buckets=n_buckets, stage="materialize"
-    )
+    res = materialize_triples(canon, out_dir, run_id)
     metrics["materialize"] = {
         "rows": res["rows"],
         "sec": round(time.time() - t0, 3),
@@ -208,10 +185,7 @@ def run_pipeline(
         t0 = time.time()
         store = spark.read.parquet(os.path.join(out_dir, "data"))
         report = validate(store, shapes)
-        n = _write_counted(
-            report,
-            lambda d: d.write.mode("overwrite").parquet(os.path.join(out_dir, "violations")),
-        )
+        n = write_parquet(report, os.path.join(out_dir, "violations"))
         metrics["validate"] = {"rows": n, "sec": round(time.time() - t0, 3)}
 
     # --- node table (north-rule companion artifact): derived wholly
@@ -221,19 +195,8 @@ def run_pipeline(
     from cyclegraph_spark.operators.nodes import node_table
 
     store = spark.read.parquet(os.path.join(out_dir, "data"))
-    nodes = node_table(store).withColumn(
-        "bucket", F.pmod(F.xxhash64("id"), F.lit(n_buckets)).cast("int")
-    )
-    n = _write_counted(
-        # rebalance (AQE-splittable) rather than a hard repartition: same
-        # one-file-per-bucket layout locally, but a hot bucket can still
-        # fan out over several write tasks at scale
-        nodes.hint("rebalance", "bucket"),
-        lambda d: d.write.partitionBy("bucket")
-        .mode("overwrite")
-        .parquet(os.path.join(out_dir, "nodes")),
-    )
-    spark.catalog.refreshByPath(os.path.join(out_dir, "nodes"))
+    nodes = node_table(store).withColumn("bucket", bucket("id", n_buckets))
+    n = write_parquet(nodes, os.path.join(out_dir, "nodes"), by="bucket")
     metrics["nodes"] = {"rows": n, "sec": round(time.time() - t0, 3)}
 
     append_lineage(

@@ -20,6 +20,23 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
 
+def zip_package(zpath: str) -> str:
+    """Write every ``.py`` file of ``cyclegraph_spark`` into the zip at
+    ``zpath`` (paths relative to the package's parent, the layout
+    ``--py-files`` / ``addPyFile`` import from) and return ``zpath``."""
+    import cyclegraph_spark
+
+    pkg_dir = os.path.dirname(os.path.abspath(cyclegraph_spark.__file__))
+    root = os.path.dirname(pkg_dir)
+    with zipfile.ZipFile(zpath, "w") as z:
+        for dirpath, _dirs, files in os.walk(pkg_dir):
+            for f in sorted(files):
+                if f.endswith(".py"):
+                    full = os.path.join(dirpath, f)
+                    z.write(full, os.path.relpath(full, root))
+    return zpath
+
+
 def ship_package(spark: SparkSession) -> None:
     """Ship ``cyclegraph_spark`` to executors (the --py-files discipline).
 
@@ -33,18 +50,10 @@ def ship_package(spark: SparkSession) -> None:
         return
     import cyclegraph_spark
 
-    pkg_dir = os.path.dirname(os.path.abspath(cyclegraph_spark.__file__))
-    root = os.path.dirname(pkg_dir)
     zpath = os.path.join(
         tempfile.gettempdir(), f"cyclegraph_spark_{cyclegraph_spark.__version__}.zip"
     )
-    with zipfile.ZipFile(zpath, "w") as z:
-        for dirpath, _dirs, files in os.walk(pkg_dir):
-            for f in sorted(files):
-                if f.endswith(".py"):
-                    full = os.path.join(dirpath, f)
-                    z.write(full, os.path.relpath(full, root))
-    spark.sparkContext.addPyFile(zpath)
+    spark.sparkContext.addPyFile(zip_package(zpath))
     spark.conf.set("cyclegraph.shipped", "yes")
 
 

@@ -30,21 +30,10 @@ def _ensure_importable() -> None:
 
 def make_zip() -> str:
     _ensure_importable()
-    import cyclegraph_spark
-    from cyclegraph_spark.session import ship_package  # noqa: F401  (same zip logic)
-    import tempfile
-    import zipfile
+    from cyclegraph_spark.session import zip_package
 
-    pkg_dir = os.path.dirname(os.path.abspath(cyclegraph_spark.__file__))
-    root = os.path.dirname(pkg_dir)
-    zpath = os.path.join(root, "cyclegraph_spark.zip")
-    with zipfile.ZipFile(zpath, "w") as z:
-        for dirpath, _dirs, files in os.walk(pkg_dir):
-            for f in sorted(files):
-                if f.endswith(".py"):
-                    full = os.path.join(dirpath, f)
-                    z.write(full, os.path.relpath(full, root))
-    return zpath
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    return zip_package(os.path.join(root, "cyclegraph_spark.zip"))
 
 
 def main() -> None:

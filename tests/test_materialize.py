@@ -1,5 +1,6 @@
 """M6 — materialization, lineage, checkpoint manifest, idempotent resume."""
 
+import hashlib
 import json
 import os
 
@@ -11,6 +12,7 @@ from cyclegraph_spark.operators.shacl import NodeShape, PropertyShape
 from cyclegraph_spark.operators.triples import SCHEMA, XSD_INT
 from cyclegraph_spark.plans.materialize import (
     CheckpointManifest,
+    bucket,
     compact_store,
     materialize_triples,
 )
@@ -22,26 +24,58 @@ from cyclegraph_spark.sources.pages import alias_df, pages_df
 def triples(spark):
     from cyclegraph_spark.operators.triples import lift_html_pages
 
-    return lift_html_pages(pages_df(spark, 150, partitions=4))
+    return lift_html_pages(pages_df(spark, 150, partitions=4)).withColumn(
+        "part_id", bucket("src", 8)
+    )
 
 
 def test_materialize_and_manifest(spark, triples, tmp_path):
     out = str(tmp_path / "store")
-    res = materialize_triples(triples, out, run_id="r1", n_buckets=8, bucket_on="src")
+    with pytest.raises(ValueError, match="part_id"):
+        materialize_triples(triples.drop("part_id"), out, run_id="r0")
+    res = materialize_triples(triples, out, run_id="r1")
     assert res["rows"] == triples.count()
     assert res["skipped"] == []
     man = json.loads((tmp_path / "store" / "manifest.json").read_text())
     assert len(man["partitions"]) == len(res["written"])
     assert os.path.exists(out + "/lineage.jsonl")
+    store = spark.read.parquet(out + "/data")
+    assert store.filter(F.col("part_id") != F.pmod(F.xxhash64("src"), F.lit(8))).isEmpty()
+    assert man["partitions"] == {
+        str(r.part_id): {"rows": r.rows, "xhash": r.xhash}
+        for r in store.groupBy("part_id")
+        .agg(F.count(F.lit(1)).alias("rows"),
+             F.expr("bit_xor(xxhash64(src, subj, pred, obj, obj_dtype))").alias("xhash"))
+        .collect()
+    }
+
+
+def test_manifest_digest_verifies_after_resave(tmp_path):
+    """The stored sha256 digests the manifest without itself, also after
+    a re-save (a resume or a recanonicalize commit)."""
+    first = CheckpointManifest(str(tmp_path))
+    first.record(0, 3, 11)
+    first.save("r1")
+    second = CheckpointManifest(str(tmp_path))
+    second.record(1, 5, -7)
+    second.save("r2")
+    state = json.loads((tmp_path / "manifest.json").read_text())
+    digest = state.pop("sha256")
+    body = json.dumps(state, sort_keys=True, indent=1)
+    assert digest == hashlib.sha256(body.encode()).hexdigest()
+    assert state == {
+        "run_id": "r2",
+        "partitions": {"0": {"rows": 3, "xhash": 11}, "1": {"rows": 5, "xhash": -7}},
+    }
 
 
 def test_resume_skips_completed_buckets(spark, triples, tmp_path):
     out = str(tmp_path / "store")
-    first = materialize_triples(triples, out, run_id="r1", n_buckets=8, bucket_on="src")
+    first = materialize_triples(triples, out, run_id="r1")
     total = spark.read.parquet(out + "/data").count()
 
     # full re-run: everything skipped, nothing appended
-    second = materialize_triples(triples, out, run_id="r2", n_buckets=8, bucket_on="src")
+    second = materialize_triples(triples, out, run_id="r2")
     assert second["rows"] == 0
     assert second["skipped"] == first["written"]
     assert spark.read.parquet(out + "/data").count() == total
@@ -52,7 +86,7 @@ def test_partial_resume_completes_store(spark, triples, tmp_path):
     exactly the missing buckets; final content equals a one-shot run."""
     out = str(tmp_path / "store")
     ref_out = str(tmp_path / "ref")
-    materialize_triples(triples, ref_out, run_id="ref", n_buckets=8, bucket_on="src")
+    materialize_triples(triples, ref_out, run_id="ref")
     ref_fp = {
         (r.part_id, r.rows, r.xhash)
         for r in spark.read.parquet(ref_out + "/data")
@@ -63,13 +97,11 @@ def test_partial_resume_completes_store(spark, triples, tmp_path):
     }
 
     # crashed run: only buckets 0..3 committed
-    crashed = triples.withColumn(
-        "part_id", F.pmod(F.xxhash64(F.col("src")), F.lit(8)).cast("int")
-    ).filter(F.col("part_id") < 4)
-    materialize_triples(crashed, out, run_id="crash", n_buckets=8)
+    crashed = triples.filter(F.pmod(F.xxhash64(F.col("src")), F.lit(8)) < 4)
+    materialize_triples(crashed, out, run_id="crash")
     assert set(CheckpointManifest(out).completed()) == {0, 1, 2, 3}
 
-    res = materialize_triples(triples, out, run_id="resume", n_buckets=8, bucket_on="src")
+    res = materialize_triples(triples, out, run_id="resume")
     assert sorted(res["skipped"]) == [0, 1, 2, 3]
     got_fp = {
         (r.part_id, r.rows, r.xhash)
@@ -91,7 +123,7 @@ def test_fingerprint_parallelism_invariant(spark, tmp_path):
     for parts in (2, 8):
         out = str(tmp_path / f"store{parts}")
         tr = lift_html_pages(pages_df(spark, 100, partitions=parts))
-        materialize_triples(tr, out, run_id="x", n_buckets=4, bucket_on="src")
+        materialize_triples(tr.withColumn("part_id", bucket("src", 4)), out, run_id="x")
         man = json.loads((tmp_path / f"store{parts}" / "manifest.json").read_text())
         fps.append(man["partitions"])
     assert fps[0] == fps[1]
@@ -196,6 +228,21 @@ def test_pipeline_stage_counts_match_written_outputs(spark, tmp_path):
     m3 = run("r3", pages)
     assert m3["link"]["rows"] == 0
     assert m3["materialize"]["rows"] == 0
+
+    # crash-replay: wipe the manifest (a run that died before its commit)
+    # and re-run — neither links nor store rows may double (idempotent
+    # dynamic partition overwrite on both writers)
+    n_links = spark.read.parquet(out + "/links").count()
+    n_store = spark.read.parquet(out + "/data").count()
+    os.remove(out + "/manifest.json")
+    run("r4", pages)
+    assert spark.read.parquet(out + "/links").count() == n_links
+    assert spark.read.parquet(out + "/data").count() == n_store
+
+    # compaction dedups the store's quads globally
+    quads = spark.read.parquet(out + "/data").select("subj", "pred", "obj", "obj_dtype")
+    n = compact_store(spark, out, str(tmp_path / "compact"), n_buckets=buckets)
+    assert n == quads.distinct().count() == spark.read.parquet(str(tmp_path / "compact")).count()
 
 
 def test_pipeline_fails_loudly_without_success_marker(spark, tmp_path):

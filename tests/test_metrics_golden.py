@@ -8,11 +8,13 @@ Pa:Hr ±0.05, W/beat ±0.1) — SURVEY.md §5 / BASELINE.md.
 
 Every session is additionally checked against the pure-Python twins
 (faithful ports of metrics.rs semantics) to machine precision of the
-round-2 contract.
+round-2 contract. Synthetic sessions built in this file join the golden
+ones, so the twin check runs even without the reference checkout.
 """
 
 import csv
 import json
+import math
 
 import pytest
 from conftest import REFERENCE_DIR, reference_path
@@ -37,8 +39,27 @@ SCHEMA = T.StructType(
 )
 
 
+def _synthetic_series():
+    """sid → (hr, watts) at 1 Hz: one session longer than the 30 s NP
+    window with a zero-power coast, and one shorter than the window."""
+    n = 180
+    long_hr = [125.0 + 20.0 * math.sin(i / 23.0) + (i % 5) for i in range(n)]
+    long_w = [
+        0.0 if 60 <= i < 75 else 190.0 + 70.0 * math.sin(i / 9.0) + (i % 7) * 4.0
+        for i in range(n)
+    ]
+    short_hr = [140.0 + (i % 3) for i in range(20)]
+    short_w = [150.0 + 10.0 * (i % 4) for i in range(20)]
+    return {"syn_long": (long_hr, long_w), "syn_short": (short_hr, short_w)}
+
+
 def _load_sessions():
-    rows, series = [], {}
+    series = _synthetic_series()
+    rows = [
+        (sid, float(i), h, w)
+        for sid, (hrs, ws) in series.items()
+        for i, (h, w) in enumerate(zip(hrs, ws))
+    ]
     for p in sorted(GOLDEN.glob("data/sess0*_streams.csv")):
         sid = p.stem.replace("_streams", "")
         hrs, ws = [], []

@@ -4,7 +4,11 @@ Golden pair from the reference (/root/reference/data/sample.ttl ×
 /root/reference/shapes/session_shape.ttl, FIXTURES.md §2.2): the
 conforming graph yields zero violations; mutated graphs yield exactly
 the pyshacl-style violation rows (minCount / maxCount / datatype).
+The same cases also run against ``fixtures/session_shape.ttl``, a shapes
+file written in this repository from the §2.2 vocabulary.
 """
+
+from pathlib import Path
 
 import pytest
 from conftest import reference_path
@@ -45,11 +49,17 @@ def shapes():
     return parse_shapes_ttl(reference_path("shapes/session_shape.ttl").read_text())
 
 
+@pytest.fixture(scope="module")
+def repo_shapes():
+    path = Path(__file__).parent / "fixtures" / "session_shape.ttl"
+    return parse_shapes_ttl(path.read_text())
+
+
 def _df(spark, graph):
     return spark.createDataFrame(sorted(graph), TRIPLE_SCHEMA)
 
 
-def test_parse_reference_shapes(shapes):
+def _assert_session_shapes(shapes):
     assert len(shapes) == 1
     sh = shapes[0]
     assert sh.target_class == SCHEMA + "ExerciseAction"
@@ -58,6 +68,14 @@ def test_parse_reference_shapes(shapes):
         assert p.datatype == XSD + "float"
         assert p.min_count == 1 and p.max_count == 1
         assert "must be a single float value" in p.message
+
+
+def test_parse_reference_shapes(shapes):
+    _assert_session_shapes(shapes)
+
+
+def test_parse_repo_shapes(repo_shapes):
+    _assert_session_shapes(repo_shapes)
 
 
 def test_conforming_graph(spark, shapes):
@@ -74,28 +92,57 @@ def _assert_parity(spark, graph, shapes):
     return got
 
 
-def test_min_count_violation(spark, shapes):
+def _missing_power():
     g = _sample_graph()
     g.discard((f"{EX}session2", SCHEMA + "power", "220", XSD + "float"))
-    got = _assert_parity(spark, g, shapes)
+    return g
+
+
+def _duplicate_heart_rate():
+    g = _sample_graph()
+    g.add((f"{EX}session3", SCHEMA + "heartRate", "99", XSD + "float"))
+    return g
+
+
+def _integer_power():
+    g = _sample_graph()
+    g.discard((f"{EX}session1", SCHEMA + "power", "200", XSD + "float"))
+    g.add((f"{EX}session1", SCHEMA + "power", "200", XSD + "integer"))
+    return g
+
+
+def test_min_count_violation(spark, shapes):
+    got = _assert_parity(spark, _missing_power(), shapes)
     assert (f"{EX}session2", SCHEMA + "power", "minCount", None) in got
     assert len(got) == 1
 
 
 def test_max_count_violation(spark, shapes):
-    g = _sample_graph()
-    g.add((f"{EX}session3", SCHEMA + "heartRate", "99", XSD + "float"))
-    got = _assert_parity(spark, g, shapes)
+    got = _assert_parity(spark, _duplicate_heart_rate(), shapes)
     assert (f"{EX}session3", SCHEMA + "heartRate", "maxCount", None) in got
     assert len(got) == 1
 
 
 def test_datatype_violation(spark, shapes):
-    g = _sample_graph()
-    g.discard((f"{EX}session1", SCHEMA + "power", "200", XSD + "float"))
-    g.add((f"{EX}session1", SCHEMA + "power", "200", XSD + "integer"))
-    got = _assert_parity(spark, g, shapes)
+    got = _assert_parity(spark, _integer_power(), shapes)
     assert (f"{EX}session1", SCHEMA + "power", "datatype", "200") in got
+
+
+def test_repo_shapes_conforming_graph(spark, repo_shapes):
+    assert conforms(_df(spark, _sample_graph()), repo_shapes)
+
+
+@pytest.mark.parametrize(
+    "graph, violation",
+    [
+        (_missing_power, (f"{EX}session2", SCHEMA + "power", "minCount", None)),
+        (_duplicate_heart_rate, (f"{EX}session3", SCHEMA + "heartRate", "maxCount", None)),
+        (_integer_power, (f"{EX}session1", SCHEMA + "power", "datatype", "200")),
+    ],
+    ids=["minCount", "maxCount", "datatype"],
+)
+def test_repo_shapes_violation(spark, repo_shapes, graph, violation):
+    assert _assert_parity(spark, graph(), repo_shapes) == {violation}
 
 
 def test_ill_typed_lexical_violation(spark, shapes):
