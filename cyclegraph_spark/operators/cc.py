@@ -6,27 +6,41 @@ equivalences) to one canonical id = the MINIMUM id in the component —
 a deterministic choice at any parallelism (the reference's newest-wins /
 sorted-glob tie-break discipline, SURVEY.md §2.6 O3/O6, applied to ids).
 
-Algorithm: alternating large-star / small-star edge contraction
-(Kiveris et al., "Connected Components in MapReduce and Beyond",
-SoCC'14 — public literature). Each round REWRITES the edge set:
+Algorithm: CC costs what the graph costs, not a fixed number of
+distributed rounds.
 
-    large-star: every node u hooks its strictly-larger neighbors to
-                m(u) = min(N(u) ∪ {u})
-    small-star: every node u (as the larger endpoint) hooks its
-                smaller neighbors and itself to m(u)
+- Graphs of at most ``_UF_MAX_EDGES`` edges (what one Python worker
+  holds comfortably) finish in ONE task: the edges are coalesced to a
+  single partition and a ``mapInArrow`` worker runs the union-find loop
+  of :func:`reference_components` over their Arrow batches. Its output
+  is the labels table, every vertex included (self-loop-only ones label
+  themselves). Measured in a warm session on a 4-core host over the
+  4,415 sameAs edges of a 2,002-page corpus: 0.35–0.41 s and 1 job,
+  against 3.3–6.0 s and 28 jobs for the star rounds; identical labels
+  for all 5,003 ids.
+- Larger graphs contract first: alternating large-star / small-star
+  rounds (Kiveris et al., "Connected Components in MapReduce and
+  Beyond", SoCC'14 — public literature) rewrite the edge set
 
-and the edge set provably converges to per-component stars rooted at
-the component minimum in O(log n) rounds. We previously ran min-label
-propagation + pointer doubling over a STATIC edge set; that is
-O(log n) only while one label front is live — when a smaller label
-arrives late into an already-converged region (a hub grafted onto a
-long chain's midpoint), it crawls the region at one hop per round
-because every pointer already short-circuits to the regional minimum.
-Star contraction rewires the region's star root directly to the new
-minimum, so the same topology converges in O(log n) regardless of
-label arrival order (regression-tested on a 10k chain × 4 hubs).
+      large-star: every node u hooks its strictly-larger neighbors to
+                  m(u) = min(N(u) ∪ {u})
+      small-star: every node u (as the larger endpoint) hooks its
+                  smaller neighbors and itself to m(u)
+
+  until it holds at most ``_UF_MAX_EDGES`` edges; the same union-find
+  then finishes over the contracted edges. Contraction preserves
+  connectivity and keeps every non-minimum vertex on an edge to a
+  smaller one, so vertices absent from the contracted set are component
+  minima (or isolated) and label themselves. Contraction cannot go below
+  (vertices − components) edges, so a sparse graph above the bound
+  reaches its fixpoint above it; that fixpoint is a forest of min-rooted
+  stars, read off by one aggregation. The rounds converge in O(log n) on any
+  topology, wherever the component minimum sits (regression-tested on
+  a 10k chain × 4 hubs).
 
 Scale notes:
+- The bound is absolute, so no step collects to the driver and none
+  holds more than ``_UF_MAX_EDGES`` edges in one task.
 - Each star step is one hash aggregation (min per node — map-side
   partial agg, so a hot node — the "Boris Johnson problem", one entity
   on ~20% of pages — does not funnel through one reducer) + one join
@@ -34,23 +48,51 @@ Scale notes:
   node; AQE's skew-join splits the oversized partition (an explicit
   broadcast split of hot minima measured slower on every planted-hub
   graph, tools/skew_stress.py).
-- ``localCheckpoint`` every round truncates the lineage chain — without
-  it the plan doubles per iteration and the driver OOMs compiling it
-  (this is the Spark analog of the reference's incremental checkpoint
-  state, /root/reference/cli/strava_import.py:289-313).
-- Convergence: stop when the edge multiset's (count, hash-xor)
-  fingerprint is a fixpoint; sameAs graphs are star-shaped already
-  (diameter ≤ 4), so 2-3 rounds in practice; ``max_iter`` bounds
-  pathological inputs.
+- An eager ``localCheckpoint`` every round truncates the lineage chain
+  — without it the plan doubles per iteration and the driver OOMs
+  compiling it. Each round's edge count and (count, hash-xor)
+  fingerprint ride on that checkpoint job as an ``Observation``.
+- Convergence: stop below the bound or when the fingerprint is a
+  fixpoint; ``max_iter`` bounds pathological inputs and warns.
 
-Returns labels(id, component) — join it back to the triple table to
-rewrite subj/obj to canonical ids, then dedup (O3 keep-best).
+Returns labels(id, component) on a checkpoint — join it back to the
+triple table to rewrite subj/obj to canonical ids, then dedup (O3
+keep-best); its consumers read it without re-running CC.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import warnings
+from collections.abc import Iterable, Iterator
+from itertools import islice
+
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+# Graphs with at most this many edges finish in one union-find task;
+# larger ones are contracted by star rounds until they fit.
+_UF_MAX_EDGES = 2_000_000
+# Rows per Arrow batch the union-find task emits.
+_UF_BATCH_ROWS = 10_000
+
+
+def _checkpoint(df: DataFrame, *aggs) -> tuple[DataFrame, dict]:
+    """Eagerly ``localCheckpoint`` ``df``; return it with ``aggs``
+    computed on that same job by an Observation.
+
+    Eager on purpose: a lazy checkpoint freezes its physical plan before
+    AQE's runtime re-optimization, and a planted-hub graph ran 24.7 s →
+    45.9 s with all CC checkpoints lazy (identical labels).
+    """
+    obs = Observation()
+    return df.observe(obs, *aggs).localCheckpoint(eager=True), obs.get
+
+
+def _fingerprint() -> tuple:
+    """(count, hash-xor) of an edge multiset: equal fingerprints before
+    and after a round mark the fixpoint."""
+    return F.count(F.lit(1)).alias("n"), F.bit_xor(F.xxhash64("u", "v")).alias("h")
 
 
 def _large_star(e: DataFrame) -> DataFrame:
@@ -93,6 +135,32 @@ def _small_star(e: DataFrame) -> DataFrame:
     return out.filter(F.col("u") != F.col("v")).distinct()
 
 
+def _union_find_arrow(batches: Iterator) -> Iterator:
+    """mapInArrow worker: the (u, v) batches of ONE partition →
+    (id, component) batches of at most ``_UF_BATCH_ROWS`` rows, every
+    id seen. Output types are the input's."""
+    import pyarrow as pa
+
+    parent: dict = {}
+    id_type = None
+    for b in batches:
+        id_type = b.column(0).type
+        _union(parent, zip(b.column(0).to_pylist(), b.column(1).to_pylist()))
+    ids = iter(parent)
+    while chunk := list(islice(ids, _UF_BATCH_ROWS)):
+        roots = [_find(parent, x) for x in chunk]
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(chunk, id_type), pa.array(roots, id_type)], names=["id", "component"]
+        )
+
+
+def _union_find(e: DataFrame) -> DataFrame:
+    """labels(id, component) of the (u, v) edges ``e``, in one task."""
+    t = e.schema["u"].dataType
+    schema = T.StructType([T.StructField("id", t), T.StructField("component", t)])
+    return e.coalesce(1).mapInArrow(_union_find_arrow, schema)
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "src",
@@ -102,98 +170,52 @@ def connected_components(
 ) -> DataFrame:
     """edges(src, dst) → labels(id, component); component = min id.
 
-    Alternating large-star / small-star contraction (module docstring).
-    One round = large-star + small-star + a (count, hash-xor) edge
-    fingerprint action; stop at a fingerprint fixpoint. O(log n) rounds
-    on any topology, independent of where the component minimum sits.
+    Edges with a NULL endpoint are dropped. At most ``_UF_MAX_EDGES``
+    edges finish in one union-find task; larger graphs run star rounds
+    (module docstring) first. The labels come back checkpointed.
 
-    Pass ``stats={}`` to get convergence telemetry back: ``rounds``
-    (star rounds until fixpoint), ``edge_counts`` (surviving edge
-    count per round — the observable for the O(log n) claim) and
-    ``converged``.
+    Pass ``stats={}`` to get telemetry back: ``rounds`` (star rounds
+    run), ``edge_counts`` (edge count after each round — the observable
+    for the O(log n) claim), ``edges`` (the edge count the finish ran
+    on) and ``converged`` (False when ``max_iter`` stopped the rounds
+    above the bound and short of a fixpoint).
     """
-    # materialize the caller's edge lineage exactly ONCE: verts and e
-    # both derive from it, and checkpointing each separately (the old
-    # shape) recomputed the caller's (possibly expensive, un-checkpointed)
-    # upstream plan twice before the first contraction round.
-    # EAGER on purpose — measured, do not "optimize" to eager=False:
-    # fusing the checkpoint into the next action looks like it saves a
-    # job per round, but a lazy localCheckpoint freezes a physical plan
-    # BEFORE AQE's runtime re-optimization (no shuffle-partition
-    # coalescing on the small contracted relations), and a planted-hub
-    # pathology test regressed 24.7 → 45.9 s when all CC checkpoints
-    # went lazy (r5, local[32] idle, identical labels).
-    # Round-6 A/B (kept as-is): skipping this checkpoint when the
-    # caller's edge frame already sits on a checkpoint (dedup_clusters,
-    # the pipeline) measured NEUTRAL-to-worse — on a materialized input
-    # this job is nearly free, while without it the e-checkpoint and the
-    # final verts join each re-derive (and re-compile) the projection.
-    # Same verdict for skipping the e distinct below on guaranteed-clean
-    # pair graphs. The CC job sequence is at its overhead floor
-    # (r5 profile: ~8 × ~200 ms per-action cost, not a plan flaw).
-    e0 = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .filter(F.col("u").isNotNull() & F.col("v").isNotNull())
-        .localCheckpoint(eager=True)
+    pairs = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+    if pairs.schema["u"].dataType != pairs.schema["v"].dataType:
+        # one id type for both ends: the one a union of the two widens to
+        t = pairs.select("u").union(pairs.select("v")).schema[0].dataType
+        pairs = pairs.select(F.col("u").cast(t), F.col("v").cast(t))
+    # materialize the caller's edge lineage exactly once: the union-find,
+    # the contraction and the vertex set below all read it
+    e0, seen = _checkpoint(
+        pairs.filter(F.col("u").isNotNull() & F.col("v").isNotNull()),
+        F.count(F.lit(1)).alias("n"),
     )
-    # lazy: one distinct over the checkpointed e0, executed by the final
-    # labels join only (it is not consumed inside the loop)
-    verts = (
-        e0.select(F.col("u").alias("id"))
-        .unionByName(e0.select(F.col("v").alias("id")))
-        .distinct()
+    stats = {} if stats is None else stats
+    stats.update(rounds=0, edge_counts=[], edges=seen["n"], converged=True)
+    if seen["n"] <= _UF_MAX_EDGES:
+        return _union_find(e0).localCheckpoint(eager=True)
+
+    # contract: self-loop-free and deduplicated in the orientation
+    # _small_star emits (larger endpoint first), so an input that is
+    # already a forest of min-rooted stars exits after one round
+    e, fp = _checkpoint(
+        e0.filter(F.col("u") != F.col("v"))
+        .select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
+        .distinct(),
+        *_fingerprint(),
     )
-    # NB: even for inputs that are already unique/self-loop-free (the
-    # dedup pair graph) this distinct+checkpoint stays: an A/B this
-    # round (skip it when the caller guarantees cleanliness) was
-    # neutral-to-worse — without the materialized ``e`` the seed
-    # fingerprint and both round-1 star steps each re-derive and
-    # re-compile the projection subtree, costing more than the no-op
-    # dedup shuffle saves.
-    e = e0.filter(F.col("u") != F.col("v")).distinct().localCheckpoint(eager=True)
-
-    if stats is not None:
-        stats["rounds"] = 0
-        stats["edge_counts"] = []
-
-    def _fingerprint(d: DataFrame) -> tuple:
-        row = d.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.bit_xor(F.xxhash64("u", "v")).alias("h"),
-        ).first()
-        return (row["n"], row["h"])
-
-    # Seed the fixpoint test with the fingerprint of the input in the
-    # round-output's canonical orientation (larger endpoint first — the
-    # exact representation _small_star emits at fixpoint). An input that
-    # is ALREADY a forest of min-rooted stars (the common shape for
-    # sameAs corpora and dedup pair graphs) then exits after ONE
-    # confirming round instead of two; any other input simply fails the
-    # first comparison and the loop proceeds unchanged.
-    prev_fp = _fingerprint(
-        e.select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
-        .distinct()
-    )
-    converged = False
-    for _ in range(max_iter):
-        # truncate lineage every round; eager on purpose (see the
-        # seed-checkpoint comment: lazy loses AQE re-optimization)
-        e = _small_star(_large_star(e)).localCheckpoint(eager=True)
-        fp = _fingerprint(e)
-        if stats is not None:
-            stats["rounds"] += 1
-            stats["edge_counts"].append(fp[0])
-        if fp == prev_fp:
-            converged = True
-            break
-        prev_fp = fp
-    if stats is not None:
-        stats["converged"] = converged
-    if not converged:
-        # labels derived from a mid-contraction edge set need not be the
+    fixpoint = False
+    while fp["n"] > _UF_MAX_EDGES and not fixpoint and stats["rounds"] < max_iter:
+        e, nxt = _checkpoint(_small_star(_large_star(e)), *_fingerprint())
+        stats["rounds"] += 1
+        stats["edge_counts"].append(nxt["n"])
+        fixpoint, fp = nxt == fp, nxt
+    stats["edges"] = fp["n"]
+    stats["converged"] = fixpoint or fp["n"] <= _UF_MAX_EDGES
+    if not stats["converged"]:
+        # labels read off a mid-contraction edge set need not be the
         # component minima — never fail silently (ADVICE r2)
-        import warnings
-
         warnings.warn(
             f"connected_components hit max_iter={max_iter} without an edge-"
             "fingerprint fixpoint; labels may be mid-contraction values — "
@@ -201,12 +223,22 @@ def connected_components(
             RuntimeWarning,
             stacklevel=2,
         )
-
-    # at fixpoint e is a forest of stars (child u → component-min v);
-    # vertices absent from e (isolated / self-loop-only) label themselves
-    star = e.groupBy(F.col("u").alias("id")).agg(F.min("v").alias("root"))
-    return verts.join(star, "id", "left").select(
-        "id", F.coalesce(F.col("root"), F.col("id")).alias("component")
+    if fp["n"] <= _UF_MAX_EDGES:
+        roots = _union_find(e)
+    else:
+        # a forest of stars: child u → its component minimum v
+        roots = e.groupBy(F.col("u").alias("id")).agg(F.min("v").alias("component"))
+    # vertices absent from the contracted edges are component minima
+    # (contraction keeps every other vertex on an edge to a smaller one)
+    verts = (
+        e0.select(F.col("u").alias("id"))
+        .unionByName(e0.select(F.col("v").alias("id")))
+        .distinct()
+    )
+    return (
+        verts.join(roots, "id", "left")
+        .select("id", F.coalesce(F.col("component"), F.col("id")).alias("component"))
+        .localCheckpoint(eager=True)
     )
 
 
@@ -248,23 +280,28 @@ def canonicalize_triples(
 
 
 # --------------------------------------------------------------------------
-# Single-node oracle (union-find) for parity tests
+# Union-find: the one-task finish and the single-node oracle
 # --------------------------------------------------------------------------
 
-def reference_components(edges: list[tuple[str, str]]) -> dict[str, str]:
-    """Union-find twin: id → min-id-of-component."""
-    parent: dict[str, str] = {}
+def _find(parent: dict, x):
+    while parent[x] != x:
+        parent[x] = parent[parent[x]]
+        x = parent[x]
+    return x
 
-    def find(x: str) -> str:
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
 
+def _union(parent: dict, edges: Iterable[tuple]) -> None:
+    """Merge ``edges`` into ``parent``; a root is its component's min."""
     for a, b in edges:
         for v in (a, b):
             parent.setdefault(v, v)
-        ra, rb = find(a), find(b)
+        ra, rb = _find(parent, a), _find(parent, b)
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
-    return {v: find(v) for v in parent}
+
+
+def reference_components(edges: list[tuple[str, str]]) -> dict[str, str]:
+    """Union-find twin: id → min-id-of-component."""
+    parent: dict = {}
+    _union(parent, edges)
+    return {v: _find(parent, v) for v in parent}

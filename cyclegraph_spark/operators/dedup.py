@@ -246,9 +246,10 @@ def dedup_clusters(
     put A,C in one cluster even below pairwise threshold) → canonical
     survivor = MIN doc id per cluster (O3/O6 determinism discipline).
 
-    Reuses the star-contraction CC operator, so cluster formation is
-    O(log n) rounds and hot near-dup hubs (one boilerplate page with
-    thousands of copies) take the broadcast-split path.
+    Reuses the CC operator: a pair graph within its edge bound clusters
+    in one union-find task; a larger one first contracts in O(log n)
+    star rounds, where AQE's skew join splits hot near-dup hubs (one
+    boilerplate page with thousands of copies).
 
     Output: (doc_id, canonical_id) for every doc that belongs to a
     cluster of size ≥ 2 (singletons are their own canonical and are
@@ -257,15 +258,12 @@ def dedup_clusters(
     """
     from cyclegraph_spark.operators.cc import connected_components
 
-    # materialize the pair graph ONCE: connected_components issues
-    # multiple actions (vertex set, edge checkpoint, per-round
-    # fingerprints) and each would otherwise re-execute the entire
-    # shingle→posting→pair plan (measured at sf0.1, warm session:
-    # 9.4 s → 7.4 s)
+    # connected_components checkpoints its input once, so the
+    # shingle→posting→pair plan runs once
     pairs = ngram_jaccard_pairs(
         df, id_col=id_col, text_col=text_col,
         threshold=threshold, max_doc_freq=max_doc_freq,
-    ).localCheckpoint(eager=True)
+    )
     labels = connected_components(
         pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
     )

@@ -229,20 +229,27 @@ def recanonicalize_store(
     Idempotent: a replay finds no stale ids and no-ops.
     """
     data_dir = os.path.join(out_dir, "data")
-    if not os.path.exists(data_dir) or remap.isEmpty():
+    if not os.path.exists(data_dir):
         return {"rows": 0, "partitions": []}
-    rm = remap.select(
-        F.col("from_id").alias("_from"), F.col("to_id").alias("_to")
-    ).localCheckpoint(eager=True)
+    obs = Observation()
+    rm = (
+        remap.select(F.col("from_id").alias("_from"), F.col("to_id").alias("_to"))
+        .observe(obs, F.count(F.lit(1)).alias("n"))
+        .localCheckpoint(eager=True)
+    )
+    if obs.get["n"] == 0:
+        return {"rows": 0, "partitions": []}
 
     store = spark.read.parquet(data_dir)
+    rm_s = rm.select(F.col("_from").alias("_sf"), F.col("_to").alias("_st"))
+    rm_o = rm.select(F.col("_from").alias("_of"), F.col("_to").alias("_ot"))
+    # one scan of the store, probing both broadcast remaps
+    stale = store.select("subj", "obj", "part_id")
     affected = (
-        store.join(F.broadcast(rm), store["subj"] == rm["_from"], "left_semi")
+        stale.join(F.broadcast(rm_s), stale["subj"] == rm_s["_sf"], "left")
+        .join(F.broadcast(rm_o), stale["obj"] == rm_o["_of"], "left")
+        .filter(F.col("_sf").isNotNull() | F.col("_of").isNotNull())
         .select("part_id")
-        .unionByName(
-            store.join(F.broadcast(rm), store["obj"] == rm["_from"], "left_semi")
-            .select("part_id")
-        )
         .distinct()
         .collect()
     )
@@ -251,8 +258,6 @@ def recanonicalize_store(
         return {"rows": 0, "partitions": []}
 
     sub = store.filter(F.col("part_id").isin(parts))
-    rm_s = rm.select(F.col("_from").alias("_sf"), F.col("_to").alias("_st"))
-    rm_o = rm.select(F.col("_from").alias("_of"), F.col("_to").alias("_ot"))
     data_cols = [c for c in store.columns if c != "part_id"]
     rewritten = (
         sub.join(F.broadcast(rm_s), sub["subj"] == rm_s["_sf"], "left")

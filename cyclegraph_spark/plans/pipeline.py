@@ -3,20 +3,26 @@
 pages(url, warc_ts, html, [text], lang)
   → resume-prune (anti-filter completed source buckets — BEFORE the
     expensive stages, so a resumed run re-reads only missing buckets)
-  → extract text        (vectorized pandas UDF, the only Python stage)
-  → lift triples        (microdata/RDFa/JSON-LD islands, P1 coercion)
-  → SHACL validate      (SQL predicates → violations table)
+  → extract text        (vectorized pandas UDF)
+  → lift triples        (microdata/RDFa/JSON-LD islands parsed in a
+                         mapInArrow stage, P1 coercion)
+  → canonicalize        (sameAs connected components + rewrite + dedup;
+                         on a resume, stale store rows are remapped)
   → link mentions       (n-gram candidates × broadcast alias dict)
-  → canonicalize        (sameAs CC label propagation + dedup)
   → materialize         (bucketed parquet + manifest + lineage)
+  → SHACL validate      (SQL predicates over the whole store →
+                         violations table)
+  → node table          (derived from the whole store)
 
 Per-stage lineage rows mirror the reference's per-step duration logging
 (/root/reference/cli/session.py:338-352 ``_timed``).
 
-The pipeline is lazy end-to-end until materialize; stage row counts come
-from an ``Observation`` on each write (the count rides on the write job),
-not from mid-plan ``.count()`` actions that would re-execute the
-expensive prefix or from re-reading what was just written.
+The pipeline is lazy end-to-end until materialize, apart from the
+checkpoints of pages, triples and the CC labels, each read by several
+consumers; stage row counts come from an ``Observation`` on each write
+(the count rides on the write job), not from mid-plan ``.count()``
+actions that would re-execute the expensive prefix or from re-reading
+what was just written.
 """
 
 from __future__ import annotations
@@ -104,6 +110,8 @@ def run_pipeline(
             prior.select(F.col("id").alias("src"), F.col("component").alias("dst"))
         )
     cc_stats: dict = {}
+    # checkpointed: the remap, the store rewrite and write_labels below
+    # read it without re-running CC
     labels = connected_components(edges, stats=cc_stats)
     if prior is not None:
         # stale ids: old canonical assignment != new one. Store rows hold
@@ -138,18 +146,16 @@ def run_pipeline(
             "mapreduce.fileoutputcommitter.marksuccessfuljobs"
         )
     # canonicalize against the labels JUST WRITTEN, read back from
-    # parquet, not the in-memory CC plan: the file-backed side (a) stops
-    # the materialize action from re-executing the whole CC tail (verts
-    # distinct + star agg + join — measured 9 Exchanges → 3 in the canon
-    # plan, 2.1 s → 0.9 s at 20k pages), and (b) carries accurate
-    # file-based size stats, so the planner's broadcast-vs-shuffle choice
-    # for the labels join stays correct at any scale (guide §3.1: size
-    # estimates through joins/aggs are unreliable; file stats are not).
+    # parquet: the file-backed side carries accurate file-based size
+    # stats, so the planner's broadcast-vs-shuffle choice for the labels
+    # join stays correct at any scale (guide §3.1: size estimates
+    # through joins/aggs are unreliable; file stats are not).
     canon = canonicalize_triples(triples, written_labels, keep_cols=("src", "part_id"))
     metrics["cc"] = {
         "sec": round(time.time() - t0, 3),
-        "rounds": cc_stats.get("rounds"),
-        "edges": (cc_stats.get("edge_counts") or [None])[-1],
+        "rounds": cc_stats["rounds"],
+        "edges": cc_stats["edges"],
+        "converged": cc_stats["converged"],
     }
 
     # --- link BEFORE the manifest commit, idempotently: links are

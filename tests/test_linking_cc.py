@@ -1,8 +1,10 @@
 """M4/M5 — entity linking + connected-components parity and determinism."""
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from cyclegraph_spark.operators import cc
 from cyclegraph_spark.operators.cc import (
     canonicalize_triples,
     connected_components,
@@ -14,6 +16,13 @@ from cyclegraph_spark.sources.pages import alias_df, build_alias_rows, pages_wit
 EDGE_SCHEMA = T.StructType(
     [T.StructField("src", T.StringType()), T.StructField("dst", T.StringType())]
 )
+
+
+@pytest.fixture
+def star_rounds(monkeypatch):
+    """Edge bound 0: every graph is contracted by star rounds to its
+    fixpoint instead of finishing in the one-task union-find."""
+    monkeypatch.setattr(cc, "_UF_MAX_EDGES", 0)
 
 
 def test_link_parity_with_oracle(spark):
@@ -71,6 +80,30 @@ def test_link_deterministic_across_parallelism(spark):
     assert out[0] == out[1]
 
 
+def test_link_prefilter_escapes_quote_and_backslash(spark):
+    """First words holding ' and \\ go through the SQL IN list of the
+    candidate prefilter intact: links equal the oracle's."""
+    alias_rows = [
+        ("O'Brien\\x Ltd", "e1", 0.9),
+        ("it's", "e2", 0.5),
+        ("a\\b", "e3", 0.7),
+        ("\\'", "e4", 0.6),
+        ("plain", "e5", 0.4),
+    ]
+    aliases = spark.createDataFrame(alias_rows, "alias string, entity_id string, prior double")
+    texts = [
+        ("d1", "met O'Brien\\x Ltd and it's a\\b plain"),
+        ("d2", "O'Brien Ltd its ab a\\\\b \\' '"),
+    ]
+    pages = spark.createDataFrame(texts, "url string, text string")
+    got = {(r.url, r.pos, r.alias, r.entity_id, r.score) for r in link_mentions(pages, aliases).collect()}
+    exp = {
+        (url, *link) for url, text in texts for link in reference_link(text, alias_rows)
+    }
+    assert got == exp
+    assert {e for *_x, e, _s in got} == {"e1", "e2", "e3", "e4", "e5"}
+
+
 def test_cc_parity_chain_and_stars(spark):
     edges = (
         # chain a-b-c-d (diameter test)
@@ -88,7 +121,7 @@ def test_cc_parity_chain_and_stars(spark):
     assert got == exp
 
 
-def test_cc_nonconvergence_is_loud(spark):
+def test_cc_nonconvergence_is_loud(spark, star_rounds):
     """Exhausting max_iter without an edge-fingerprint fixpoint must
     surface (warning + stats flag), never silently label from a
     mid-contraction edge set (ADVICE r2)."""
@@ -115,7 +148,7 @@ def test_cc_nonconvergence_is_loud(spark):
     assert got == set(reference_components(edges).items())
 
 
-def test_cc_long_chain_converges_logarithmically(spark):
+def test_cc_long_chain_converges_logarithmically(spark, star_rounds):
     """Pointer doubling: a 300-link path must converge well under the
     chain length (O(log n) rounds; max_iter=15 would fail without it)."""
     n = 300
@@ -125,7 +158,7 @@ def test_cc_long_chain_converges_logarithmically(spark):
     assert got == {(f"n{i:04d}", "n0000") for i in range(n + 1)}
 
 
-def test_cc_10k_chain_multi_hub_topology(spark):
+def test_cc_10k_chain_multi_hub_topology(spark, star_rounds):
     """Nasty topology: a 10k-link path (worst case for plain min-label
     propagation — O(n) rounds without shortcutting) fused with four
     1.5k-leaf hubs, plus a disjoint pair to catch cross-component label leaks.
@@ -164,8 +197,12 @@ def test_cc_hot_entity_skew_from_corpus(spark):
     edges = triples.filter(F.col("pred") == OWL_SAMEAS).select(
         F.col("subj").alias("src"), F.col("obj").alias("dst")
     )
-    labels = connected_components(edges)
     exp = reference_components([(r.src, r.dst) for r in edges.collect()])
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(cc, "_UF_MAX_EDGES", 0)
+        star = {(r.id, r.component) for r in connected_components(edges).collect()}
+    assert star == set(exp.items())
+    labels = connected_components(edges)
     got = {(r.id, r.component) for r in labels.collect()}
     assert got == set(exp.items())
 
@@ -173,6 +210,63 @@ def test_cc_hot_entity_skew_from_corpus(spark):
     sizes = labels.groupBy("component").count()
     hot = sizes.orderBy(F.col("count").desc()).first()
     assert "e0000" in hot.component or hot["count"] >= 50
+
+
+def test_cc_union_find_empty_edges(spark):
+    stats: dict = {}
+    labels = connected_components(spark.createDataFrame([], EDGE_SCHEMA), stats=stats)
+    assert labels.collect() == []
+    assert [f.dataType for f in labels.schema] == [T.StringType(), T.StringType()]
+    assert stats == {"rounds": 0, "edge_counts": [], "edges": 0, "converged": True}
+
+
+def test_cc_union_find_long_ids(spark):
+    """Long ids stay long; an int end is widened to the other's long."""
+    edges = [(5, 3), (3, 9), (8, 2**40), (7, 7), (11, 2**40)]
+    df = spark.createDataFrame(edges, "src int, dst long")
+    labels = connected_components(df)
+    assert [f.dataType for f in labels.schema] == [T.LongType(), T.LongType()]
+    assert {(r.id, r.component) for r in labels.collect()} == set(
+        reference_components(edges).items()
+    )
+
+
+def test_cc_union_find_self_loop_only_vertices(spark):
+    edges = [("solo", "solo"), ("b", "a"), ("z", "z"), ("z", "z")]
+    stats: dict = {}
+    got = {
+        (r.id, r.component)
+        for r in connected_components(spark.createDataFrame(edges, EDGE_SCHEMA), stats=stats).collect()
+    }
+    assert got == {("solo", "solo"), ("a", "a"), ("b", "a"), ("z", "z")}
+    assert stats["rounds"] == 0 and stats["edges"] == 4
+
+
+def test_cc_union_find_drops_null_endpoints(spark):
+    edges = [("a", None), (None, "b"), (None, None), ("d", "c")]
+    stats: dict = {}
+    got = {
+        (r.id, r.component)
+        for r in connected_components(spark.createDataFrame(edges, EDGE_SCHEMA), stats=stats).collect()
+    }
+    assert got == {("c", "c"), ("d", "c")}
+    assert stats["edges"] == 1
+
+
+def test_cc_contracts_then_finishes_below_bound(spark, monkeypatch):
+    """Above the bound, star rounds run only until the contracted edge
+    set fits (a clique collapses to a star); the union-find finishes
+    over it and the vertex join labels the ids contraction dropped."""
+    clique = [(f"k{i:02d}", f"k{j:02d}") for i in range(25) for j in range(i)]
+    edges = clique + [(f"n{i}", f"n{i + 1}") for i in range(10)] + [("x", "x"), ("y2", "y1")]
+    monkeypatch.setattr(cc, "_UF_MAX_EDGES", 200)
+    stats: dict = {}
+    labels = connected_components(spark.createDataFrame(edges, EDGE_SCHEMA), stats=stats)
+    assert {(r.id, r.component) for r in labels.collect()} == set(
+        reference_components(edges).items()
+    )
+    assert stats["rounds"] >= 1 and stats["converged"] is True
+    assert stats["edges"] == stats["edge_counts"][-1] <= 200
 
 
 def test_canonicalize_triples_dedup(spark):

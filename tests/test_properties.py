@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -282,20 +283,19 @@ def test_lift_literal_engine_policy(spark):
     )
 )
 def test_connected_components_matches_union_find(spark, edges):
-    """Star-contraction CC vs the union-find twin on random graphs —
-    self-loops, duplicates, multi-component, arbitrary label order."""
-    from cyclegraph_spark.operators.cc import (
-        connected_components,
-        reference_components,
-    )
+    """CC vs the union-find twin on random graphs — self-loops,
+    duplicates, multi-component, arbitrary label order — through the
+    one-task union-find (default edge bound) and through star rounds
+    (bound 0)."""
+    from cyclegraph_spark.operators import cc
 
     df = spark.createDataFrame(edges, "src long, dst long")
-    got = {
-        (r.id, r.component)
-        for r in connected_components(df).collect()
-    }
-    exp = set(reference_components([(a, b) for a, b in edges]).items())
-    assert got == exp
+    exp = set(cc.reference_components([(a, b) for a, b in edges]).items())
+    for bound in (cc._UF_MAX_EDGES, 0):
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(cc, "_UF_MAX_EDGES", bound)
+            got = {(r.id, r.component) for r in cc.connected_components(df).collect()}
+        assert got == exp, bound
 
 
 @settings(max_examples=6, deadline=None,

@@ -11,12 +11,15 @@ recorded run plants REAL skew at bench scale and times the claims:
   ``link_mentions`` — the hot alias rides the broadcast join (no
   shuffle on the dictionary side) and the support window partitions by
   (url, entity), so the hot ENTITY never concentrates in one task.
-- cc: a 100k-degree hub + 25k 8-node chains (300k edges total) through
-  one ``connected_components`` run; the chains force several star
-  rounds, and the hub's skewed star join is left to AQE's skew-join.
-  (Recorded r5: an explicit broadcast split of hot minima ran 36.8 s vs
-  25.7 s without it on this graph, and 40-45 s vs 27-29 s with a 2M-degree
-  hub, identical labels — see BENCH/BASELINE.md.)
+- cc: a 100k-degree hub + 25k 8-node chains (~275k edges) through
+  ``connected_components`` twice. At the default edge bound
+  (``cc._UF_MAX_EDGES``) the graph fits, so it finishes in the one-task
+  union-find without a star round. At bound 0 it is contracted by star
+  rounds to their fixpoint: the chains force several rounds, and the
+  hub's skewed star join is left to AQE's skew-join. (Recorded r5: an
+  explicit broadcast split of hot minima ran 36.8 s vs 25.7 s without
+  it on this graph, and 40-45 s vs 27-29 s with a 2M-degree hub,
+  identical labels — see BENCH/BASELINE.md.)
 
 Runs pinned to $SPARK_GRAFT_SCALE_4N cores (default 16 = the bench's 4N
 level) in a subprocess; set SPARK_GRAFT_SKEW_HUB to change the hub
@@ -40,7 +43,7 @@ import json, sys, time
 sys.path.insert(0, {repo!r})
 from pyspark.sql import functions as F
 from cyclegraph_spark.session import get_spark
-from cyclegraph_spark.operators.cc import connected_components
+from cyclegraph_spark.operators import cc
 from cyclegraph_spark.operators.linking import link_mentions
 from cyclegraph_spark.sources.pages import _name, alias_df, pages_with_text
 
@@ -85,17 +88,20 @@ chain = (
 )
 edges = hub.unionByName(chain).repartition({cores} * 4).localCheckpoint(eager=True)
 
-stats = {{}}
-t0 = time.time()
-labels = connected_components(edges, stats=stats)
-n_labeled = labels.count()
-n_comp = labels.select("component").distinct().count()
-out["cc"] = {{
-    "sec": round(time.time() - t0, 2),
-    "rounds": stats.get("rounds"),
-    "vertices": n_labeled,
-    "components": n_comp,
-}}
+out["cc"] = {{}}
+for bound in (cc._UF_MAX_EDGES, 0):
+    cc._UF_MAX_EDGES = bound
+    stats = {{}}
+    t0 = time.time()
+    labels = cc.connected_components(edges, stats=stats)
+    sec = round(time.time() - t0, 2)
+    out["cc"][f"bound_{{bound}}"] = {{
+        "sec": sec,
+        "rounds": stats["rounds"],
+        "edges": stats["edges"],
+        "vertices": labels.count(),
+        "components": labels.select("component").distinct().count(),
+    }}
 print(json.dumps(out))
 """
 
