@@ -173,7 +173,8 @@ def parse_shapes_ttl(text: str) -> list[NodeShape]:
 
 def _lexical_ok(obj: Column, datatype: str) -> Column:
     if datatype == _XSD + "integer":
-        return obj.rlike(r"^[+-]?[0-9]+$")
+        # \z, not $: $ also matches before a final newline ("12\n")
+        return obj.rlike(r"^[+-]?[0-9]+\z")
     if datatype in (_XSD + "float", _XSD + "double", _XSD + "decimal"):
         return obj.try_cast("double").isNotNull()
     if datatype == _XSD + "boolean":

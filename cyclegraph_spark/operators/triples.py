@@ -107,11 +107,16 @@ def _float_literal(raw: Column) -> Column:
 
 def _bool_literal(raw: Column) -> Column:
     """csv_to_rdf.py:45-54 — truthy/falsy sets, else keep RAW string
-    (rdflib would emit an ill-typed boolean literal; we preserve that)."""
-    low = F.lower(raw)
+    (rdflib would emit an ill-typed boolean literal; we preserve that).
+
+    The match is an ASCII case-insensitive regex anchored at both ends,
+    not ``lower(raw)``: the first case mapping in a JVM initializes ICU
+    (1.6–2.1 s per process), and no non-ASCII code point lowercases into
+    t/r/u/e/f/a/l/s, so the results are the same. ``\\z``, not ``$``,
+    which also matches before a final newline."""
     return (
-        F.when(low.isin("true", "1"), F.lit("true"))
-        .when(low.isin("false", "0"), F.lit("false"))
+        F.when(raw.rlike(r"^(?i:true|1)\z"), F.lit("true"))
+        .when(raw.rlike(r"^(?i:false|0)\z"), F.lit("false"))
         .otherwise(raw)
     )
 

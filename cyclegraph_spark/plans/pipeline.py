@@ -1,21 +1,46 @@
 """The flagship triple factory — end-to-end KG construction pipeline.
 
-pages(url, warc_ts, html, [text], lang)
-  → resume-prune (anti-filter completed source buckets — BEFORE the
-    expensive stages, so a resumed run re-reads only missing buckets)
-  → extract text        (vectorized pandas UDF)
-  → lift triples        (microdata/RDFa/JSON-LD islands parsed in a
-                         mapInArrow stage, P1 coercion)
-  → canonicalize        (sameAs connected components + rewrite + dedup;
-                         on a resume, stale store rows are remapped)
-  → link mentions       (n-gram candidates × broadcast alias dict)
-  → materialize         (bucketed parquet + manifest + lineage)
-  → SHACL validate      (SQL predicates over the whole store →
-                         violations table)
-  → node table          (derived from the whole store)
+The factory is a DAG, and ``run_pipeline`` runs its two independent
+branches side by side:
+
+    pages(url, warc_ts, html, [text], lang)
+      → resume-prune      (anti-filter completed source buckets BEFORE
+                           the expensive stages, so a resumed run
+                           re-reads only missing buckets)
+      → extract text      (vectorized pandas UDF; one eager checkpoint
+                           of html + text that both branches read)
+      ├─ main thread:  lift (mapInArrow over the html islands, P1
+      │                coercion) → CC over sameAs edges + prior labels
+      │                → recanonicalize stale store rows (resume only)
+      │                → write labels → canonicalize
+      └─ link thread:  link mentions (n-gram candidates × broadcast
+                       alias dict) → links write (dynamic overwrite)
+      ⋈ join 1: the link thread is joined before materialize, because
+        the manifest commit marks a bucket done only once every output
+        derived from it has landed
+      → materialize       (bucketed parquet + manifest commit + lineage)
+      ├─ pool thread:  SHACL validate over the whole store → violations
+      └─ main thread:  node table over the whole store → nodes
+      ⋈ join 2: both reports have landed before lineage is appended
+
+Linking reads only the page text and the alias table, so it depends on
+nothing the lift branch computes. Validate and nodes each read the
+committed store and write their own directory. Extract is not split
+per branch: both branches read its one checkpoint, so a generated
+corpus is produced once instead of once per branch.
+
+Threads come from one ``ThreadPoolExecutor`` whose size is the DAG's
+width (2). Its context manager waits for every branch, so none
+outlives a raise on the other; a branch's error surfaces through
+``Future.result()`` before the commit. Each task runs under
+``inheritable_thread_target(spark)``, so it inherits the caller's Spark
+local properties and session tags, and sets its own job group. Branches
+return their stage metrics; lineage rows keep one fixed stage order.
 
 Per-stage lineage rows mirror the reference's per-step duration logging
-(/root/reference/cli/session.py:338-352 ``_timed``).
+(/root/reference/cli/session.py:338-352 ``_timed``). Under overlap, a
+stage's ``sec`` is its own wall time, so the stage times add up to more
+than the run's.
 
 The pipeline is lazy end-to-end until materialize, apart from the
 checkpoints of pages, triples and the CC labels, each read by several
@@ -29,7 +54,9 @@ from __future__ import annotations
 
 import os
 import time
+from concurrent.futures import ThreadPoolExecutor
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -49,6 +76,9 @@ from cyclegraph_spark.plans.materialize import (
     write_labels,
     write_parquet,
 )
+
+# the factory DAG is two branches wide: lift ∥ link, then validate ∥ nodes
+_BRANCHES = 2
 
 
 def run_pipeline(
@@ -81,6 +111,57 @@ def run_pipeline(
         pages = pages.localCheckpoint(eager=True)
         metrics["extract"] = {"sec": round(time.time() - t0, 3)}
 
+    with ThreadPoolExecutor(_BRANCHES) as pool:
+        link = None
+        if aliases is not None:
+            link = pool.submit(inheritable_thread_target(spark)(_link), pages, aliases, out_dir)
+        canon, stages = _lift_and_canonicalize(spark, pages, out_dir, run_id, done, n_buckets)
+        metrics.update(stages)
+        if link is not None:
+            metrics["link"] = link.result()  # join 1: links land before the commit
+
+        # --- materialize canonical triples (manifest + lineage; bucket =
+        # provenance/url bucket so resume-prune and manifest ids agree).
+        # Commits the checkpoint manifest — completion marker for the run.
+        t0 = time.time()
+        res = materialize_triples(canon, out_dir, run_id)
+        metrics["materialize"] = {
+            "rows": res["rows"],
+            "sec": round(time.time() - t0, 3),
+            "written": res["written"],
+            "skipped": res["skipped"],
+        }
+
+        report = None
+        if shapes:
+            report = pool.submit(inheritable_thread_target(spark)(_validate), spark, out_dir, shapes)
+        nodes = _nodes(spark, out_dir, n_buckets)
+        if report is not None:
+            metrics["validate"] = report.result()  # join 2
+        metrics["nodes"] = nodes
+
+    append_lineage(
+        out_dir,
+        [
+            {"run_id": run_id, "stage": k, **{kk: vv for kk, vv in v.items() if kk != "written"}}
+            for k, v in metrics.items()
+        ],
+    )
+    return metrics
+
+
+def _lift_and_canonicalize(
+    spark: SparkSession,
+    pages: DataFrame,
+    out_dir: str,
+    run_id: str,
+    done: set[int],
+    n_buckets: int,
+) -> tuple[DataFrame, dict[str, dict]]:
+    """The main branch: lift, CC, the resume's store rewrite and the
+    labels write. Returns the canonical triples with ``part_id`` and the
+    metrics of the ``lift``, ``recanonicalize`` and ``cc`` stages."""
+    metrics: dict[str, dict] = {}
     # --- lift. Materialize ONCE (eager localCheckpoint): CC, canonicalize
     # and the store write all consume `triples`; without this the
     # extract+lift prefix would re-execute for each consumer (measured:
@@ -157,59 +238,41 @@ def run_pipeline(
         "edges": cc_stats["edges"],
         "converged": cc_stats["converged"],
     }
+    return canon, metrics
 
-    # --- link BEFORE the manifest commit, idempotently: links are
-    # partitioned by the same provenance bucket and written with DYNAMIC
-    # partition overwrite, so a crashed-then-resumed run rewrites exactly
-    # its buckets instead of double-appending. The checkpoint manifest
-    # (committed in materialize, below) is the LAST step — a bucket is
-    # only marked complete once every derived output for it has landed.
-    if aliases is not None:
-        t0 = time.time()
-        links = link_mentions(
-            pages.select("url", "text", "part_id"), aliases, key_cols=("url", "part_id")
-        ).select("url", "pos", "alias", "entity_id", "score", "part_id")
-        n = write_parquet(links, os.path.join(out_dir, "links"), by="part_id", dynamic=True)
-        metrics["link"] = {"rows": n, "sec": round(time.time() - t0, 3)}
 
-    # --- materialize canonical triples (manifest + lineage; bucket =
-    # provenance/url bucket so resume-prune and manifest ids agree).
-    # Commits the checkpoint manifest — completion marker for the run.
+def _link(pages: DataFrame, aliases: DataFrame, out_dir: str) -> dict:
+    """The link branch: best link per mention, written idempotently —
+    partitioned by the pages' provenance bucket with DYNAMIC partition
+    overwrite, so a crashed-then-resumed run rewrites exactly its
+    buckets instead of double-appending."""
     t0 = time.time()
-    res = materialize_triples(canon, out_dir, run_id)
-    metrics["materialize"] = {
-        "rows": res["rows"],
-        "sec": round(time.time() - t0, 3),
-        "written": res["written"],
-        "skipped": res["skipped"],
-    }
+    links = link_mentions(
+        pages.select("url", "text", "part_id"), aliases, key_cols=("url", "part_id")
+    ).select("url", "pos", "alias", "entity_id", "score", "part_id")
+    n = write_parquet(links, os.path.join(out_dir, "links"), by="part_id", dynamic=True)
+    return {"rows": n, "sec": round(time.time() - t0, 3)}
 
-    # --- validate (a REPORT over the whole materialized store: full
-    # recompute + overwrite each run, so it is idempotent by design and
-    # correct even for subjects whose triples span buckets)
-    if shapes:
-        t0 = time.time()
-        store = spark.read.parquet(os.path.join(out_dir, "data"))
-        report = validate(store, shapes)
-        n = write_parquet(report, os.path.join(out_dir, "violations"))
-        metrics["validate"] = {"rows": n, "sec": round(time.time() - t0, 3)}
 
-    # --- node table (north-rule companion artifact): derived wholly
-    # from the materialized store, full recompute + overwrite per run —
-    # idempotent by construction, same discipline as the validate report
+def _validate(spark: SparkSession, out_dir: str, shapes: list[NodeShape]) -> dict:
+    """SHACL violations: a REPORT over the whole materialized store —
+    full recompute + overwrite each run, so it is idempotent by design
+    and correct even for subjects whose triples span buckets."""
     t0 = time.time()
+    store = spark.read.parquet(os.path.join(out_dir, "data"))
+    n = write_parquet(validate(store, shapes), os.path.join(out_dir, "violations"))
+    return {"rows": n, "sec": round(time.time() - t0, 3)}
+
+
+def _nodes(spark: SparkSession, out_dir: str, n_buckets: int) -> dict:
+    """Node table (north-rule companion artifact): derived wholly from
+    the materialized store, full recompute + overwrite per run —
+    idempotent by construction, same discipline as the validate
+    report."""
     from cyclegraph_spark.operators.nodes import node_table
 
+    t0 = time.time()
     store = spark.read.parquet(os.path.join(out_dir, "data"))
     nodes = node_table(store).withColumn("bucket", bucket("id", n_buckets))
     n = write_parquet(nodes, os.path.join(out_dir, "nodes"), by="bucket")
-    metrics["nodes"] = {"rows": n, "sec": round(time.time() - t0, 3)}
-
-    append_lineage(
-        out_dir,
-        [
-            {"run_id": run_id, "stage": k, **{kk: vv for kk, vv in v.items() if kk != "written"}}
-            for k, v in metrics.items()
-        ],
-    )
-    return metrics
+    return {"rows": n, "sec": round(time.time() - t0, 3)}

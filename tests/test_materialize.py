@@ -367,3 +367,88 @@ def test_partial_resume_through_cc_matches_fresh_run(spark, tmp_path):
         for r in spark.read.parquet(out + "/labels").collect()
     }
     assert res_lab == fresh_lab
+
+
+def _stage_rows(out):
+    with open(os.path.join(out, "lineage.jsonl"), encoding="utf-8") as f:
+        return [r for r in map(json.loads, f) if "partition" not in r]
+
+
+def test_pipeline_lineage_order_is_fixed(spark, tmp_path):
+    """The link and validate branches run on a pool thread beside the
+    main branch, yet two identical fresh runs write the same stage rows,
+    one per stage, in one fixed order."""
+    shapes = [
+        NodeShape(
+            "ExerciseActionShape",
+            SCHEMA + "ExerciseAction",
+            [PropertyShape(SCHEMA + p, XSD_INT, 1, 1) for p in ("power", "heartRate")],
+        )
+    ]
+    aliases = alias_df(spark, 100)
+    pages = pages_df(spark, 120, n_entities=100, partitions=4)
+    order = ["extract", "lift", "cc", "link", "materialize", "validate", "nodes"]
+    runs = []
+    for name in ("a", "b"):
+        out = str(tmp_path / name)
+        m = run_pipeline(spark, pages, out, "r1", shapes=shapes, aliases=aliases, n_buckets=8)
+        assert list(m) == order
+        runs.append([(r["stage"], r.get("rows")) for r in _stage_rows(out)])
+    assert [s for s, _ in runs[0]] == order
+    assert runs[0] == runs[1]
+
+
+def test_failed_link_branch_commits_nothing(spark, tmp_path, monkeypatch):
+    """A link branch that raises fails the run before the manifest
+    commit and leaves no pool thread behind; a clean re-run then commits
+    the same buckets as a run that never failed. The crafted sameAs
+    chain makes the failed run rewrite stale store rows and persist new
+    labels before it fails."""
+    import threading
+
+    from cyclegraph_spark.plans import pipeline
+    from cyclegraph_spark.sources.pages import resume_chain_records
+
+    buckets = 8
+    aliases = alias_df(spark, 100)
+    crafted = spark.createDataFrame(
+        resume_chain_records(buckets), "url string, warc_ts long, html binary, lang string"
+    ).withColumn("warc_ts", F.timestamp_seconds("warc_ts"))
+    pages = pages_df(spark, 120, n_entities=100, partitions=4).unionByName(crafted)
+    half = pages.filter(bucket("url", buckets) < buckets // 2)
+
+    def run(out, run_id, pg):
+        return run_pipeline(spark, pg, out, run_id, aliases=aliases, n_buckets=buckets)
+
+    def partitions(out):
+        with open(os.path.join(out, "manifest.json"), encoding="utf-8") as f:
+            return json.load(f)["partitions"]
+
+    ref, out = str(tmp_path / "ref"), str(tmp_path / "out")
+    run(ref, "p1", half)
+    assert "recanonicalize" in run(ref, "p2", pages)
+
+    run(out, "p1", half)
+    before = partitions(out)
+
+    def broken_link(pages, aliases, key_cols):
+        return pages.select(
+            "url",
+            F.raise_error(F.lit("link branch failed")).cast("int").alias("pos"),
+            F.lit("a").alias("alias"),
+            F.lit("e").alias("entity_id"),
+            F.lit(1.0).alias("score"),
+            "part_id",
+        )
+
+    monkeypatch.setattr(pipeline, "link_mentions", broken_link)
+    threads = threading.active_count()
+    with pytest.raises(Exception, match="link branch failed"):
+        run(out, "p2", pages)
+    assert threading.active_count() == threads
+    assert partitions(out).keys() == before.keys()
+    assert {r["run_id"] for r in _stage_rows(out)} == {"p1"}
+
+    monkeypatch.undo()
+    run(out, "p2", pages)
+    assert partitions(out) == partitions(ref)

@@ -47,6 +47,17 @@ def test_lift_html_is_shuffle_free(spark):
     assert "Exchange" not in plan, plan  # narrow end-to-end
 
 
+def test_lift_html_has_no_case_mapping(spark):
+    """The first case mapping in a JVM initializes ICU (about 2 s per
+    process), so the lift's optimized plan calls none."""
+    from cyclegraph_spark.operators.triples import lift_html_pages
+    from cyclegraph_spark.sources.pages import pages_df
+
+    plan = lift_html_pages(pages_df(spark, 100))._jdf.queryExecution().optimizedPlan().toString()
+    for fn in ("lower(", "upper(", "initcap("):
+        assert fn not in plan, fn
+
+
 def test_last_n_orders_is_topk_not_full_sort(spark, queries):
     plan = _plan(queries["last_n_orders"](spark, SF_DIR))
     assert "TakeOrderedAndProject" in plan

@@ -179,3 +179,20 @@ def test_lifted_corpus_violations_shape(spark, shapes):
     # (different subjects), and integer-typed power → datatype violations
     assert "datatype" in kinds
     assert report.columns == ["focus_node", "path", "constraint", "message", "value"]
+
+
+def test_integer_lexical_parity(spark):
+    """xsd:integer's lexical check agrees with the oracle's fullmatch:
+    a trailing newline or a leading space is ill-typed, a sign is not."""
+    from cyclegraph_spark.operators.shacl import NodeShape, PropertyShape
+
+    shapes = [
+        NodeShape("S", SCHEMA + "ExerciseAction", [PropertyShape(SCHEMA + "power", XSD + "integer")])
+    ]
+    g = set()
+    for i, v in enumerate(["12\n", " 12", "+3", "12"]):
+        s = f"{EX}session{i}"
+        g.add((s, RDF_TYPE, SCHEMA + "ExerciseAction", "uri"))
+        g.add((s, SCHEMA + "power", v, XSD + "integer"))
+    got = _assert_parity(spark, g, shapes)
+    assert {r[3] for r in got} == {"12\n", " 12"}

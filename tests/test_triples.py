@@ -5,6 +5,8 @@ Gate from BASELINE.json: triple P/R >= 0.95 vs reference-emitted
 and the >=0.95 gate on the generated corpus.
 """
 
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import types as T
 
 from cyclegraph_spark.operators.triples import (
@@ -161,3 +163,45 @@ def test_anchored_finditer_matches_re_finditer():
             expect = [(m.span(), m.groups()) for m in pat.finditer(s)]
             got = [(m.span(), m.groups()) for m in fn(pat, s, needle)]
             assert got == expect, (s, needle)
+
+
+# boolean-cell values where matching by lower() and by an ASCII
+# case-insensitive regex could part ways: case, padding, a final newline,
+# code points whose case mappings reach ASCII (U+0130, the Kelvin sign)
+# and fullwidth letters
+BOOL_EDGE_VALUES = [
+    "true", "TRUE", "tRuE", "1", "01", "false", "FALSE", "0", " true", "true\n",
+    "", "truee", "\u0130", "\u212a", "\uff54\uff52\uff55\uff45", "fal\u017fe", None,
+]
+
+
+def _bool_parity(spark, values):
+    from pyspark.sql import functions as F
+
+    from cyclegraph_spark.operators.triples import _bool_literal
+
+    low = F.lower(F.col("raw"))
+    by_lower = (
+        F.when(low.isin("true", "1"), F.lit("true"))
+        .when(low.isin("false", "0"), F.lit("false"))
+        .otherwise(F.col("raw"))
+    )
+    df = spark.createDataFrame([(v,) for v in values], "raw string")
+    rows = df.select("raw", by_lower.alias("old"), _bool_literal(F.col("raw")).alias("new"))
+    bad = [(r.raw, r.old, r.new) for r in rows.collect() if r.old != r.new]
+    assert not bad, bad
+
+
+def test_bool_literal_matches_lower_on_edge_values(spark):
+    _bool_parity(spark, BOOL_EDGE_VALUES)
+
+
+@settings(max_examples=10, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(values=st.lists(
+    st.text(alphabet="tTrRuUeEfFaAlLsS01 \n\u0130\u212a\u017f\uff54", max_size=6)
+    | st.text(max_size=8),
+    min_size=1, max_size=30,
+))
+def test_bool_literal_matches_lower_property(spark, values):
+    _bool_parity(spark, values)
