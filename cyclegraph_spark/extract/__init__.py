@@ -1,3 +1,3 @@
-from cyclegraph_spark.extract.text import extract_text, extract_text_udf, with_extracted_text
+from cyclegraph_spark.extract.text import extract_text, extract_text_udf
 
-__all__ = ["extract_text", "extract_text_udf", "with_extracted_text"]
+__all__ = ["extract_text", "extract_text_udf"]

@@ -102,7 +102,3 @@ def extract_text_udf(html: pd.Series) -> pd.Series:
     """Vectorized twin of :func:`extract_text` (Arrow-batched)."""
     return html.map(extract_text)
 
-
-def with_extracted_text(df, html_col: str = "html", out_col: str = "text") -> "object":
-    """pages(url, warc_ts, html, ...) → + ``out_col`` extracted text."""
-    return df.withColumn(out_col, extract_text_udf(F.col(html_col)))

@@ -251,7 +251,7 @@ def a17_badges_v22(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# §2.8 — gap-based sessionization (batch twin of the stateful streaming op)
+# §2.8 — gap-based sessionization (operators/sessionize.py)
 # --------------------------------------------------------------------------
 @query(
     "w8_sessionize_gap",
@@ -288,13 +288,12 @@ def a17_badges_v22(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def w8_sessionize_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Inactivity-gap sessionization (gap = 6 h) over the events table —
-    the batch twin of streaming/sessionize.py's applyInPandasWithState
-    operator (closed-session parity asserted in
-    tests/test_streaming_sessionize.py). Reference semantics: session
-    boundaries by idle gap, /root/reference/cli/strava_import.py:289-313.
+    """Inactivity-gap sessionization (gap = 6 h) over the events table
+    (operators/sessionize.py; a pure-Python twin checks it in
+    tests/test_properties.py). Reference semantics: session boundaries by
+    idle gap, the reference's cli/strava_import.py:289-313.
     """
-    from cyclegraph_spark.streaming.sessionize import sessionize_batch
+    from cyclegraph_spark.operators.sessionize import sessionize_batch
 
     e = load(spark, sf_dir, "events")
     return (

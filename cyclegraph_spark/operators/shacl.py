@@ -171,12 +171,31 @@ def parse_shapes_ttl(text: str) -> list[NodeShape]:
 # Lexical validity per datatype (SHACL ill-typed literal detection)
 # --------------------------------------------------------------------------
 
+# Python float()'s grammar over ASCII (see _lexical_ok)
+_DIGITS = r"[0-9](?:_?[0-9])*"
+_WS = r"[\t\n\x0B\f\r ]*"
+_FLOAT_LEXICAL = (
+    rf"^{_WS}[+-]?(?:(?:{_DIGITS}(?:\.(?:{_DIGITS})?)?|\.{_DIGITS})"
+    rf"(?:[eE][+-]?{_DIGITS})?|(?i:inf|infinity|nan)){_WS}\z"
+)
+
+
 def _lexical_ok(obj: Column, datatype: str) -> Column:
+    """Whether ``obj`` is a valid lexical form of ``datatype``, as
+    ``reference_validate`` decides it.
+
+    xsd:float, xsd:double and xsd:decimal follow Python ``float()`` over
+    ASCII: optional surrounding whitespace and sign, digit groups joined
+    by single ``_``, an optional point and exponent, or inf/infinity/nan
+    in any case. A cast to double is not the same test: it accepts
+    ``1.5d``, ``1.5f`` and ``0x1p3`` and rejects ``1_000``. Non-ASCII
+    digits, which ``float()`` also parses (``"١٢"``), are ill-typed here.
+    """
     if datatype == _XSD + "integer":
         # \z, not $: $ also matches before a final newline ("12\n")
         return obj.rlike(r"^[+-]?[0-9]+\z")
     if datatype in (_XSD + "float", _XSD + "double", _XSD + "decimal"):
-        return obj.try_cast("double").isNotNull()
+        return obj.rlike(_FLOAT_LEXICAL)
     if datatype == _XSD + "boolean":
         return obj.isin("true", "false", "1", "0")
     return F.lit(True)

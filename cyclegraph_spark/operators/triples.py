@@ -378,9 +378,21 @@ def _parse_pages_arrow(batches):
         )
 
 
-def _coerce_raw_triples(raw: DataFrame) -> DataFrame:
-    """(src, subj, pred, raw, kind) → typed (src, subj, pred, obj,
-    obj_dtype)."""
+def lift_html_pages(pages: DataFrame, url_col: str = "url") -> DataFrame:
+    """pages(url, html, ...) → triples(src, subj, pred, obj, obj_dtype).
+
+    Stage shape: scan → mapInArrow parse (flat triple rows out) →
+    column coercion. Narrow end-to-end (no shuffle, no explode); scales
+    linearly with input splits. The explicit two-column select before
+    mapInArrow is the guide-§4 column-pruning discipline: Spark cannot
+    see which columns an opaque function touches, so without it every
+    page column would be read and shipped to Python. The parse emits
+    (src, subj, pred, raw, kind); the coercion types ``raw`` into
+    (obj, obj_dtype).
+    """
+    raw = pages.select(F.col(url_col).alias("src"), "html").mapInArrow(
+        _parse_pages_arrow, _RAW_TRIPLE_FIELDS
+    )
     # substring-after-last-'/' without the regex split + array alloc of
     # element_at(split(...)) — same value for every input (split("/")[-1]
     # IS the text after the last '/', or the whole string when absent)
@@ -403,22 +415,6 @@ def _coerce_raw_triples(raw: DataFrame) -> DataFrame:
         .filter(F.col("obj").isNotNull())
         .select("src", "subj", "pred", "obj", "obj_dtype")
     )
-
-
-def lift_html_pages(pages: DataFrame, url_col: str = "url") -> DataFrame:
-    """pages(url, html, ...) → triples(src, subj, pred, obj, obj_dtype).
-
-    Stage shape: scan → mapInArrow parse (flat triple rows out) →
-    column coercion. Narrow end-to-end (no shuffle, no explode); scales
-    linearly with input splits. The explicit two-column select before
-    mapInArrow is the guide-§4 column-pruning discipline: Spark cannot
-    see which columns an opaque function touches, so without it every
-    page column would be read and shipped to Python.
-    """
-    raw = pages.select(F.col(url_col).alias("src"), "html").mapInArrow(
-        _parse_pages_arrow, _RAW_TRIPLE_FIELDS
-    )
-    return _coerce_raw_triples(raw)
 
 
 # --------------------------------------------------------------------------

@@ -1,100 +1,4 @@
-"""Multimodal plumbing + streaming/incremental idioms."""
-
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-from cyclegraph_spark.operators.multimodal import (
-    FEATURE_DIM,
-    extract_features,
-    frame_sample_plan,
-    synthetic_media,
-)
-from cyclegraph_spark.streaming.incremental import (
-    HighWatermark,
-    advance_watermark,
-    incremental_read,
-    windowed_event_counts,
-)
-
-
-def test_media_features_deterministic(spark):
-    media = synthetic_media(spark, 60)
-    f1 = {r.media_id: (r.sha256, tuple(r.features)) for r in extract_features(media).collect()}
-    f2 = {
-        r.media_id: (r.sha256, tuple(r.features))
-        for r in extract_features(synthetic_media(spark, 60).repartition(7)).collect()
-    }
-    assert f1 == f2
-    assert all(len(v[1]) == FEATURE_DIM for v in f1.values())
-    assert all(v[0] != "" for v in f1.values())
-
-
-def test_media_metadata_prunes_blob(spark, tmp_path):
-    """A metadata-only query over the media table must not read the blob
-    column (ReadSchema excludes `content`)."""
-    p = str(tmp_path / "media")
-    synthetic_media(spark, 30).write.parquet(p)
-    q = spark.read.parquet(p).filter(F.col("kind") == "image").select("media_id", "meta.width")
-    plan = q._jdf.queryExecution().executedPlan().toString()
-    assert "content" not in plan, plan
-
-
-def test_frame_sample_plan(spark):
-    media = synthetic_media(spark, 30)
-    frames = frame_sample_plan(media, every_ms=500).collect()
-    assert len(frames) > 0
-    assert all(r.ts_ms % 500 == 0 for r in frames)
-    # only videos are sampled
-    vids = {r.media_id for r in media.filter("kind = 'video'").collect()}
-    assert {r.media_id for r in frames} <= vids
-
-
-def test_high_watermark_resume(spark, tmp_path):
-    state = HighWatermark(str(tmp_path / "wm.json"))
-    src = "/root/testdata/sf0.001/events.parquet"
-    first = incremental_read(spark, src, state)
-    n1 = advance_watermark(first, state)
-    assert n1 == 1000
-    # second run: nothing new
-    second = incremental_read(spark, src, state)
-    assert advance_watermark(second, state) == 0
-    # pushdown visible in the plan
-    plan = incremental_read(spark, src, state)._jdf.queryExecution().executedPlan().toString()
-    assert "PushedFilters" in plan and "ts" in plan
-
-
-def test_structured_streaming_windowed_counts(spark, tmp_path):
-    # testdata ts is TIMESTAMP_NTZ; event-time watermarks need TIMESTAMP
-    events = spark.read.parquet("/root/testdata/sf0.001/events.parquet").withColumn(
-        "ts", F.col("ts").cast("timestamp")
-    )
-    stream_dir = str(tmp_path / "stream_src")
-    events.write.parquet(stream_dir)
-    stream = (
-        spark.readStream.schema(events.schema).parquet(stream_dir)
-    )
-    agg = windowed_event_counts(stream, window="1 hour", watermark="2 hours")
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("win_counts")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        rows = spark.sql("SELECT * FROM win_counts").collect()
-    finally:
-        q.stop()
-    assert len(rows) > 0
-    total = sum(r.n for r in rows)
-    assert total == 1000
-    # batch oracle: same aggregation without the stream
-    batch = (
-        events.groupBy(F.window("ts", "1 hour"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .count()
-    )
-    assert len(rows) == batch
+"""The triple lift under Structured Streaming."""
 
 
 def test_streaming_triple_lift_matches_batch(spark, tmp_path):

@@ -75,15 +75,6 @@ def test_semi_join_plans_as_semi(spark, queries):
     assert "LeftSemi" in plan
 
 
-def test_incremental_read_prunes_on_watermark(spark, tmp_path):
-    from cyclegraph_spark.streaming.incremental import HighWatermark, incremental_read
-
-    wm = HighWatermark(str(tmp_path / "wm.json"))
-    wm.write("2024-01-15 00:00:00")
-    plan = _plan(incremental_read(spark, f"{SF_DIR}/events.parquet", wm))
-    assert "PushedFilters" in plan and "GreaterThan(ts" in plan
-
-
 def test_whole_stage_codegen_covers_metric_block(spark):
     """The metric aggregation must run inside WholeStageCodegen spans
     (no interpreted row-at-a-time fallback in the hot path)."""

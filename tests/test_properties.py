@@ -108,7 +108,7 @@ def test_sessionize_batch_matches_twin(spark, data, gap_s):
         for u, s, us, v in data
     ]
     df = spark.createDataFrame(rows, "user_id long, ts timestamp, value double")
-    from cyclegraph_spark.streaming.sessionize import sessionize_batch
+    from cyclegraph_spark.operators.sessionize import sessionize_batch
 
     got = {
         (

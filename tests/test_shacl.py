@@ -12,6 +12,9 @@ from pathlib import Path
 
 import pytest
 from conftest import reference_path
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from cyclegraph_spark.operators.shacl import (
@@ -196,3 +199,67 @@ def test_integer_lexical_parity(spark):
         g.add((s, SCHEMA + "power", v, XSD + "integer"))
     got = _assert_parity(spark, g, shapes)
     assert {r[3] for r in got} == {"12\n", " 12"}
+
+
+FLOAT_EDGE_VALUES = [
+    "1.5", "-2", "+.5e-0", "5.", ".5", "1e5", "1E+5", "1.5e-3",
+    "1.5d", "1.5D", "1.5f", "1.5F", "0x1p3", "1,5", "--1",
+    "1_000", "1_000.5_5e1_0", "1__000", "_1", "1_", "1_.5", "1._5", "1e_5",
+    "inf", "-Infinity", "+nan", "NaN", "iNfInItY", "infinit", "nanx",
+    " 1.5\n", "\t-2\r", "\x0b3\x0c", "\x1c1", "1\x00",
+    ".", "", " ", "1e", "e5",
+]
+FLOAT_TOKENS = ["1", "02", "_", ".", "e", "E", "-", "+", " ", "\n", "d", "F", "0x", "p",
+                "inf", "Infinity", "nan", "\x0b"]
+
+
+def _float_ok(v):
+    try:
+        float(v)
+        return True
+    except ValueError:
+        return False
+
+
+def _float_parity(spark, values):
+    """Spark's lexical check for xsd:double against Python ``float()``."""
+    from cyclegraph_spark.operators.shacl import _lexical_ok
+
+    df = spark.createDataFrame([(v,) for v in values], "obj string")
+    rows = df.select("obj", _lexical_ok(F.col("obj"), XSD + "double").alias("ok"))
+    bad = [(r.obj, r.ok) for r in rows.collect() if r.ok != _float_ok(r.obj)]
+    assert not bad, bad
+
+
+def test_float_lexical_parity_on_edge_values(spark):
+    """xsd:float/double/decimal literals are well-typed exactly when
+    ``float()`` parses them: a cast to double would accept ``1.5d`` and
+    ``0x1p3`` and reject ``1_000``. Non-ASCII digits are out of scope:
+    ``float()`` parses them, the Spark check does not."""
+    from cyclegraph_spark.operators.shacl import NodeShape, PropertyShape
+
+    _float_parity(spark, FLOAT_EDGE_VALUES)
+    dts = [XSD + dt for dt in ("float", "double", "decimal")]
+    shapes = [
+        NodeShape("S", SCHEMA + "ExerciseAction", [PropertyShape(dt, dt) for dt in dts])
+    ]
+    g = set()
+    for i, v in enumerate(FLOAT_EDGE_VALUES):
+        s = f"{EX}session{i}"
+        g.add((s, RDF_TYPE, SCHEMA + "ExerciseAction", "uri"))
+        for dt in dts:
+            g.add((s, dt, v, dt))
+    got = _assert_parity(spark, g, shapes)
+    ill = {r[3] for r in got}
+    assert "1.5d" in ill and "0x1p3" in ill and "1_000" not in ill
+
+
+@settings(max_examples=20, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(values=st.lists(
+    st.lists(st.sampled_from(FLOAT_TOKENS), max_size=6).map("".join)
+    | st.text(alphabet="0123_.eE+- \t\nxpdDfFinatyIN", max_size=8),
+    min_size=1, max_size=40,
+))
+def test_float_lexical_parity_property(spark, values):
+    _float_parity(spark, values)
