@@ -6,8 +6,7 @@ Layout
 ------
 - ``session``     : tuned SparkSession factory (AQE, Arrow, UTC).
 - ``tables``      : testdata loaders.
-- ``sources``     : synthetic pages corpus generator (Iceberg-style layout),
-                    tolerant CSV session source.
+- ``sources``     : synthetic pages corpus generator (Iceberg-style layout).
 - ``extract``     : deterministic HTML→text extractor (pure-Python oracle
                     + vectorized pandas-UDF twin; byte-identical per url).
 - ``operators``   : triple lifting, SHACL-as-SQL validation, entity linking,

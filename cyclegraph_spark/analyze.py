@@ -1,70 +1,13 @@
-"""High-level session analysis — the reference CLI's main entry point
-(`python -m cli.analyze session`, SURVEY.md §3.1) as one DataFrame plan.
-
-Pipeline (mirrors cli/session.py:1651-2065 / core lib.rs:60-97):
-  samples (normalized; sources/csv_sessions.py for CSV input)
-  → mode detection per activity:
-      power stream present → full metric block
-      no power, GPS+speed present → physics-modeled watts (P6)
-      hr-only → LIMITED: ok=false, reason="no_power_stream"
-        (core/src/lib.rs:75-81)
-  → FTP resolve: explicit → auto best-20-min × 0.95 (W3) → default
-    (session.py:1794-1802)
-  → session metric block (metrics.py; NP/IF/VI/PaHr/WpB/PrecisionWatt,
-    status, round-2)
-  → report contract: schema_version 0.7.0, required fields
-    (docs/schema.md:10-11), calibrated/reason rule (P16).
-
-Output: one report row per activity with the reference's required
-fields: session_id, duration_s, samples, avg_power, np, if_, vi, pa_hr,
-w_per_beat, precision_watt, calibrated, status, schema_version (+ ok,
-reason; the wind_rel/v_rel SERIES live in the per-sample frame returned
-alongside, not collapsed into the report — at scale series stay
-relational, the reference's JSON arrays are a single-node artifact).
+"""Hourly weather as an as-of join — the reference's nearest-record
+lookup (cli/weather_metrics.py:64-148) as a distributed join of session
+anchors against an hourly weather table. Registry query
+``j2_weather_context`` uses it.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import Window
-
-from cyclegraph_spark.functions.physics import with_power_model
-from cyclegraph_spark.functions.report import SCHEMA_VERSION
-from cyclegraph_spark.operators.metrics import session_metrics
-
-DEFAULT_FTP = 250.0
-
-
-def resolve_ftp(samples: DataFrame, act: str = "activity_id") -> DataFrame:
-    """FTP per activity: best 20-min avg power × 0.95 (W3).
-
-    Window-acceptance floor (reference cli/analyze.py:233-236, duplicated
-    cli/session.py:624-630): a window only counts when its actual span
-    t_right − min(t in frame) + 1 ≥ 1195 s. Short sessions (and warm-up
-    frames of long sessions) never qualify; the reference then returns
-    best_avg = 0.0, which is falsy → explicit/default fallback. Here:
-    ftp_auto is NULL when no window qualifies OR the best average is 0 —
-    callers coalesce with explicit/default, reproducing that fallback.
-    """
-    w = (
-        Window.partitionBy(act)
-        .orderBy(F.col("t"))
-        .rangeBetween(-1199, 0)
-    )
-    rolled = samples.select(
-        act,
-        F.avg(F.coalesce(F.col("watts"), F.lit(0.0))).over(w).alias("wavg"),
-        (F.col("t") - F.min("t").over(w) + 1 >= 1195).alias("accepted"),
-    )
-    best = rolled.groupBy(act).agg(
-        (F.max(F.when(F.col("accepted"), F.col("wavg"))) * 0.95).alias("ftp_auto")
-    )
-    # best_avg == 0.0 is falsy in the reference → treat as "no estimate"
-    return best.withColumn(
-        "ftp_auto", F.when(F.col("ftp_auto") > 0, F.col("ftp_auto"))
-    )
-
 
 WEATHER_COLS = ("wind_ms", "wind_dir_deg", "air_temp_c", "air_pressure_hpa")
 
@@ -127,189 +70,4 @@ def weather_asof(
     )
     return in_range.unionByName(clamped).select(
         act, *[F.col(f"_wx.{c}").alias(c) for c in WEATHER_COLS]
-    )
-
-
-def analyze_sessions(
-    samples: DataFrame,
-    act: str = "activity_id",
-    ftp: float | None = None,
-    weather: dict | None = None,
-    profile: dict | None = None,
-    weather_df: DataFrame | None = None,
-) -> DataFrame:
-    """samples(activity_id, t, watts?, hr?, v_ms?, altitude?, latitude?,
-    longitude?, moving?) → report rows (see module docstring).
-
-    ``weather``: {wind_ms, wind_dir_deg(TO), air_temp_c, air_pressure_hpa}
-    session-level dict (the broadcast dimension J5 idiom).
-    ``weather_df``: hourly weather DIMENSION table (t_w, *WEATHER_COLS) —
-    each activity gets the record nearest its start time (the reference's
-    hourly-array nearest-record join, cli/weather_metrics.py:83-148),
-    joined per activity and fed to the power model as columns. Takes
-    precedence over ``weather``; the dict/defaults fill activities only
-    when the table is empty.
-    ``profile``: {mass, crr, cda} overrides.
-    """
-    prof = {"mass": 75.0, "crr": 0.005, "cda": 0.30, **(profile or {})}
-    wx = {
-        "wind_ms": 0.0,
-        "wind_dir_deg": 0.0,
-        "air_temp_c": 15.0,
-        "air_pressure_hpa": 1013.25,
-        **(weather or {}),
-    }
-    cols = set(samples.columns)
-    for optional in ("watts", "hr", "v_ms", "altitude", "latitude", "longitude"):
-        if optional not in cols:
-            samples = samples.withColumn(optional, F.lit(None).cast("double"))
-
-    wx_args: dict[str, object] = dict(wx)
-    if weather_df is not None:
-        anchors = samples.groupBy(act).agg(F.min("t").alias("t"))
-        ctx = weather_asof(anchors, weather_df, act=act)
-        samples = samples.join(
-            ctx.select(
-                act, *[F.col(c).alias(f"_wx_{c}") for c in WEATHER_COLS]
-            ),
-            act,
-            "left",
-        )
-        wx_args = {
-            c: F.coalesce(F.col(f"_wx_{c}"), F.lit(float(wx[c])))
-            for c in WEATHER_COLS
-        }
-
-    # per-activity mode flags
-    modes = samples.groupBy(act).agg(
-        (F.count("watts") > 0).alias("has_power"),
-        (F.count("v_ms") > 0).alias("has_speed"),
-        F.count(F.lit(1)).alias("n_rows"),
-    )
-
-    # physics-modeled watts for speed-only activities (P6/P18)
-    modeled = with_power_model(
-        samples.withColumn("altitude_m", F.coalesce(F.col("altitude"), F.lit(0.0)))
-        .withColumn("v_ms", F.coalesce(F.col("v_ms"), F.lit(0.0))),
-        act=act,
-        mass=prof["mass"],
-        crr=prof["crr"],
-        cda=prof["cda"],
-        wind_ms=wx_args["wind_ms"],
-        wind_to_deg=wx_args["wind_dir_deg"],
-        air_temp_c=wx_args["air_temp_c"],
-        air_pressure_hpa=wx_args["air_pressure_hpa"],
-    ).select(
-        act, "t", "hr", "watts", "v_ms", "power", "wind_rel", "v_rel",
-        "p_aero", "p_roll",
-    )
-
-    enriched = modeled.join(modes, act, "left").withColumn(
-        "watts_eff",
-        F.when(F.col("has_power"), F.col("watts"))
-        .when(F.col("has_speed"), F.col("power"))
-        .otherwise(F.lit(None).cast("double")),
-    )
-
-    analyzable = enriched.filter(F.col("has_power") | F.col("has_speed"))
-    from cyclegraph_spark.operators.metrics import session_metrics_auto
-
-    metrics = session_metrics_auto(
-        analyzable.select(act, "t", F.col("watts_eff").alias("watts"), "hr"),
-        act=act,
-    )
-    ftp_df = resolve_ftp(
-        analyzable.select(act, "t", F.col("watts_eff").alias("watts"))
-    )
-    duration = samples.groupBy(act).agg(
-        (F.max("t") - F.min("t") + 1).alias("duration_s")
-    )
-    # P7 decomposition: session-average drag/rolling watts (T11 fields)
-    components = analyzable.groupBy(act).agg(
-        F.round(F.avg("p_aero"), 4).alias("drag_watt"),
-        F.round(F.avg("p_roll"), 4).alias("rolling_watt"),
-    )
-
-    report = (
-        metrics.join(ftp_df, act, "left")
-        .join(duration, act, "left")
-        .join(components, act, "left")
-        .withColumn(
-            "ftp", F.coalesce(F.lit(ftp).cast("double"), F.col("ftp_auto"), F.lit(DEFAULT_FTP))
-        )
-        .withColumn("if_", F.round(F.col("np") / F.col("ftp"), 3))
-        .select(
-            F.col(act).alias("session_id"),
-            "duration_s",
-            F.col("n_samples").alias("samples"),
-            "avg_power",
-            "np",
-            "if_",
-            "vi",
-            "pa_hr",
-            "w_per_beat",
-            "precision_watt",
-            F.lit(False).alias("calibrated"),
-            "status",
-            F.lit(True).alias("ok"),
-            F.lit("calibration_context_missing").alias("reason"),
-            F.lit(SCHEMA_VERSION).alias("schema_version"),
-            "drag_watt",
-            "rolling_watt",
-        )
-    )
-
-    # LIMITED mode rows: hr-only activities (lib.rs:75-81)
-    limited = (
-        modes.filter(~F.col("has_power") & ~F.col("has_speed"))
-        .join(duration, act, "left")
-        .select(
-            F.col(act).alias("session_id"),
-            "duration_s",
-            F.col("n_rows").alias("samples"),
-            *[F.lit(None).cast("double").alias(c) for c in (
-                "avg_power", "np", "if_", "vi", "pa_hr", "w_per_beat", "precision_watt"
-            )],
-            F.lit(False).alias("calibrated"),
-            F.lit("LIMITED").alias("status"),
-            F.lit(False).alias("ok"),
-            F.lit("no_power_stream").alias("reason"),
-            F.lit(SCHEMA_VERSION).alias("schema_version"),
-            F.lit(None).cast("double").alias("drag_watt"),
-            F.lit(None).cast("double").alias("rolling_watt"),
-        )
-    )
-    return report.unionByName(limited)
-
-
-def per_sample_series(
-    samples: DataFrame,
-    act: str = "activity_id",
-    weather: dict | None = None,
-    profile: dict | None = None,
-) -> DataFrame:
-    """The watts/wind_rel/v_rel SERIES (report arrays in the reference,
-    session.py:430-433) as a relational frame — series invariants like
-    ``v_rel >= v - wind_rel`` are testable per row."""
-    prof = {"mass": 75.0, "crr": 0.005, "cda": 0.30, **(profile or {})}
-    wx = {
-        "wind_ms": 0.0,
-        "wind_dir_deg": 0.0,
-        "air_temp_c": 15.0,
-        "air_pressure_hpa": 1013.25,
-        **(weather or {}),
-    }
-    base = samples
-    if "altitude_m" not in base.columns:
-        base = base.withColumn("altitude_m", F.coalesce(F.col("altitude"), F.lit(0.0)))
-    return with_power_model(
-        base,
-        act=act,
-        mass=prof["mass"],
-        crr=prof["crr"],
-        cda=prof["cda"],
-        wind_ms=wx["wind_ms"],
-        wind_to_deg=wx["wind_dir_deg"],
-        air_temp_c=wx["air_temp_c"],
-        air_pressure_hpa=wx["air_pressure_hpa"],
     )

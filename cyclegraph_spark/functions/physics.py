@@ -1,31 +1,18 @@
-"""Physics column library — per-sample transforms P5-P12 as pure Column
-math over ordered windows (no UDF anywhere).
+"""Physics column helpers — the wind and air-density terms of the
+reference's power model (P5, P12) as pure Column math (no UDF).
+Registry query ``physics_wind_density`` uses them.
 
 Semantics transplanted (cited):
-- wrap360 / deg→rad        /root/reference/core/src/physics.rs:7-18
+- wrap360 / deg→rad        reference core/src/physics.rs:7-18
 - wind TO-convention projection, v_rel = max(v − wind_along, 0.1)
                            physics.rs:266-282 (loop), :52-77 (helpers)
 - air density: barometric station pressure from MSLP, ρ = p/(R·T),
   clamp [0.6, 1.4]         physics.rs:84-103
-- 3-point median altitude smoothing, edge-replicated
-                           /root/reference/core/src/smoothing.rs:5-31
-- centered ±2 gravity window: dh over [i−2, i+2] ÷ Σdt (dt clamped
-  ≥0.01), p_g = m·g·dh/dt  physics.rs:108-148
-- great-circle initial bearing  /root/reference/core/src/models.rs:124-144
-- power model: p = p_roll + p_aero + p_grav⁺ + p_acc⁺ with
-  v_mid = (v+v_prev)/2, a = (v−v_prev)/dt, dt = max(|Δt|, 1e-3)
-  (first row: dt=1, v_prev=v), clamp p to finite ≥0
-                           physics.rs:247-290
-- indoor power: device_watts passthrough else ½ρCdA·v³ + mgCrr·v
-                           physics.rs:305-322
-
-All windows are per-activity orderBy(t) — one shuffle per pipeline, all
-transforms fused into whole-stage codegen afterwards.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 G = 9.80665
@@ -35,28 +22,6 @@ LAPSE = 0.0065
 
 def wrap360(x: Column) -> Column:
     return F.pmod(x, F.lit(360.0))
-
-
-def median3(a: Column, b: Column, c: Column) -> Column:
-    """Median of three without sorting: max(min(a,b), min(max(a,b), c))."""
-    return F.greatest(F.least(a, b), F.least(F.greatest(a, b), c))
-
-
-def smooth_altitude(alt: Column, w: Window) -> Column:
-    """P10 (smoothing.rs): 3-point running median, edge-replicated."""
-    prev = F.coalesce(F.lag(alt, 1).over(w), alt)
-    nxt = F.coalesce(F.lead(alt, 1).over(w), alt)
-    return median3(prev, alt, nxt)
-
-
-def bearing_deg(lat1: Column, lon1: Column, lat2: Column, lon2: Column) -> Column:
-    """P11 (models.rs:124-144): great-circle initial azimuth, [0, 360)."""
-    phi1, phi2 = F.radians(lat1), F.radians(lat2)
-    dlam = F.radians(lon2 - lon1)
-    y = F.sin(dlam) * F.cos(phi2)
-    x = F.cos(phi1) * F.sin(phi2) - F.sin(phi1) * F.cos(phi2) * F.cos(dlam)
-    theta = F.degrees(F.atan2(y, x))
-    return F.when(theta < 0, theta + 360.0).otherwise(theta)
 
 
 def air_density(air_temp_c: Column, air_pressure_hpa: Column, altitude_m: Column) -> Column:
@@ -80,260 +45,3 @@ def wind_along(heading_deg: Column, wind_to_deg: Column, wind_ms: Column) -> Col
 def v_rel(v_ms: Column, heading_deg: Column, wind_to_deg: Column, wind_ms: Column) -> Column:
     """physics.rs:280: relative air speed, floored at 0.1."""
     return F.greatest(v_ms - wind_along(heading_deg, wind_to_deg, wind_ms), F.lit(0.1))
-
-
-def with_power_model(
-    samples: DataFrame,
-    act: str = "activity_id",
-    t: str = "t",
-    mass: float = 75.0,
-    crr: float = 0.005,
-    cda: float = 0.30,
-    wind_ms: float | Column = 0.0,
-    wind_to_deg: float | Column = 0.0,
-    air_temp_c: float | Column = 15.0,
-    air_pressure_hpa: float | Column = 1013.25,
-) -> DataFrame:
-    """P6/P9/P10/P11 composed: samples(activity_id, t, v_ms, altitude_m,
-    latitude?, longitude?, heading_deg?) → + power, wind_rel, v_rel.
-
-    One window pass per activity; rho uses the per-activity median-ish
-    representative altitude (the middle element of the smoothed series,
-    physics.rs:229-236 — we use the exact median, documented deviation:
-    same robustness intent, deterministic under distribution).
-    """
-    # weather inputs accept a per-row Column (the hourly-dimension as-of
-    # path, analyze.weather_asof) or a session-level scalar (J5 idiom)
-    def _wx(x):
-        return x if isinstance(x, Column) else F.lit(float(x))
-
-    wind_ms, wind_to_deg = _wx(wind_ms), _wx(wind_to_deg)
-    air_temp_c, air_pressure_hpa = _wx(air_temp_c), _wx(air_pressure_hpa)
-
-    w = Window.partitionBy(act).orderBy(t)
-    cols = set(samples.columns)
-    df = samples
-
-    if "heading_deg" not in cols:
-        df = df.withColumn("heading_deg", F.lit(None).cast("double"))
-    if "latitude" in cols and "longitude" in cols:
-        nxt_lat, nxt_lon = F.lead("latitude").over(w), F.lead("longitude").over(w)
-        prv_lat, prv_lon = F.lag("latitude").over(w), F.lag("longitude").over(w)
-        computed = F.coalesce(
-            bearing_deg(F.col("latitude"), F.col("longitude"), nxt_lat, nxt_lon),
-            bearing_deg(prv_lat, prv_lon, F.col("latitude"), F.col("longitude")),
-            F.lit(0.0),
-        )
-    else:
-        computed = F.lit(0.0)
-    df = df.withColumn("_heading", F.coalesce(F.col("heading_deg"), computed))
-
-    # P10 smoothing + P9 gravity (±2 centered window over smoothed alt).
-    # NB: F.greatest IGNORES nulls (returns the non-null max), so lag
-    # nulls at partition start must be handled with explicit when()s.
-    lag_t = F.lag(t).over(w)
-    df = df.withColumn("_alt_s", smooth_altitude(F.col("altitude_m"), w))
-    df = df.withColumn(
-        "_dt_step",
-        F.when(lag_t.isNull(), 1.0).otherwise(
-            F.greatest(F.abs(F.col(t) - lag_t), F.lit(0.01))
-        ),
-    )
-    w22 = w.rowsBetween(-2, 2)
-    # dh over [i-2, i+2]; Σdt over (prev_i, next_i] = sum of steps in frame
-    # excluding the first row's own step — reference sums dt_series[prev_i..=next_i]
-    # where dt_series[j] is the step ENDING at j+1; equivalent to the sum of
-    # steps inside the window plus the step entering it. We mirror with the
-    # frame sum of per-row steps (asserted vs the Python twin in tests).
-    dh = F.last("_alt_s").over(w22) - F.first("_alt_s").over(w22)
-    dt_sum = F.greatest(F.sum("_dt_step").over(w22), F.lit(0.01))
-    df = df.withColumn("_p_grav", mass * G * (dh / dt_sum))
-
-    # representative altitude per activity → rho (broadcast back via window)
-    alt_mid = F.percentile("_alt_s", 0.5).over(Window.partitionBy(act))
-    rho = air_density(air_temp_c, air_pressure_hpa, alt_mid)
-
-    v = F.greatest(F.col("v_ms"), F.lit(0.0))
-    lag_v = F.lag("v_ms").over(w)
-    v_prev = F.when(lag_v.isNull(), v).otherwise(F.greatest(lag_v, F.lit(0.0)))
-    dt_p = F.when(lag_t.isNull(), 1.0).otherwise(
-        F.greatest(F.abs(F.col(t) - lag_t), F.lit(1e-3))
-    )
-    v_mid = 0.5 * (v + v_prev)
-    a = (v - v_prev) / dt_p
-
-    walong = wind_along(F.col("_heading"), wind_to_deg, wind_ms)
-    vr = F.greatest(v - walong, F.lit(0.1))
-
-    p_roll = mass * G * crr * v_mid
-    p_aero = 0.5 * rho * cda * F.pow(vr, 3)
-    p_grav = F.greatest(F.col("_p_grav"), F.lit(0.0))
-    p_acc = F.greatest(mass * a * v_mid, F.lit(0.0))
-    p = p_roll + p_aero + p_grav + p_acc
-    p = F.when(p.isNotNull() & ~F.isnan(p), F.greatest(p, F.lit(0.0))).otherwise(0.0)
-
-    return (
-        df.withColumn("power", p)
-        .withColumn("wind_rel", walong)
-        .withColumn("v_rel", vr)
-        # component series (P7 drag/rolling decomposition) — consumed by
-        # the T11 matrix and calibration diagnostics
-        .withColumn("p_aero", p_aero)
-        .withColumn("p_roll", p_roll)
-        .drop("_heading", "_alt_s", "_dt_step", "_p_grav")
-    )
-
-
-_TIRE_UNKNOWN = ("ukjent", "unknown", "vanlig", "standard", "normal", "default")
-_TIRE_TRAINING = (
-    "trening", "training", "trainer", "durable", "commuter", "winter",
-    "allseason", "puncture", "armour", "armored", "armoured", "gatorskin",
-    "marathon", "robust",
-)
-_TIRE_RACE = (
-    "race", "racing", "tt", "chrono", "fast", "supersonic", "cotton",
-    "latex", "tlr", "tubeless", "gp5000", "pro one", "corsa",
-)
-
-
-def crr_for_tire_quality(tire_quality: Column, base_crr: Column | float = 0.005) -> Column:
-    """§2.7 keyword classification (physics.rs:446-507): substring
-    keyword table → Crr adjustment, clamped [0.0025, 0.0120].
-
-    unknown/vanlig forms → base; training keywords → +0.0004;
-    race keywords → −0.0003; "cheap" → +0.0003. Precedence matches the
-    reference: unknown first, then training, then race, then cheap.
-    """
-    crr = F.lit(base_crr) if isinstance(base_crr, float) else base_crr
-    tq = F.lower(F.trim(tire_quality.cast("string")))
-
-    def _contains_any(words: tuple[str, ...]) -> Column:
-        cond = F.lit(False)
-        for w in words:
-            cond = cond | tq.contains(w)
-        return cond
-
-    is_unknown = (
-        tq.isNull()
-        | (tq == "")
-        | ~tq.rlike("[a-zA-Z]")
-        | _contains_any(_TIRE_UNKNOWN)
-        | tq.isin("1", "1.0", "none", "n/a", "na")
-    )
-    adjusted = (
-        F.when(is_unknown, crr)
-        .when(_contains_any(_TIRE_TRAINING), crr + 0.0004)
-        .when(_contains_any(_TIRE_RACE), crr - 0.0003)
-        .when(tq.contains("cheap"), crr + 0.0003)
-        .otherwise(crr)
-    )
-    return F.least(F.greatest(adjusted, F.lit(0.0025)), F.lit(0.0120))
-
-
-def fill_missing_watts(
-    watts: Column,
-    v_ms: Column,
-    mass: float = 75.0,
-    crr: float = 0.005,
-    cda: float = 0.30,
-    rho: float = 1.225,
-) -> Column:
-    """P18 (/root/reference/cli/session_api.py:219-226): when watts is
-    NULL, estimate ½ρCdA·v³ + m·g·crr·v with the default profile."""
-    v = F.greatest(v_ms, F.lit(0.0))
-    model = 0.5 * rho * cda * F.pow(v, 3) + mass * G * crr * v
-    return F.coalesce(watts, model)
-
-
-def indoor_power(
-    v_ms: Column,
-    device_watts: Column,
-    mass: float = 75.0,
-    crr: float = 0.005,
-    cda: float = 0.30,
-    rho: float = 1.225,
-) -> Column:
-    """P8 (physics.rs:305-322): device passthrough else simple model."""
-    v = F.greatest(v_ms, F.lit(0.0))
-    model = 0.5 * rho * cda * F.pow(v, 3) + mass * G * crr * v
-    return F.coalesce(device_watts, model)
-
-
-# --------------------------------------------------------------------------
-# Single-node twin (faithful port of the cited loop) for parity tests
-# --------------------------------------------------------------------------
-
-def reference_power_series(
-    rows: list[dict],
-    mass: float = 75.0,
-    crr: float = 0.005,
-    cda: float = 0.30,
-    wind_ms: float = 0.0,
-    wind_to_deg: float = 0.0,
-    air_temp_c: float = 15.0,
-    air_pressure_hpa: float = 1013.25,
-) -> list[tuple[float, float, float]]:
-    """rows: [{t, v_ms, altitude_m, latitude?, longitude?}] sorted by t →
-    [(power, wind_rel, v_rel)] per physics.rs:180-297 (rho representative
-    altitude = exact median of smoothed series, matching the Spark twin)."""
-    import math
-
-    n = len(rows)
-    if n == 0:
-        return []
-    alt_raw = [r["altitude_m"] for r in rows]
-    alt = [
-        sorted([alt_raw[max(i - 1, 0)], alt_raw[i], alt_raw[min(i + 1, n - 1)]])[1]
-        for i in range(n)
-    ]
-    dt_steps = [1.0] + [
-        max(abs(rows[i]["t"] - rows[i - 1]["t"]), 0.01) for i in range(1, n)
-    ]
-
-    def bearing(i, j):
-        a, b = rows[i], rows[j]
-        if any(a.get(k) is None or b.get(k) is None for k in ("latitude", "longitude")):
-            return None
-        phi1, phi2 = math.radians(a["latitude"]), math.radians(b["latitude"])
-        dlam = math.radians(b["longitude"] - a["longitude"])
-        y = math.sin(dlam) * math.cos(phi2)
-        x = math.cos(phi1) * math.sin(phi2) - math.sin(phi1) * math.cos(phi2) * math.cos(dlam)
-        th = math.degrees(math.atan2(y, x))
-        return th + 360.0 if th < 0 else th
-
-    srt = sorted(alt)
-    m = len(srt)
-    alt_mid = srt[m // 2] if m % 2 else 0.5 * (srt[m // 2 - 1] + srt[m // 2])
-    t_k = air_temp_c + 273.15
-    base = max(1.0 - (LAPSE * max(alt_mid, 0.0)) / t_k, 0.001)
-    p_station = air_pressure_hpa * 100.0 * base ** (G / (R_AIR * LAPSE))
-    rho = min(max(p_station / (R_AIR * t_k), 0.6), 1.4)
-
-    out = []
-    for i in range(n):
-        r = rows[i]
-        if i == 0:
-            dt, v_prev = 1.0, max(r["v_ms"], 0.0)
-        else:
-            dt = max(abs(r["t"] - rows[i - 1]["t"]), 1e-3)
-            v_prev = max(rows[i - 1]["v_ms"], 0.0)
-        v = max(r["v_ms"], 0.0)
-        v_mid = 0.5 * (v + v_prev)
-        a = (v - v_prev) / dt
-        h = r.get("heading_deg")
-        if h is None:
-            h = bearing(i, i + 1) if i + 1 < n else None
-            if h is None and i >= 1:
-                h = bearing(i - 1, i)
-            if h is None:
-                h = 0.0
-        delta = math.radians((h - (wind_to_deg % 360.0)) % 360.0)
-        walong = max(wind_ms, 0.0) * math.cos(delta)
-        vr = max(v - walong, 0.1)
-        lo, hi = max(i - 2, 0), min(i + 2, n - 1)
-        dh = alt[hi] - alt[lo]
-        dts = max(sum(dt_steps[lo : hi + 1]), 0.01)
-        p_grav = max(mass * G * (dh / dts), 0.0)
-        p = mass * G * crr * v_mid + 0.5 * rho * cda * vr**3 + p_grav + max(mass * a * v_mid, 0.0)
-        out.append((max(p, 0.0), walong, vr))
-    return out

@@ -44,14 +44,6 @@ def shingles_from_tokens(toks: Column, n: int = SHINGLE_N) -> Column:
     )
 
 
-def shingles(text_col: Column, n: int = SHINGLE_N) -> Column:
-    """Word n-gram shingle array (distinct) from raw text. Prefer
-    materializing ``split(trim(text))`` into a column first and calling
-    ``shingles_from_tokens`` — inside a single select, this expression
-    re-splits per transform element."""
-    return shingles_from_tokens(F.split(F.trim(text_col), r"\s+"), n)
-
-
 def exact_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Exact dedup by content digest; survivor = min id (deterministic).
 

@@ -17,7 +17,6 @@ Semantics transplanted verbatim (cited):
 - status    core/src/lib.rs:91-97 — eff<1 → "Lav effekt",
             avg_pulse>170 → "Høy puls", else "OK".
 - round-2 determinism cli/session.py:786-794.
-- hz        cli/io.py:200-213 — 1/median(Δt).
 
 The whole block is ONE Window pass (rolling mean) + ONE groupBy
 aggregation per activity — map-side partial aggs, no UDF, no collect.
@@ -28,18 +27,8 @@ into hz cohorts and run one plan per cohort.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def estimate_hz(df: DataFrame, act: str = "activity_id", t: str = "t") -> DataFrame:
-    """S3 (io.py:200-213): per-activity sampling rate = 1/median(Δt)."""
-    w = Window.partitionBy(act).orderBy(t)
-    dt = (F.col(t) - F.lag(t).over(w)).alias("dt")
-    dts = df.select(act, dt).filter(F.col("dt").isNotNull() & (F.col("dt") > 0))
-    return dts.groupBy(act).agg(
-        (1.0 / F.percentile("dt", 0.5)).alias("hz")
-    )
 
 
 def session_metrics(
@@ -136,40 +125,6 @@ def session_metrics(
         out = out.withColumn("if_", F.round(F.col("np") / F.lit(float(ftp)), 3))
     else:
         out = out.withColumn("if_", F.lit(0.0))
-    return out
-
-
-def session_metrics_auto(
-    samples: DataFrame,
-    act: str = "activity_id",
-    t: str = "t",
-    watts: str = "watts",
-    hr: str = "hr",
-    ftp: float | None = None,
-) -> DataFrame:
-    """Mixed-sampling-rate corpus: estimate hz per activity (S3), derive
-    the NP window = max(floor(30·hz), 1) per activity (metrics.rs:186-188),
-    and run one metric plan per DISTINCT window size, unioned.
-
-    The loop is over distinct window sizes — in practice a handful
-    (1 Hz, 0.5 Hz, 4 Hz devices), independent of row count, so this stays
-    a bounded number of plans, each fully distributed.
-    """
-    hz = estimate_hz(samples, act=act, t=t).select(
-        act,
-        F.greatest(F.floor(30.0 * F.col("hz")), F.lit(1)).cast("int").alias("win"),
-    )
-    windows = [r.win for r in hz.select("win").distinct().collect()]
-    with_win = samples.join(hz, act, "left").fillna({"win": 30})
-    parts = []
-    for w in sorted(windows) or [30]:
-        cohort = with_win.filter(F.col("win") == w).drop("win")
-        parts.append(
-            session_metrics(cohort, act=act, t=t, watts=watts, hr=hr, ftp=ftp, window=w)
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
     return out
 
 

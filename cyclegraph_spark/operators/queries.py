@@ -98,7 +98,9 @@ def _load_family_modules() -> None:
     """Import the per-family query modules so their @query decorators
     register (kept lazy to avoid circular imports at package load).
     queries_composite MUST come last — its melt oracles are assembled
-    from the extended-registry oracle strings the others register."""
+    from the extended-registry oracle strings the others register.
+    A family whose import fails raises here: it must not silently drop
+    its queries from the registry."""
     import importlib
 
     for mod in (
@@ -108,10 +110,7 @@ def _load_family_modules() -> None:
         "queries_kg",
         "queries_composite",
     ):
-        try:
-            importlib.import_module(f"cyclegraph_spark.operators.{mod}")
-        except ModuleNotFoundError:
-            pass
+        importlib.import_module(f"cyclegraph_spark.operators.{mod}")
 
 
 # --------------------------------------------------------------------------

@@ -888,7 +888,7 @@ def p17_running_integration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# JSON scalar surface (§2.7; t11_matrix.py tolerant JSON)
+# JSON scalar surface (§2.7; the reference T11 matrix reader's tolerant JSON)
 # --------------------------------------------------------------------------
 @query(
     "json_extract_props",

@@ -1,47 +1,16 @@
-"""Report-level batch analytics — trend, 28-day baseline, T11 matrix.
+"""Report-level batch analytics — the 28-day baseline and badges v2.2
+that registry query ``a17_badges_v22`` composes.
 
 Reference semantics:
-- W4 trend last-3 (/root/reference/cli/analyze.py:241-252,
-  cli/session.py:1024-1035): per report, average of the previous 3 CGS
-  scores + delta% vs current, round-2.
 - J4 28-day baseline (cli/session.py:995-1022): candidates = history
   where date ∈ (cur−28d, cur) and duration ∈ [0.75, 1.25]×cur;
   baseline = exact median w_per_beat.
-- T11 matrix contract (server/analysis/t11_matrix.py:30-34,
-  tests/test_t11_matrix_csv.py:5-22): fixed 12-column header, watt
-  fields castable/non-empty.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-T11_COLUMNS = [
-    "git_sha", "profile_version", "weather_source", "ride_id",
-    "precision_watt", "drag_watt", "rolling_watt", "total_watt",
-    "calibration_mae", "estimated_error_pct_min", "estimated_error_pct_max",
-    "precision_quality_hint",
-]
-
-
-def with_trend(
-    reports: DataFrame,
-    score_col: str = "cgs",
-    order_col: str = "report_date",
-    key_cols: tuple[str, ...] = (),
-) -> DataFrame:
-    """W4: cgs_last3_avg + cgs_delta_vs_last3 per report, round-2."""
-    w = (
-        Window.partitionBy(*key_cols) if key_cols else Window.partitionBy(F.lit(1))
-    ).orderBy(order_col).rowsBetween(-3, -1)
-    last3 = F.avg(score_col).over(w)
-    delta = F.when(
-        last3 > 0, 100.0 * (F.col(score_col) - last3) / last3
-    )
-    return reports.withColumn("cgs_last3_avg", F.round(last3, 2)).withColumn(
-        "cgs_delta_vs_last3", F.round(delta, 2)
-    )
 
 
 def with_baseline_28d(
@@ -125,39 +94,4 @@ def with_badges_v22(
         reports.withColumn("badge_big_engine", _flag(big))
         .withColumn("badge_metronome", _flag(metronome))
         .withColumn("badge_dialed_in", _flag(dialed))
-    )
-
-
-def t11_matrix(
-    reports: DataFrame,
-    git_sha: str = "spark",
-    profile_version: str = "v1",
-    weather_source: str = "frozen",
-) -> DataFrame:
-    """Project reports into the exact T11 12-column contract.
-
-    drag_watt / rolling_watt come from the P7 physics decomposition when
-    analyze_sessions computed them (session-average p_aero / p_roll);
-    reports lacking the component columns fall back to zero. Note these
-    are MODEL diagnostics (default profile + weather), not a partition of
-    the measured total_watt — model-vs-measured mismatch is what
-    calibration_mae quantifies."""
-    cols = set(reports.columns)
-    drag = F.col("drag_watt") if "drag_watt" in cols else F.lit(None).cast("double")
-    roll = F.col("rolling_watt") if "rolling_watt" in cols else F.lit(None).cast("double")
-    return reports.select(
-        F.lit(git_sha).alias("git_sha"),
-        F.lit(profile_version).alias("profile_version"),
-        F.lit(weather_source).alias("weather_source"),
-        F.col("session_id").alias("ride_id"),
-        F.coalesce(F.col("precision_watt"), F.lit(0.0)).alias("precision_watt"),
-        F.coalesce(drag, F.lit(0.0)).alias("drag_watt"),
-        F.coalesce(roll, F.lit(0.0)).alias("rolling_watt"),
-        F.coalesce(F.col("avg_power"), F.lit(0.0)).alias("total_watt"),
-        F.lit(0.0).alias("calibration_mae"),
-        F.lit(2.0).alias("estimated_error_pct_min"),
-        F.lit(20.0).alias("estimated_error_pct_max"),
-        F.when(F.col("precision_watt") < 3.0, "god").otherwise("ok").alias(
-            "precision_quality_hint"
-        ),
     )

@@ -24,7 +24,6 @@ predicates over the long triple table (subj, pred, obj, obj_dtype):
 
 Report schema mirrors pyshacl's result fields:
     violations(focus_node, path, constraint, message, value)
-``conforms`` = violations.isEmpty().
 
 Scale shape: one shuffle per property shape (groupBy focus) over a
 pred-filtered scan — the pred filter pushes down to parquet when the
@@ -263,10 +262,6 @@ def validate(triples: DataFrame, shapes: list[NodeShape]) -> DataFrame:
     for p in parts[1:]:
         out = out.unionByName(p)
     return out
-
-
-def conforms(triples: DataFrame, shapes: list[NodeShape]) -> bool:
-    return validate(triples, shapes).isEmpty()
 
 
 # --------------------------------------------------------------------------

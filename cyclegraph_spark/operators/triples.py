@@ -329,7 +329,7 @@ def parse_islands(html: bytes | None) -> list[tuple[str, str, str, str]]:
         try:
             doc = json.loads(m.group(1))
         except (json.JSONDecodeError, ValueError):
-            continue  # tolerant-parse discipline (t11_matrix.py:106-158 analog)
+            continue  # tolerant-parse discipline (as the reference T11 matrix reader)
         tl: list[tuple[str, str, str, str]] = []
         _walk_jsonld(doc, tl)
         out.extend(tl)

@@ -2,12 +2,11 @@
 corpus must reproduce tests/fixtures/html_triples_golden_seed42_n100.jsonl
 EXACTLY (generated once from the single-node oracle; guards both the
 generator and the lift against silent semantic drift — BASELINE.md
-P/R >= 0.95 gate, asserted at 1.0). Also covers the Turtle sink (S10)."""
+P/R >= 0.95 gate, asserted at 1.0)."""
 
 import json
 from pathlib import Path
 
-from cyclegraph_spark.functions.turtle import dataframe_to_turtle, to_turtle
 from cyclegraph_spark.operators.triples import lift_html_pages
 from cyclegraph_spark.sources.pages import pages_df
 
@@ -33,19 +32,3 @@ def test_lift_matches_checked_in_golden(spark):
     assert got == exp, (
         f"missing={sorted(exp - got)[:3]} extra={sorted(got - exp)[:3]}"
     )
-
-
-def test_turtle_serialization_deterministic(spark):
-    df = lift_html_pages(pages_df(spark, 5, partitions=2)).drop("src")
-    t1 = dataframe_to_turtle(df)
-    t2 = dataframe_to_turtle(df.repartition(4))
-    assert t1 == t2
-    assert t1.startswith("@prefix")
-    assert "schema:power" in t1
-    assert '^^xsd:integer' in t1
-    assert " ;\n" in t1  # grouped-per-subject form
-
-
-def test_turtle_escaping():
-    ttl = to_turtle([("http://ex/s", "http://ex/p", 'he said "hi"\nthere', "http://www.w3.org/2001/XMLSchema#string")])
-    assert '\\"hi\\"' in ttl and "\\n" in ttl

@@ -123,26 +123,6 @@ def test_np_window_semantics_long_series(spark):
     )
 
 
-def test_session_metrics_auto_mixed_rates(spark):
-    """Two activities at different sampling rates get different NP
-    windows (floor(30·hz)) and each matches its Python twin."""
-    from cyclegraph_spark.operators.metrics import session_metrics_auto
-
-    rows = []
-    ws_1hz = [100.0 + (i % 17) * 3 for i in range(120)]
-    for i, w in enumerate(ws_1hz):  # 1 Hz → window 30
-        rows.append(("one_hz", float(i), 120.0, w))
-    ws_2s = [150.0 + (i % 11) * 5 for i in range(80)]
-    for i, w in enumerate(ws_2s):  # 0.5 Hz → window 15
-        rows.append(("half_hz", float(i * 2), 130.0, w))
-    df = spark.createDataFrame(rows, SCHEMA)
-    got = {r.activity_id: r for r in session_metrics_auto(df).collect()}
-    assert abs(got["one_hz"].np - round(reference_np(ws_1hz, hz=1.0), 2)) <= 0.01
-    assert abs(got["half_hz"].np - round(reference_np(ws_2s, hz=0.5), 2)) <= 0.01
-    # windows actually differed
-    assert reference_np(ws_2s, hz=0.5) != reference_np(ws_2s, hz=1.0)
-
-
 def test_status_classification(spark):
     rows = (
         [("low", float(i), 150.0, 100.0) for i in range(5)]  # eff<1 -> Lav effekt

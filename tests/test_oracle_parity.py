@@ -104,6 +104,27 @@ def test_registry_fits_driver_window():
     )
 
 
+def test_registry_raises_on_broken_family_import(monkeypatch):
+    """A family module whose own import fails must make the registry
+    raise, not drop that family's queries without a word."""
+    import importlib
+
+    from cyclegraph_spark.operators.queries import all_queries
+
+    real = importlib.import_module
+
+    def broken(name, *args, **kwargs):
+        if name == "cyclegraph_spark.operators.queries_metrics":
+            raise ModuleNotFoundError(
+                "No module named 'cyclegraph_spark.gone'", name="cyclegraph_spark.gone"
+            )
+        return real(name, *args, **kwargs)
+
+    monkeypatch.setattr(importlib, "import_module", broken)
+    with pytest.raises(ModuleNotFoundError, match="cyclegraph_spark.gone"):
+        all_queries()
+
+
 def _probe_contract():
     from cyclegraph_spark.operators.queries_composite import (
         _ANALYTICS_PROBES,

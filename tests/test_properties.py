@@ -735,7 +735,7 @@ def _lift_pages(draw):
 @settings(max_examples=8, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(pages=_lift_pages())
-def test_html_lift_twin_and_jvm_match_udf(spark, pages):
+def test_html_lift_twin_matches_udf(spark, pages):
     """The HTML-lift twin (_lift_page_rows, which GENERATES the
     kg_html_lift VALUES oracle) must equal lift_html_pages as a MULTISET
     on arbitrary islands — including bare/CURIE itemtypes, which only
@@ -771,210 +771,3 @@ def test_html_lift_twin_and_jvm_match_udf(spark, pages):
         f"missing={sorted((exp - got).keys())[:3]} "
         f"extra={sorted((got - exp).keys())[:3]}"
     )
-
-
-_TTL_NS = {
-    "cg": "https://cyclegraph.dev/ns#",
-    "schema": "http://schema.org/",
-    "xsd": "http://www.w3.org/2001/XMLSchema#",
-}
-_ttl_locals = st.sampled_from(
-    ["power", "a_b-c", "x.y", "9lead", "_u", "a.", "-x", "a b", "sub/path", ""]
-)
-_ttl_texts = st.text(
-    alphabet='ab "\\\n\r\tæ日', min_size=0, max_size=12
-)
-_ttl_dtypes = st.sampled_from(
-    ["http://www.w3.org/2001/XMLSchema#string",
-     "http://www.w3.org/2001/XMLSchema#integer",
-     "http://www.w3.org/2001/XMLSchema#boolean"]
-)
-
-
-@st.composite
-def _ttl_rows(draw):
-    rows = []
-    for _ in range(draw(st.integers(1, 12))):
-        ns = draw(st.sampled_from(list(_TTL_NS.values()) + ["https://other.example/"]))
-        subj = ns + draw(_ttl_locals)
-        pred = draw(st.sampled_from(list(_TTL_NS.values()))) + draw(_ttl_locals)
-        if draw(st.booleans()):
-            obj, dt = draw(st.sampled_from(list(_TTL_NS.values()))) + draw(_ttl_locals), "uri"
-        else:
-            obj, dt = draw(_ttl_texts), draw(_ttl_dtypes)
-        rows.append((subj, pred, obj, dt))
-    return rows
-
-
-_TTL_TERM = __import__("re").compile(
-    r'<[^>]*>|"(?:[^"\\]|\\.)*"(?:\^\^\S+)?|\S+'
-)
-
-
-def _ttl_unterm(tok: str, prefixes: dict[str, str]) -> tuple[str, str]:
-    """Turtle term token → (value, dtype) with 'uri' for IRIs."""
-    def expand(t: str) -> str:
-        if t.startswith("<"):
-            body = t[1:-1]
-            # IRIREF: controls/space and <>"{}|^`\ may not appear raw —
-            # the serializer must emit them as UCHAR escapes (reject raw,
-            # then decode \uXXXX; '\' itself is forbidden raw so every
-            # backslash starts an escape)
-            forbidden = set('<>"{}|^`') | {chr(c) for c in range(0x21)}
-            out, i = [], 0
-            while i < len(body):
-                c = body[i]
-                if c == "\\":
-                    assert body[i + 1] == "u", f"bad IRIREF escape in {t!r}"
-                    out.append(chr(int(body[i + 2 : i + 6], 16)))
-                    i += 6
-                else:
-                    assert c not in forbidden, f"raw forbidden char in IRIREF {t!r}"
-                    out.append(c)
-                    i += 1
-            return "".join(out)
-        pfx, local = t.split(":", 1)
-        # PN_LOCAL subset the serializer may emit: ASCII alnum, _-. only
-        assert all(
-            c.isascii() and (c.isalnum() or c in "_-.") for c in local
-        ), f"non-PN_LOCAL char in {t!r}"
-        return prefixes[pfx] + local
-
-    if tok.startswith('"'):
-        if tok.endswith('"'):
-            lit, dt = tok[1:-1], ""
-        else:
-            lit, typ = tok.rsplit("^^", 1)
-            lit, dt = lit[1:-1], expand(typ)
-        out, i = [], 0
-        while i < len(lit):
-            if lit[i] == "\\":
-                out.append({"\\": "\\", '"': '"', "n": "\n", "r": "\r"}[lit[i + 1]])
-                i += 2
-            else:
-                assert lit[i] not in '"\\\n\r', f"raw forbidden char in {tok!r}"
-                out.append(lit[i])
-                i += 1
-        return "".join(out), dt
-    return expand(tok), "uri"
-
-
-def _parse_turtle(text: str):
-    """Independent mini-reader for the serializer's output subset."""
-    prefixes: dict[str, str] = {}
-    triples: list[tuple[str, str, str, str]] = []
-    subj = None
-    for raw in text.splitlines():
-        line = raw.strip()
-        if not line:
-            continue
-        if line.startswith("@prefix"):
-            _, pfx, uri, dot = line.split(" ")
-            assert dot == "."
-            prefixes[pfx[:-1]] = uri[1:-1]
-            continue
-        assert line.endswith(" ;") or line.endswith(" ."), repr(line)
-        body, term = line[:-2], line[-1]
-        toks = _TTL_TERM.findall(body)
-        if not raw.startswith(" "):  # block opener carries the subject
-            subj = _ttl_unterm(toks[0], prefixes)[0]
-            toks = toks[1:]
-        assert len(toks) == 2, toks
-        p = _ttl_unterm(toks[0], prefixes)[0]
-        o, dt = _ttl_unterm(toks[1], prefixes)
-        triples.append((subj, p, o, dt))
-        if term == ".":
-            subj = None
-    return triples
-
-
-@settings(max_examples=50, deadline=None)
-@given(rows=_ttl_rows())
-def test_turtle_roundtrip_and_order_invariance(rows):
-    """The Turtle sink must emit spec-valid prefixed names and string
-    escapes for ARBITRARY locals/literals (trailing-dot and leading
-    '-'/'.' locals must fall back to <uri> form; '\"' '\\' newline and
-    carriage return must be escaped) and must round-trip the triple SET
-    exactly; output must be invariant under input row order."""
-    from cyclegraph_spark.functions.turtle import to_turtle
-
-    text = to_turtle(rows)
-    got = set(_parse_turtle(text))
-    assert got == set(rows), (
-        f"missing={sorted(set(rows) - got)[:3]} extra={sorted(got - set(rows))[:3]}"
-    )
-    # every emitted prefixed name is PN_LOCAL-safe (parser would have
-    # choked on '<' fallbacks, so just assert determinism here)
-    assert to_turtle(list(reversed(rows))) == text
-
-
-@st.composite
-def _ride_series(draw):
-    """Random physically-plausible ride: bounded speeds/altitude steps,
-    a small GPS walk, arbitrary wind — exercises the centered gravity
-    window, bearing, and air-density branches off the golden shapes."""
-    n = draw(st.integers(min_value=5, max_value=40))
-    rows, alt = [], draw(st.integers(0, 1500)) * 1.0
-    lat, lon = 59.91, 10.75
-    for i in range(n):
-        alt += draw(st.integers(-40, 40)) / 10.0
-        lat += draw(st.integers(-20, 20)) * 1e-5
-        lon += draw(st.integers(-20, 20)) * 1e-5
-        rows.append(
-            {
-                "t": float(i),
-                "v_ms": draw(st.integers(5, 250)) / 10.0,
-                "altitude_m": alt,
-                "latitude": lat,
-                "longitude": lon,
-            }
-        )
-    wind_ms = draw(st.integers(0, 150)) / 10.0
-    wind_to = draw(st.integers(0, 359)) * 1.0
-    return rows, wind_ms, wind_to
-
-
-@settings(max_examples=8, deadline=None,
-          suppress_health_check=[HealthCheck.function_scoped_fixture])
-@given(case=_ride_series())
-def test_power_model_twin_on_random_rides(spark, case):
-    """P5-P12 power model vs the single-node twin on RANDOM rides (the
-    fixed test pins one sinusoidal shape): ±1 W power, 1e-6 on the wind
-    projection — same tolerances as the reference's golden stability."""
-    import pytest
-    from pyspark.sql import types as T
-    from cyclegraph_spark.functions.physics import (
-        reference_power_series,
-        with_power_model,
-    )
-
-    rows, wind_ms, wind_to = case
-    schema = T.StructType(
-        [
-            T.StructField("activity_id", T.StringType()),
-            T.StructField("t", T.DoubleType()),
-            T.StructField("v_ms", T.DoubleType()),
-            T.StructField("altitude_m", T.DoubleType()),
-            T.StructField("latitude", T.DoubleType()),
-            T.StructField("longitude", T.DoubleType()),
-        ]
-    )
-    df = spark.createDataFrame(
-        [
-            ("a", r["t"], r["v_ms"], r["altitude_m"], r["latitude"], r["longitude"])
-            for r in rows
-        ],
-        schema,
-    )
-    got = (
-        with_power_model(df, wind_ms=wind_ms, wind_to_deg=wind_to)
-        .orderBy("t")
-        .select("power", "wind_rel", "v_rel")
-        .collect()
-    )
-    exp = reference_power_series(rows, wind_ms=wind_ms, wind_to_deg=wind_to)
-    assert len(got) == len(exp)
-    for g, (p, wrel, vrel) in zip(got, exp):
-        assert abs(g.power - p) <= 1.0, (g.power, p)
-        assert abs(g.wind_rel - wrel) <= 1e-6
-        assert abs(g.v_rel - vrel) <= 1e-6

@@ -1,15 +1,8 @@
-"""W4 trend / J4 baseline / T11 matrix contract on report rows."""
+"""J4 28-day baseline and badges v2.2 on report rows."""
 
 import datetime
 
-from pyspark.sql import functions as F
-
-from cyclegraph_spark.operators.reports import (
-    T11_COLUMNS,
-    t11_matrix,
-    with_baseline_28d,
-    with_trend,
-)
+from cyclegraph_spark.operators.reports import with_baseline_28d
 
 
 def _reports(spark):
@@ -34,15 +27,6 @@ def _reports(spark):
     )
 
 
-def test_trend_last3(spark):
-    df = with_trend(_reports(spark)).orderBy("report_date")
-    rows = df.collect()
-    assert rows[0].cgs_last3_avg is None  # no history yet
-    # row 3: avg of cgs 60,61,62 = 61.0; delta = (63-61)/61*100
-    assert rows[3].cgs_last3_avg == 61.0
-    assert rows[3].cgs_delta_vs_last3 == round((63 - 61) / 61 * 100, 2)
-
-
 def test_baseline_28d_band(spark):
     df = with_baseline_28d(_reports(spark))
     rows = {r.session_id: r for r in df.collect()}
@@ -54,19 +38,6 @@ def test_baseline_28d_band(spark):
     for r in rows.values():
         if r.baseline_wpb is not None:
             assert 1.39 < r.baseline_wpb < 1.5
-
-
-def test_t11_matrix_contract(spark):
-    """tests/test_t11_matrix_csv.py analog: exact 12-column header,
-    exactly 5 rides, watt fields castable/non-empty."""
-    m = t11_matrix(_reports(spark).limit(5))
-    assert m.columns == T11_COLUMNS
-    rows = m.collect()
-    assert len(rows) == 5
-    for r in rows:
-        for col in ("precision_watt", "drag_watt", "rolling_watt", "total_watt"):
-            v = r[col]
-            assert v is not None and float(v) == v
 
 
 def test_badges_v22_null_safety(spark):

@@ -19,7 +19,6 @@ from pyspark.sql import types as T
 
 from cyclegraph_spark.operators.shacl import (
     RDF_TYPE,
-    conforms,
     parse_shapes_ttl,
     reference_validate,
     validate,
@@ -82,7 +81,7 @@ def test_parse_repo_shapes(repo_shapes):
 
 
 def test_conforming_graph(spark, shapes):
-    assert conforms(_df(spark, _sample_graph()), shapes)
+    assert validate(_df(spark, _sample_graph()), shapes).isEmpty()
 
 
 def _assert_parity(spark, graph, shapes):
@@ -132,7 +131,7 @@ def test_datatype_violation(spark, shapes):
 
 
 def test_repo_shapes_conforming_graph(spark, repo_shapes):
-    assert conforms(_df(spark, _sample_graph()), repo_shapes)
+    assert validate(_df(spark, _sample_graph()), repo_shapes).isEmpty()
 
 
 @pytest.mark.parametrize(
@@ -162,7 +161,7 @@ def test_untargeted_nodes_ignored(spark, shapes):
     g = _sample_graph()
     g.add((f"{EX}other1", SCHEMA + "power", "nope", XSD + "string"))
     _assert_parity(spark, g, shapes)
-    assert conforms(_df(spark, g), shapes)
+    assert validate(_df(spark, g), shapes).isEmpty()
 
 
 def test_lifted_corpus_violations_shape(spark, shapes):
