@@ -34,8 +34,8 @@ def shingles_from_tokens(toks: Column, n: int = SHINGLE_N) -> Column:
     (sequence(0, negative) would count DOWN in Spark — guard with a
     when). Taking tokens rather than text matters: a split expression
     referenced inside the transform lambda re-evaluates per array
-    element — O(tokens²) per doc (same hoist as linking.py's
-    candidate_ngrams; measured there at 50k pages: ~1.7×)."""
+    element — O(tokens²) per doc (measured on the former SQL linker's
+    n-gram candidates at 50k pages: ~1.7×)."""
     idx = F.when(
         F.size(toks) >= n, F.sequence(F.lit(0), F.size(toks) - n)
     ).otherwise(F.expr("array()").cast("array<int>"))

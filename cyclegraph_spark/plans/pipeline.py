@@ -13,8 +13,9 @@ branches side by side:
       │                coercion) → CC over sameAs edges + prior labels
       │                → recanonicalize stale store rows (resume only)
       │                → write labels → canonicalize
-      └─ link thread:  link mentions (n-gram candidates × broadcast
-                       alias dict) → links write (dynamic overwrite)
+      └─ link thread:  link mentions (one mapInArrow pass: each page's
+                       n-grams probe the collected alias index)
+                       → links write (dynamic overwrite)
       ⋈ join 1: the link thread is joined before materialize, because
         the manifest commit marks a bucket done only once every output
         derived from it has landed

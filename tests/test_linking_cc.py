@@ -10,6 +10,7 @@ from cyclegraph_spark.operators.cc import (
     connected_components,
     reference_components,
 )
+from cyclegraph_spark.extract.text import extract_text
 from cyclegraph_spark.operators.linking import link_mentions, reference_link
 from cyclegraph_spark.sources.pages import alias_df, build_alias_rows, pages_with_text
 
@@ -80,20 +81,29 @@ def test_link_deterministic_across_parallelism(spark):
     assert out[0] == out[1]
 
 
-def test_link_prefilter_escapes_quote_and_backslash(spark):
-    """First words holding ' and \\ go through the SQL IN list of the
-    candidate prefilter intact: links equal the oracle's."""
+def test_link_text_edge_cases_match_oracle(spark):
+    """Aliases holding ' and \\, and words separated by non-ASCII or
+    leading whitespace (U+00A0 from ``&#160;``, a leading newline): links
+    equal the oracle's, positions included."""
     alias_rows = [
         ("O'Brien\\x Ltd", "e1", 0.9),
         ("it's", "e2", 0.5),
         ("a\\b", "e3", 0.7),
         ("\\'", "e4", 0.6),
         ("plain", "e5", 0.4),
+        ("Vinvin Kamoe", "e6", 0.8),
+        ("Kamoe", "e7", 0.55),
+        ("B", "e8", 0.3),
     ]
     aliases = spark.createDataFrame(alias_rows, "alias string, entity_id string, prior double")
+    extracted = extract_text(b"<p>Vinvin&#160;Kamoe</p><p>met\tKamoe&#160;B</p>")
+    assert "\xa0" in extracted
     texts = [
         ("d1", "met O'Brien\\x Ltd and it's a\\b plain"),
         ("d2", "O'Brien Ltd its ab a\\\\b \\' '"),
+        ("d3", "met Vinvin\xa0Kamoe and B"),
+        ("d4", "\nKamoe B"),
+        ("d5", extracted),
     ]
     pages = spark.createDataFrame(texts, "url string, text string")
     got = {(r.url, r.pos, r.alias, r.entity_id, r.score) for r in link_mentions(pages, aliases).collect()}
@@ -101,7 +111,33 @@ def test_link_prefilter_escapes_quote_and_backslash(spark):
         (url, *link) for url, text in texts for link in reference_link(text, alias_rows)
     }
     assert got == exp
-    assert {e for *_x, e, _s in got} == {"e1", "e2", "e3", "e4", "e5"}
+    assert {e for *_x, e, _s in got} == {f"e{i}" for i in range(1, 9)}
+    assert {(p, a) for u, p, a, *_r in got if u == "d3"} == {
+        (1, "Vinvin Kamoe"), (2, "Kamoe"), (4, "B")
+    }
+
+
+def test_link_is_one_arrow_pass(spark):
+    """Linking is one mapInArrow over the pages: no exchange, window or
+    join in the executed plan. A NULL text yields no rows, and the key
+    columns keep their types."""
+    aliases = spark.createDataFrame(
+        [("Kamoe", "e7", 0.55), ("B", "e8", 0.3)], "alias string, entity_id string, prior double"
+    )
+    pages = spark.createDataFrame(
+        [("d1", "Kamoe and B", 3), ("d2", None, 5)], "url string, text string, part_id int"
+    )
+    links = link_mentions(pages, aliases, key_cols=("url", "part_id"))
+    rows = links.collect()
+    plan = links._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInArrow") == 1, plan
+    for node in ("Exchange", "Window", "BroadcastHashJoin"):
+        assert node not in plan, plan
+    assert links.schema["part_id"].dataType == T.IntegerType()
+    assert links.columns == ["url", "part_id", "pos", "alias", "entity_id", "score"]
+    assert sorted((r.url, r.part_id, r.pos, r.entity_id) for r in rows) == [
+        ("d1", 3, 0, "e7"), ("d1", 3, 2, "e8")
+    ]
 
 
 def test_cc_parity_chain_and_stars(spark):

@@ -603,15 +603,25 @@ def _link_case(draw):
     """Random docs + alias dictionary over a tiny shared vocabulary so
     1..3-gram aliases collide with document n-grams, the same alias maps
     to competing entities (tie-break path), and repeated mentions build
-    context support."""
+    context support. Words are separated by ASCII and non-ASCII
+    whitespace (U+00A0 and U+2003 included), with optional leading and
+    trailing whitespace, as extracted web text has them."""
     vocab = ["aa", "bb", "cc", "dd", "ee"]
-    docs = draw(
+    space = st.sampled_from([" ", "  ", "\t", "\n", "\xa0", "\u2003"])
+    edge = st.one_of(st.just(""), space)
+    word_lists = draw(
         st.lists(
             st.lists(st.sampled_from(vocab), min_size=0, max_size=12),
             min_size=1,
             max_size=4,
         )
     )
+    docs = []
+    for ws in word_lists:
+        text = draw(edge)
+        for i, w in enumerate(ws):
+            text += (draw(space) if i else "") + w
+        docs.append(text + draw(edge))
     n_alias = draw(st.integers(min_value=1, max_value=8))
     seen: set[tuple[str, str]] = set()
     rows = []
@@ -636,12 +646,13 @@ def test_linking_twin_matches_spark(spark, case):
     """reference_link GENERATES the kg_entity_links VALUES oracle, so it
     must equal link_mentions — positions, longest-alias/score/entity
     tie-break, ln-support context scores, and the rounded score's exact
-    lexical value — on arbitrary docs, not just the seeded corpus."""
+    lexical value — on arbitrary docs and whitespace, not just the
+    seeded corpus."""
     from cyclegraph_spark.operators.linking import link_mentions, reference_link
 
     docs, alias_rows = case
     pages = spark.createDataFrame(
-        [(f"u{i}", " ".join(ws)) for i, ws in enumerate(docs)],
+        [(f"u{i}", text) for i, text in enumerate(docs)],
         "url string, text string",
     )
     aliases = spark.createDataFrame(
@@ -653,8 +664,8 @@ def test_linking_twin_matches_spark(spark, case):
         for r in link_mentions(pages, aliases).collect()
     }
     exp = set()
-    for i, ws in enumerate(docs):
-        for pos, alias, eid, score in reference_link(" ".join(ws), alias_rows):
+    for i, text in enumerate(docs):
+        for pos, alias, eid, score in reference_link(text, alias_rows):
             exp.add((f"u{i}", pos, alias, eid, score))
     assert got == exp, (
         f"missing={sorted(exp - got)[:3]} extra={sorted(got - exp)[:3]}"

@@ -1,12 +1,13 @@
-"""The hourly-weather as-of join (``analyze.weather_asof``) that registry
-query ``j2_weather_context`` uses: the nearest record per anchor, with
-anchors outside the table's range clamped to its boundary rows."""
+"""The hourly-weather as-of join (``queries_analytics.weather_asof``)
+that registry query ``j2_weather_context`` uses: the nearest record per
+anchor, with anchors outside the table's range clamped to its boundary
+rows."""
 
 
 def test_weather_asof_out_of_range_clamps_to_boundary(spark):
     """Anchors outside the table range must get the globally nearest
     record — the first/last row (reference _nearest_index scans all)."""
-    from cyclegraph_spark.analyze import weather_asof
+    from cyclegraph_spark.operators.queries_analytics import weather_asof
 
     wdf = spark.createDataFrame(
         [(7200, 1.0, 10.0, 5.0, 1000.0), (10800, 2.0, 20.0, 6.0, 1001.0),

@@ -8,9 +8,9 @@ recorded run plants REAL skew at bench scale and times the claims:
 
 - link: 200k pages where every 2nd page carries an extra hot-alias
   mention (~100k planted + ~40k natural hot mentions) through
-  ``link_mentions`` — the hot alias rides the broadcast join (no
-  shuffle on the dictionary side) and the support window partitions by
-  (url, entity), so the hot ENTITY never concentrates in one task.
+  ``link_mentions`` — each page is linked on its own against the alias
+  index the worker closes over (no shuffle, no join), so the hot ENTITY
+  never concentrates in one task.
 - cc: a 100k-degree hub + 25k 8-node chains (~275k edges) through
   ``connected_components`` twice. At the default edge bound
   (``cc._UF_MAX_EDGES``) the graph fits, so it finishes in the one-task
