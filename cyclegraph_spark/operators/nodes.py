@@ -6,11 +6,13 @@ degree profile and display name, derived wholly from the canonical
 triple relation, so it can be recomputed idempotently from the store
 (no separate state to resume).
 
-Plan shape: two map-side-combined aggregations (one keyed on subj, one
-on uri-valued obj) + one full-outer join on the node id — no window, no
-self-join; a hot node (the corpus's 20%-of-pages entity) is exactly one
-output row per aggregation, so skew lives only in the agg's partial
-buffers, which combine map-side.
+Plan shape: one map-side-combined aggregation — no join, no window.
+Each triple is a row for its subject (``out``) and, if its object is a
+uri, one for that object; one ``groupBy(id)`` computes every column,
+and given SHACL shapes also the ``shacl.shape_columns`` the violations
+are exploded from, so the factory builds both reports in one pass. A
+hot node (the corpus's 20%-of-pages entity) is one output row, so skew
+lives only in the agg's partial buffers, which combine map-side.
 """
 
 from __future__ import annotations
@@ -18,12 +20,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from cyclegraph_spark.operators.shacl import NodeShape, shape_columns
 from cyclegraph_spark.operators.triples import RDF_TYPE, SCHEMA
 
 NAME_PRED = SCHEMA + "name"
+NODE_COLUMNS = ("id", "n_out", "n_in", "n_types", "name")
 
 
-def node_table(triples: DataFrame) -> DataFrame:
+def node_table(triples: DataFrame, shapes: list[NodeShape] | None = None) -> DataFrame:
     """(subj, pred, obj, obj_dtype) → (id, n_out, n_in, n_types, name).
 
     - ``n_out``: triples with this node as subject;
@@ -31,26 +35,21 @@ def node_table(triples: DataFrame) -> DataFrame:
     - ``n_types``: distinct rdf:type values;
     - ``name``: MIN schema.org/name literal (deterministic tie-break,
       the O3/O6 discipline), NULL when the node has none.
+
+    With ``shapes``, the ``shacl.shape_columns`` follow; ``shacl.violations``
+    explodes them.
     """
-    subs = triples.groupBy(F.col("subj").alias("id")).agg(
-        F.count(F.lit(1)).alias("n_out"),
-        F.count_distinct(
-            F.when(F.col("pred") == RDF_TYPE, F.col("obj"))
-        ).alias("n_types"),
-        F.min(F.when(F.col("pred") == NAME_PRED, F.col("obj"))).alias("name"),
-    )
-    objs = (
-        triples.filter(F.col("obj_dtype") == "uri")
-        .groupBy(F.col("obj").alias("id"))
-        .agg(F.count(F.lit(1)).alias("n_in"))
-    )
-    return (
-        subs.join(objs, "id", "full_outer")
-        .select(
-            "id",
-            F.coalesce(F.col("n_out"), F.lit(0)).alias("n_out"),
-            F.coalesce(F.col("n_in"), F.lit(0)).alias("n_in"),
-            F.coalesce(F.col("n_types"), F.lit(0)).alias("n_types"),
-            "name",
-        )
+    out = F.col("out")
+    rows = triples.select("*", F.explode(F.array(F.lit(True), F.lit(False))).alias("out"))
+    rows = rows.filter(out | (F.col("obj_dtype") == "uri"))
+    return rows.groupBy(F.when(out, F.col("subj")).otherwise(F.col("obj")).alias("id")).agg(
+        F.count_if(out).alias("n_out"),
+        F.count_if(~out).alias("n_in"),
+        # size(collect_set), not count_distinct: a distinct aggregate
+        # shuffles twice, by (id, obj) and then by id
+        F.size(F.collect_set(F.when(out & (F.col("pred") == RDF_TYPE), F.col("obj"))))
+        .cast("bigint")
+        .alias("n_types"),
+        F.min(F.when(out & (F.col("pred") == NAME_PRED), F.col("obj"))).alias("name"),
+        *shape_columns(shapes or [], out),
     )

@@ -132,8 +132,8 @@ def kg_node_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     display name per node (the north rule's "node tables" companion to
     the triple store; in the pipeline it is derived from the
     materialized store and written partitionBy(bucket), plans/
-    pipeline.py). Two map-side-combined aggs + one full-outer join —
-    no self-join, hot nodes are one row per agg."""
+    pipeline.py). One map-side-combined aggregation by node — no join,
+    no self-join, a hot node is one row."""
     from cyclegraph_spark.operators.nodes import node_table
     from cyclegraph_spark.operators.triples import lift_stream_rows
 

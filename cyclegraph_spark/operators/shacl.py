@@ -9,10 +9,10 @@ vocabulary: ``sh:NodeShape`` + ``sh:targetClass`` + property shapes with
 predicates over the long triple table (subj, pred, obj, obj_dtype):
 
 - targets        = subjects of (s, rdf:type, targetClass)
-- minCount       = per-focus property count < minCount (left join keeps
-                   zero-count focus nodes — the anti-join case)
-- maxCount       = per-focus property count > maxCount
-- datatype       = property rows whose obj_dtype differs from the
+- minCount       = per-focus count of non-NULL property values < minCount
+                   (a focus node with no value counts 0)
+- maxCount       = per-focus count of non-NULL property values > maxCount
+- datatype       = property values whose obj_dtype differs from the
                    expected datatype, or whose lexical form is invalid
                    for it (ill-typed literals) — per SHACL spec
                    DatatypeConstraintComponent semantics, which is what
@@ -25,10 +25,14 @@ predicates over the long triple table (subj, pred, obj, obj_dtype):
 Report schema mirrors pyshacl's result fields:
     violations(focus_node, path, constraint, message, value)
 
-Scale shape: one shuffle per property shape (groupBy focus) over a
-pred-filtered scan — the pred filter pushes down to parquet when the
-triple table is stored partitioned/sorted by pred. Shapes are driver-side
-metadata (a few rows), never joined at scale.
+Scale shape: no plan of its own. ``nodes.node_table`` groups the
+triples by node once; ``shape_columns`` adds aggregates to that groupBy
+— per shape the focus flag, per property the value count and the
+``collect_list`` of ill-typed values — and ``violations`` explodes them
+in one pass. So the plan holds one scan and one shuffle whatever the
+number of shapes and properties, and the factory derives this report
+and the node table from one checkpointed aggregation. Shapes are
+driver-side metadata (a few rows), never joined at scale.
 """
 
 from __future__ import annotations
@@ -200,68 +204,70 @@ def _lexical_ok(obj: Column, datatype: str) -> Column:
     return F.lit(True)
 
 
+def shape_columns(shapes: list[NodeShape], out: Column) -> list[Column]:
+    """The aggregates ``violations`` reads, over triple rows grouped by
+    node where ``out`` marks the rows whose subject is the node
+    (``nodes.node_table``): per shape, whether the node is typed by its
+    target class; per property, the count of non-NULL values and the
+    ill-typed ones. Catalyst computes a repeated aggregate once."""
+    pred, obj = F.col("pred"), F.col("obj")
+    cols = []
+    for i, shape in enumerate(shapes):
+        target = out & (pred == RDF_TYPE) & (obj == shape.target_class)
+        cols.append(F.bool_or(target).alias(f"_target{i}"))
+        for j, ps in enumerate(shape.properties):
+            on_path = out & (pred == ps.path)
+            cols.append(F.count(F.when(on_path, obj)).alias(f"_count{i}_{j}"))
+            if ps.datatype is not None:
+                ill = (F.col("obj_dtype") != ps.datatype) | ~_lexical_ok(obj, ps.datatype)
+                # a list, not a set: a value stored twice is reported twice
+                cols.append(F.collect_list(F.when(on_path & ill, obj)).alias(f"_bad{i}_{j}"))
+    return cols
+
+
+def _violation(
+    ps: PropertyShape, constraint: str, cond: Column, value: Column | None = None
+) -> Column:
+    """A violation struct where ``cond`` holds, else NULL."""
+    row = F.struct(
+        F.lit(ps.path).alias("path"),
+        F.lit(constraint).alias("constraint"),
+        F.lit(ps.message).cast("string").alias("message"),
+        (F.lit(None).cast("string") if value is None else value).alias("value"),
+    )
+    return F.when(cond, row)
+
+
+def violations(report: DataFrame, shapes: list[NodeShape]) -> DataFrame:
+    """``node_table(triples, shapes)`` → violations DF: one row per
+    minCount or maxCount violation of a focus node, one per ill-typed
+    value of a focus node."""
+    parts = []  # arrays of violation structs, NULL where a node conforms
+    for i, shape in enumerate(shapes):
+        focus = F.col(f"_target{i}")
+        for j, ps in enumerate(shape.properties):
+            n = F.col(f"_count{i}_{j}")
+            if ps.min_count is not None:
+                parts.append(F.array(_violation(ps, "minCount", focus & (n < ps.min_count))))
+            if ps.max_count is not None:
+                parts.append(F.array(_violation(ps, "maxCount", focus & (n > ps.max_count))))
+            if ps.datatype is not None:
+                bad = F.col(f"_bad{i}_{j}")
+                parts.append(F.transform(bad, lambda v: _violation(ps, "datatype", focus, v)))
+    if not parts:
+        return report.sparkSession.createDataFrame([], VIOLATION_SCHEMA)
+    return (
+        report.select(F.col("id").alias("focus_node"), F.explode(F.concat(*parts)).alias("v"))
+        .filter(F.col("v").isNotNull())
+        .select("focus_node", "v.*")
+    )
+
+
 def validate(triples: DataFrame, shapes: list[NodeShape]) -> DataFrame:
     """triples(subj, pred, obj, obj_dtype) × shapes → violations DF."""
-    spark = triples.sparkSession
-    parts: list[DataFrame] = []
-    for shape in shapes:
-        targets = (
-            triples.filter(
-                (F.col("pred") == RDF_TYPE) & (F.col("obj") == shape.target_class)
-            )
-            .select(F.col("subj").alias("focus_node"))
-            .distinct()
-        )
-        for ps in shape.properties:
-            prop = triples.filter(F.col("pred") == ps.path).select(
-                F.col("subj").alias("focus_node"), "obj", "obj_dtype"
-            )
-            if ps.min_count is not None or ps.max_count is not None:
-                counts = (
-                    targets.join(prop, "focus_node", "left")
-                    .groupBy("focus_node")
-                    .agg(F.count("obj").alias("n"))
-                )
-                if ps.min_count is not None:
-                    parts.append(
-                        counts.filter(F.col("n") < ps.min_count).select(
-                            "focus_node",
-                            F.lit(ps.path).alias("path"),
-                            F.lit("minCount").alias("constraint"),
-                            F.lit(ps.message).alias("message"),
-                            F.lit(None).cast("string").alias("value"),
-                        )
-                    )
-                if ps.max_count is not None:
-                    parts.append(
-                        counts.filter(F.col("n") > ps.max_count).select(
-                            "focus_node",
-                            F.lit(ps.path).alias("path"),
-                            F.lit("maxCount").alias("constraint"),
-                            F.lit(ps.message).alias("message"),
-                            F.lit(None).cast("string").alias("value"),
-                        )
-                    )
-            if ps.datatype is not None:
-                bad = targets.join(prop, "focus_node").filter(
-                    (F.col("obj_dtype") != ps.datatype)
-                    | ~_lexical_ok(F.col("obj"), ps.datatype)
-                )
-                parts.append(
-                    bad.select(
-                        "focus_node",
-                        F.lit(ps.path).alias("path"),
-                        F.lit("datatype").alias("constraint"),
-                        F.lit(ps.message).alias("message"),
-                        F.col("obj").alias("value"),
-                    )
-                )
-    if not parts:
-        return spark.createDataFrame([], VIOLATION_SCHEMA)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    from cyclegraph_spark.operators.nodes import node_table  # nodes imports this module
+
+    return violations(node_table(triples, shapes), shapes)
 
 
 # --------------------------------------------------------------------------

@@ -16,27 +16,27 @@ branches side by side:
       └─ link thread:  link mentions (one mapInArrow pass: each page's
                        n-grams probe the collected alias index)
                        → links write (dynamic overwrite)
-      ⋈ join 1: the link thread is joined before materialize, because
+      ⋈ join: the link thread is joined before materialize, because
         the manifest commit marks a bucket done only once every output
         derived from it has landed
       → materialize       (bucketed parquet + manifest commit + lineage)
-      ├─ pool thread:  SHACL validate over the whole store → violations
-      └─ main thread:  node table over the whole store → nodes
-      ⋈ join 2: both reports have landed before lineage is appended
+      → report            (one checkpointed aggregation of the whole
+                           store by node → violations, nodes)
 
 Linking reads only the page text and the alias table, so it depends on
-nothing the lift branch computes. Validate and nodes each read the
-committed store and write their own directory. Extract is not split
-per branch: both branches read its one checkpoint, so a generated
-corpus is produced once instead of once per branch.
+nothing the lift branch computes. Extract is not split per branch: both
+branches read its one checkpoint, so a generated corpus is produced
+once instead of once per branch. Both reports group the store by node,
+so ``node_table(store, shapes)`` computes the node and SHACL columns in
+one pass; the violations are exploded from it, the nodes selected.
 
-Threads come from one ``ThreadPoolExecutor`` whose size is the DAG's
-width (2). Its context manager waits for every branch, so none
-outlives a raise on the other; a branch's error surfaces through
-``Future.result()`` before the commit. Each task runs under
+The link thread comes from a one-thread ``ThreadPoolExecutor``. Its
+context manager waits for the branch, so it does not outlive a raise on
+the main thread; the branch's error surfaces through ``Future.result()``
+before the commit. The task runs under
 ``inheritable_thread_target(spark)``, so it inherits the caller's Spark
-local properties and session tags, and sets its own job group. Branches
-return their stage metrics; lineage rows keep one fixed stage order.
+local properties and session tags, and sets its own job group. It
+returns its stage metrics; lineage rows keep one fixed stage order.
 
 Per-stage lineage rows mirror the reference's per-step duration logging
 (/root/reference/cli/session.py:338-352 ``_timed``). Under overlap, a
@@ -44,11 +44,11 @@ stage's ``sec`` is its own wall time, so the stage times add up to more
 than the run's.
 
 The pipeline is lazy end-to-end until materialize, apart from the
-checkpoints of pages, triples and the CC labels, each read by several
-consumers; stage row counts come from an ``Observation`` on each write
-(the count rides on the write job), not from mid-plan ``.count()``
-actions that would re-execute the expensive prefix or from re-reading
-what was just written.
+checkpoints of pages, triples, the CC labels and the report, each read
+by several consumers; stage row counts come from an ``Observation`` on
+each write (the count rides on the write job), not from mid-plan
+``.count()`` actions that would re-execute the expensive prefix or from
+re-reading what was just written.
 """
 
 from __future__ import annotations
@@ -64,7 +64,8 @@ from pyspark.sql import functions as F
 from cyclegraph_spark.extract.text import extract_text_udf
 from cyclegraph_spark.operators.cc import canonicalize_triples, connected_components
 from cyclegraph_spark.operators.linking import link_mentions
-from cyclegraph_spark.operators.shacl import NodeShape, validate
+# validate stays a module global: perfbench/layers.py traces it by name
+from cyclegraph_spark.operators.shacl import NodeShape, validate, violations
 from cyclegraph_spark.operators.triples import OWL_SAMEAS, lift_html_pages
 from cyclegraph_spark.plans.materialize import (
     LABELS,
@@ -77,9 +78,6 @@ from cyclegraph_spark.plans.materialize import (
     write_labels,
     write_parquet,
 )
-
-# the factory DAG is two branches wide: lift ∥ link, then validate ∥ nodes
-_BRANCHES = 2
 
 
 def run_pipeline(
@@ -112,34 +110,27 @@ def run_pipeline(
         pages = pages.localCheckpoint(eager=True)
         metrics["extract"] = {"sec": round(time.time() - t0, 3)}
 
-    with ThreadPoolExecutor(_BRANCHES) as pool:
+    with ThreadPoolExecutor(1) as pool:  # the link branch
         link = None
         if aliases is not None:
             link = pool.submit(inheritable_thread_target(spark)(_link), pages, aliases, out_dir)
         canon, stages = _lift_and_canonicalize(spark, pages, out_dir, run_id, done, n_buckets)
         metrics.update(stages)
         if link is not None:
-            metrics["link"] = link.result()  # join 1: links land before the commit
+            metrics["link"] = link.result()  # the join: links land before the commit
 
-        # --- materialize canonical triples (manifest + lineage; bucket =
-        # provenance/url bucket so resume-prune and manifest ids agree).
-        # Commits the checkpoint manifest — completion marker for the run.
-        t0 = time.time()
-        res = materialize_triples(canon, out_dir, run_id)
-        metrics["materialize"] = {
-            "rows": res["rows"],
-            "sec": round(time.time() - t0, 3),
-            "written": res["written"],
-            "skipped": res["skipped"],
-        }
-
-        report = None
-        if shapes:
-            report = pool.submit(inheritable_thread_target(spark)(_validate), spark, out_dir, shapes)
-        nodes = _nodes(spark, out_dir, n_buckets)
-        if report is not None:
-            metrics["validate"] = report.result()  # join 2
-        metrics["nodes"] = nodes
+    # --- materialize canonical triples (manifest + lineage; bucket =
+    # provenance/url bucket so resume-prune and manifest ids agree).
+    # Commits the checkpoint manifest — completion marker for the run.
+    t0 = time.time()
+    res = materialize_triples(canon, out_dir, run_id)
+    metrics["materialize"] = {
+        "rows": res["rows"],
+        "sec": round(time.time() - t0, 3),
+        "written": res["written"],
+        "skipped": res["skipped"],
+    }
+    metrics.update(_report(spark, out_dir, shapes, n_buckets))
 
     append_lineage(
         out_dir,
@@ -255,25 +246,25 @@ def _link(pages: DataFrame, aliases: DataFrame, out_dir: str) -> dict:
     return {"rows": n, "sec": round(time.time() - t0, 3)}
 
 
-def _validate(spark: SparkSession, out_dir: str, shapes: list[NodeShape]) -> dict:
-    """SHACL violations: a REPORT over the whole materialized store —
-    full recompute + overwrite each run, so it is idempotent by design
-    and correct even for subjects whose triples span buckets."""
+def _report(
+    spark: SparkSession, out_dir: str, shapes: list[NodeShape] | None, n_buckets: int
+) -> dict[str, dict]:
+    """The violations (given shapes) and the node table: REPORTS over the
+    whole materialized store, full recompute + overwrite each run, so
+    idempotent by design and correct even for nodes whose triples span
+    buckets. The shared aggregation's time is booked to the first."""
+    # looked up per call: perfbench/layers.py traces nodes.node_table
+    from cyclegraph_spark.operators.nodes import NODE_COLUMNS, node_table
+
+    metrics: dict[str, dict] = {}
     t0 = time.time()
     store = spark.read.parquet(os.path.join(out_dir, "data"))
-    n = write_parquet(validate(store, shapes), os.path.join(out_dir, "violations"))
-    return {"rows": n, "sec": round(time.time() - t0, 3)}
-
-
-def _nodes(spark: SparkSession, out_dir: str, n_buckets: int) -> dict:
-    """Node table (north-rule companion artifact): derived wholly from
-    the materialized store, full recompute + overwrite per run —
-    idempotent by construction, same discipline as the validate
-    report."""
-    from cyclegraph_spark.operators.nodes import node_table
-
-    t0 = time.time()
-    store = spark.read.parquet(os.path.join(out_dir, "data"))
-    nodes = node_table(store).withColumn("bucket", bucket("id", n_buckets))
+    report = node_table(store, shapes).localCheckpoint(eager=True)
+    if shapes:
+        n = write_parquet(violations(report, shapes), os.path.join(out_dir, "violations"))
+        metrics["validate"] = {"rows": n, "sec": round(time.time() - t0, 3)}
+        t0 = time.time()
+    nodes = report.select(*NODE_COLUMNS).withColumn("bucket", bucket("id", n_buckets))
     n = write_parquet(nodes, os.path.join(out_dir, "nodes"), by="bucket")
-    return {"rows": n, "sec": round(time.time() - t0, 3)}
+    metrics["nodes"] = {"rows": n, "sec": round(time.time() - t0, 3)}
+    return metrics

@@ -186,6 +186,25 @@ def test_full_pipeline_and_compaction(spark, tmp_path):
     assert 0 < n <= store2.select("subj", "pred", "obj", "obj_dtype").distinct().count()
 
 
+def _assert_reports_match_registry(spark, out, shapes):
+    """The violations and nodes a run wrote equal, as multisets, what the
+    registry's ``validate`` and ``node_table`` compute over its store."""
+    from collections import Counter
+
+    from cyclegraph_spark.operators.nodes import NODE_COLUMNS, node_table
+    from cyclegraph_spark.operators.shacl import validate
+
+    def rows(df):
+        return Counter(map(tuple, df.collect()))
+
+    store = spark.read.parquet(out + "/data")
+    violations = validate(store, shapes)
+    written = spark.read.parquet(out + "/violations").select(*violations.columns)
+    assert rows(written) == rows(violations)
+    nodes = spark.read.parquet(out + "/nodes").select(*NODE_COLUMNS)
+    assert rows(nodes) == rows(node_table(store))
+
+
 def test_pipeline_stage_counts_match_written_outputs(spark, tmp_path):
     """Hermetic run (shapes built in code): the row counts a run reports
     equal the rows that landed, and lineage.jsonl holds one row per
@@ -217,6 +236,7 @@ def test_pipeline_stage_counts_match_written_outputs(spark, tmp_path):
         stage_rows = [r for r in map(json.loads, f) if "partition" not in r]
     assert [r["stage"] for r in stage_rows] == list(m1)
     assert all(r["run_id"] == "r1" for r in stage_rows)
+    _assert_reports_match_registry(spark, out, shapes)
 
     done = sorted(CheckpointManifest(out).completed())
     m2 = run("r2", pages)
@@ -224,6 +244,7 @@ def test_pipeline_stage_counts_match_written_outputs(spark, tmp_path):
     resumed = links.filter(~F.col("part_id").isin(*done)).count()
     assert m2["link"]["rows"] == resumed < links.count()
     assert m2["nodes"]["rows"] == spark.read.parquet(out + "/nodes").count()
+    _assert_reports_match_registry(spark, out, shapes)
 
     m3 = run("r3", pages)
     assert m3["link"]["rows"] == 0
@@ -375,9 +396,9 @@ def _stage_rows(out):
 
 
 def test_pipeline_lineage_order_is_fixed(spark, tmp_path):
-    """The link and validate branches run on a pool thread beside the
-    main branch, yet two identical fresh runs write the same stage rows,
-    one per stage, in one fixed order."""
+    """The link branch runs on a pool thread beside the main branch, and
+    both reports come from one aggregation, yet two identical fresh runs
+    write the same stage rows, one per stage, in one fixed order."""
     shapes = [
         NodeShape(
             "ExerciseActionShape",

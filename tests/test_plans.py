@@ -4,6 +4,7 @@ output so regressions in plan shape fail CI, not the cluster:
 - filters/projections reach the parquet scan (PushedFilters/ReadSchema),
 - dimension joins broadcast (no shuffle of the fact side's keyspace),
 - the triple-lift hot path is shuffle-free (no Exchange),
+- the SHACL report and the node table are one aggregation (one Exchange),
 - top-k plans as TakeOrderedAndProject (no full sort),
 - the as-of and band joins hash-join on their equi keys (no
   nested-loop/cartesian fallback).
@@ -45,6 +46,25 @@ def test_lift_html_is_shuffle_free(spark):
 
     plan = _plan(lift_html_pages(pages_df(spark, 100)))
     assert "Exchange" not in plan, plan  # narrow end-to-end
+
+
+def test_store_reports_are_one_aggregation(spark):
+    """The violations and the node table come from one groupBy by node:
+    one shuffle, no join and no union, whatever the number of shapes and
+    properties."""
+    from cyclegraph_spark.operators.nodes import node_table
+    from cyclegraph_spark.operators.shacl import NodeShape, PropertyShape, validate
+    from cyclegraph_spark.operators.triples import SCHEMA, XSD_INT
+
+    triples = spark.createDataFrame(
+        [("s", "p", "o", "uri")], "subj string, pred string, obj string, obj_dtype string"
+    )
+    props = [PropertyShape(SCHEMA + p, XSD_INT, 1, 1) for p in ("power", "heartRate", "name")]
+    shapes = [NodeShape("A", SCHEMA + "ExerciseAction", props), NodeShape("B", SCHEMA + "X", props)]
+    for df in (node_table(triples, shapes), validate(triples, shapes)):
+        plan = _plan(df)
+        assert plan.count("Exchange") == 1, plan
+        assert "Join" not in plan and "Union" not in plan, plan
 
 
 def test_lift_html_has_no_case_mapping(spark):

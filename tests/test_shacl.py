@@ -19,6 +19,8 @@ from pyspark.sql import types as T
 
 from cyclegraph_spark.operators.shacl import (
     RDF_TYPE,
+    NodeShape,
+    PropertyShape,
     parse_shapes_ttl,
     reference_validate,
     validate,
@@ -55,6 +57,12 @@ def shapes():
 def repo_shapes():
     path = Path(__file__).parent / "fixtures" / "session_shape.ttl"
     return parse_shapes_ttl(path.read_text())
+
+
+@pytest.fixture(params=["shapes", "repo_shapes"])
+def each_shapes(request):
+    """The reference shapes file, then the repository's own."""
+    return request.getfixturevalue(request.param)
 
 
 def _df(spark, graph):
@@ -147,32 +155,32 @@ def test_repo_shapes_violation(spark, repo_shapes, graph, violation):
     assert _assert_parity(spark, graph(), repo_shapes) == {violation}
 
 
-def test_ill_typed_lexical_violation(spark, shapes):
+def test_ill_typed_lexical_violation(spark, each_shapes):
     # "abc"^^xsd:float is ill-typed — pyshacl flags DatatypeConstraint
     g = _sample_graph()
     g.discard((f"{EX}session4", SCHEMA + "heartRate", "151", XSD + "float"))
     g.add((f"{EX}session4", SCHEMA + "heartRate", "abc", XSD + "float"))
-    got = _assert_parity(spark, g, shapes)
+    got = _assert_parity(spark, g, each_shapes)
     assert (f"{EX}session4", SCHEMA + "heartRate", "datatype", "abc") in got
 
 
-def test_untargeted_nodes_ignored(spark, shapes):
+def test_untargeted_nodes_ignored(spark, each_shapes):
     # nodes without rdf:type ExerciseAction are not focus nodes
     g = _sample_graph()
     g.add((f"{EX}other1", SCHEMA + "power", "nope", XSD + "string"))
-    _assert_parity(spark, g, shapes)
-    assert validate(_df(spark, g), shapes).isEmpty()
+    _assert_parity(spark, g, each_shapes)
+    assert validate(_df(spark, g), each_shapes).isEmpty()
 
 
-def test_lifted_corpus_violations_shape(spark, shapes):
+def test_lifted_corpus_violations_shape(spark, each_shapes):
     """End-to-end: lifted synthetic pages validated against the
-    reference shapes — malformed power values (skip-on-error drops the
+    session shapes — malformed power values (skip-on-error drops the
     triple) surface as minCount violations."""
     from cyclegraph_spark.operators.triples import lift_html_pages
     from cyclegraph_spark.sources.pages import pages_df
 
     triples = lift_html_pages(pages_df(spark, 200, partitions=4)).drop("src")
-    report = validate(triples, shapes)
+    report = validate(triples, each_shapes)
     rows = report.collect()
     # corpus has ~2/17 of pages with malformed/empty power → minCount
     kinds = {r.constraint for r in rows}
@@ -186,8 +194,6 @@ def test_lifted_corpus_violations_shape(spark, shapes):
 def test_integer_lexical_parity(spark):
     """xsd:integer's lexical check agrees with the oracle's fullmatch:
     a trailing newline or a leading space is ill-typed, a sign is not."""
-    from cyclegraph_spark.operators.shacl import NodeShape, PropertyShape
-
     shapes = [
         NodeShape("S", SCHEMA + "ExerciseAction", [PropertyShape(SCHEMA + "power", XSD + "integer")])
     ]
@@ -235,8 +241,6 @@ def test_float_lexical_parity_on_edge_values(spark):
     ``float()`` parses them: a cast to double would accept ``1.5d`` and
     ``0x1p3`` and reject ``1_000``. Non-ASCII digits are out of scope:
     ``float()`` parses them, the Spark check does not."""
-    from cyclegraph_spark.operators.shacl import NodeShape, PropertyShape
-
     _float_parity(spark, FLOAT_EDGE_VALUES)
     dts = [XSD + dt for dt in ("float", "double", "decimal")]
     shapes = [
@@ -262,3 +266,78 @@ def test_float_lexical_parity_on_edge_values(spark):
 ))
 def test_float_lexical_parity_property(spark, values):
     _float_parity(spark, values)
+
+
+def test_value_stored_twice_is_reported_twice(spark, repo_shapes):
+    """An ill-typed quad stored under two provenances (``src``) is two
+    values: two datatype violations and one maxCount violation, not one
+    of each — the report is a multiset, as the store is."""
+    from collections import Counter
+
+    focus, path = f"{EX}session1", SCHEMA + "heartRate"
+    g = _sample_graph()
+    g.discard((focus, path, "150", XSD + "float"))
+    bad = (focus, path, "abc", XSD + "float")
+    rows = [("a", *q) for q in sorted(g)] + [("a", *bad), ("b", *bad)]
+    df = spark.createDataFrame(
+        rows, "src string, subj string, pred string, obj string, obj_dtype string"
+    )
+    got = Counter(
+        (r.focus_node, r.path, r.constraint, r.value) for r in validate(df, repo_shapes).collect()
+    )
+    assert got == Counter({(focus, path, "datatype", "abc"): 2, (focus, path, "maxCount", None): 1})
+
+
+CLASSES = [EX + "Ride", EX + "Run"]
+PATHS = [SCHEMA + "power", SCHEMA + "heartRate", SCHEMA + "name"]
+SUBJECTS = [f"{EX}session{i}" for i in range(4)]
+OBJ_DTYPES = [XSD + "integer", XSD + "float", XSD + "boolean", XSD + "string", "uri"]
+LEXICAL = ["1", "-2", "2.5", "1e3", "1_000", " 7", "true", "0", "abc", ""]
+
+_property_shapes = st.builds(
+    PropertyShape,
+    path=st.sampled_from(PATHS),
+    datatype=st.sampled_from([None, XSD + "integer", XSD + "float", XSD + "boolean"]),
+    min_count=st.none() | st.integers(0, 2),
+    max_count=st.none() | st.integers(0, 2),
+    message=st.none() | st.just("bad value"),
+)
+
+
+@st.composite
+def _graphs(draw):
+    """Subjects typed by 0, 1 or 2 target classes, with 0-3 values per
+    path; uri values point at other subjects, so those gain inbound
+    triples that must not count as their values."""
+    g = set()
+    for s in SUBJECTS:
+        for c in draw(st.lists(st.sampled_from(CLASSES), max_size=2, unique=True)):
+            g.add((s, RDF_TYPE, c, "uri"))
+        for p in PATHS:
+            for _ in range(draw(st.integers(0, 3))):
+                dt = draw(st.sampled_from(OBJ_DTYPES))
+                pool = SUBJECTS if dt == "uri" else LEXICAL
+                g.add((s, p, draw(st.sampled_from(pool)), dt))
+    return g
+
+
+@settings(max_examples=25, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(
+    graph=_graphs(),
+    shapes=st.lists(
+        st.builds(
+            NodeShape,
+            name=st.just("S"),
+            target_class=st.sampled_from(CLASSES),
+            properties=st.lists(_property_shapes, min_size=1, max_size=3),
+        ),
+        min_size=1,
+        max_size=2,
+    ),
+)
+def test_validate_matches_reference_property(spark, graph, shapes):
+    """``validate`` equals ``reference_validate`` on random small graphs
+    under one or two shapes drawn from three paths, so a subject can be
+    the focus of two shapes that constrain the same path."""
+    _assert_parity(spark, graph, shapes)
