@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from cyclegraph_spark.operators.textstats import WHITESPACE, reference_tokens, tokens, trim_spaces
+
 SHINGLE_N = 3
 
 
@@ -49,7 +51,7 @@ def exact_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -
 
     Output: (fingerprint, keeper_id, n_dupes).
     """
-    norm = F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " ")
+    norm = F.regexp_replace(F.lower(trim_spaces(F.col(text_col))), WHITESPACE, " ")
     return (
         df.select(F.md5(norm).alias("fingerprint"), F.col(id_col))
         .groupBy("fingerprint")
@@ -70,7 +72,7 @@ def _doc_shingles(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     # per-element re-split.
     toked = ensure_min_partitions(
         df.select(F.col(id_col).alias("doc"), F.col(text_col))
-    ).select("doc", F.split(F.trim(F.col(text_col)), r"\s+").alias("_toks"))
+    ).select("doc", tokens(F.col(text_col)).alias("_toks"))
     return toked.select(
         "doc", F.explode(shingles_from_tokens(F.col("_toks"))).alias("sh")
     ).filter(F.col("sh") != "")
@@ -378,7 +380,7 @@ def simhash(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> Da
         df.select(F.col(id_col).alias("doc"), F.col(text_col))
     ).select(
         "doc",
-        F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("tok"),
+        F.explode(tokens(F.col(text_col))).alias("tok"),
     ).filter(F.col("tok") != "")
     hashed = toks.select("doc", F.xxhash64("tok").alias("_h"))
     # vote_b > 0 ⇔ 2·ones_b > n_tokens (ones_b = count of set bits b):
@@ -461,7 +463,7 @@ def simhash_near_pairs(
 # --------------------------------------------------------------------------
 
 def reference_shingles(text: str, n: int = SHINGLE_N) -> set[str]:
-    toks = text.strip().split()
+    toks = reference_tokens(text)
     if len(toks) < n:
         return set()
     return {" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)}
@@ -496,9 +498,7 @@ def split_contamination(
     automatically) so the eval side prunes before the shuffle.
     """
     base = df.select(F.col(id_col).alias("doc"), F.col(text_col).alias("_t"), is_train.alias("_tr"))
-    toked = base.select(
-        "doc", "_tr", F.split(F.trim(F.col("_t")), r"\s+").alias("_toks")
-    )
+    toked = base.select("doc", "_tr", tokens(F.col("_t")).alias("_toks"))
     # shingles_from_tokens is array_distinct per doc, so (doc, sh) is
     # already unique — no distinct shuffle needed
     sh = toked.select(

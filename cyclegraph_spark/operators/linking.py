@@ -103,6 +103,10 @@ def link_mentions(
     the entity the rest of the document talks about — the "prior ×
     context features" design from SURVEY.md M4).
 
+    Pages are tokenized with ``str.split()``, not the document family's
+    ``textstats.tokens``: this linker's oracle is ``reference_link``, and
+    extracted web text holds U+00A0 (``&#160;``), which must split.
+
     The alias table is a dimension table: it is collected once and the
     worker closes over its index (PySpark broadcasts a pickled function
     above 1 MiB, so a large index still ships once per executor). A NULL
@@ -154,5 +158,9 @@ def reference_link(
     Returns [(pos, alias, entity_id, score)] — best link per position,
     score = prior × (1 + w·ln(1 + (support − 1))) with support = distinct
     candidate positions proposing that entity in this document.
+
+    It keeps ``str.split()`` rather than ``textstats.reference_tokens``:
+    it is the oracle of the factory's linker, not of a DuckDB leaf, and
+    splits the U+00A0 that ``extract_text`` keeps from ``&#160;``.
     """
     return _link_doc(text, _alias_index(alias_rows), context_weight)

@@ -63,6 +63,8 @@ def t_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def t_quality_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality-feature extraction (length/punct/stopword counts)."""
+    from cyclegraph_spark.operators.textstats import token_count
+
     d = load(spark, sf_dir, "documents").filter(F.col("doc_id") % 7 == 0)
     # long casts: DuckDB len()/length() yield BIGINT while Spark's
     # length/size/regexp_count yield INT — align representations so the
@@ -71,7 +73,7 @@ def t_quality_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.select(
         "doc_id",
         F.length("text").cast("long").alias("n_chars"),
-        F.size(F.split(F.trim(F.col("text")), r"\s+")).cast("long").alias("n_tokens"),
+        token_count(F.col("text")).cast("long").alias("n_tokens"),
         F.regexp_count("text", F.lit(r"[.,;:!?]")).cast("long").alias("n_punct"),
         F.regexp_count("text", F.lit(r"(?i)\b(the|and|of|to|is)\b"))
         .cast("long")
@@ -565,11 +567,13 @@ def t_token_count_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token counting two ways: whitespace + a BPE-ish regex segmenter
     (GPT2-style contraction/letter/digit/punct classes, lookahead-free so
     RE2 and Java agree)."""
+    from cyclegraph_spark.operators.textstats import token_count
+
     d = load(spark, sf_dir, "documents").filter(F.col("doc_id") % 11 == 0)
     # long casts: align with DuckDB len() BIGINT (see t_quality_features).
     return d.select(
         "doc_id",
-        F.size(F.split(F.trim(F.col("text")), r"\s+")).cast("long").alias("n_ws_tokens"),
+        token_count(F.col("text")).cast("long").alias("n_ws_tokens"),
         F.regexp_count("text", F.lit(_BPE_PATTERN)).cast("long").alias("n_bpe_tokens"),
     )
 

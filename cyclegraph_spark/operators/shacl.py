@@ -17,6 +17,9 @@ predicates over the long triple table (subj, pred, obj, obj_dtype):
                    for it (ill-typed literals) — per SHACL spec
                    DatatypeConstraintComponent semantics, which is what
                    pyshacl implements.
+- a NULL obj on a property path fails the run with an error naming the
+  column: counting it and skipping it would each decide minCount
+  silently.
 
 ``inference="rdfs"`` in the reference call is a no-op for these shapes
 (no subclass axioms in the shapes graph) — documented and skipped
@@ -204,12 +207,16 @@ def _lexical_ok(obj: Column, datatype: str) -> Column:
     return F.lit(True)
 
 
+_NULL_OBJ = "shacl: column obj is NULL on path %s of subject %s"
+
+
 def shape_columns(shapes: list[NodeShape], out: Column) -> list[Column]:
     """The aggregates ``violations`` reads, over triple rows grouped by
     node where ``out`` marks the rows whose subject is the node
     (``nodes.node_table``): per shape, whether the node is typed by its
-    target class; per property, the count of non-NULL values and the
-    ill-typed ones. Catalyst computes a repeated aggregate once."""
+    target class; per property, the count of values and the ill-typed
+    ones. Catalyst computes a repeated aggregate once. The count raises
+    on a NULL value, so the check costs no job of its own."""
     pred, obj = F.col("pred"), F.col("obj")
     cols = []
     for i, shape in enumerate(shapes):
@@ -217,7 +224,9 @@ def shape_columns(shapes: list[NodeShape], out: Column) -> list[Column]:
         cols.append(F.bool_or(target).alias(f"_target{i}"))
         for j, ps in enumerate(shape.properties):
             on_path = out & (pred == ps.path)
-            cols.append(F.count(F.when(on_path, obj)).alias(f"_count{i}_{j}"))
+            null = F.raise_error(F.format_string(_NULL_OBJ, F.lit(ps.path), F.col("subj")))
+            value = F.coalesce(obj, null)
+            cols.append(F.count(F.when(on_path, value)).alias(f"_count{i}_{j}"))
             if ps.datatype is not None:
                 ill = (F.col("obj_dtype") != ps.datatype) | ~_lexical_ok(obj, ps.datatype)
                 # a list, not a set: a value stored twice is reported twice
@@ -280,7 +289,8 @@ def reference_validate(
     """Pure-Python validator with SHACL-spec semantics for the
     min/max-count + datatype constraint kinds (what pyshacl computes for
     the reference's shapes graph). Returns
-    {(focus, path, constraint, value)}."""
+    {(focus, path, constraint, value)}. Raises on a NULL obj on a
+    property path, as ``validate`` does."""
 
     def lex_ok(obj: str, dt: str) -> bool:
         if dt == _XSD + "integer":
@@ -295,6 +305,10 @@ def reference_validate(
             return obj in ("true", "false", "1", "0")
         return True
 
+    paths = {ps.path for shape in shapes for ps in shape.properties}
+    for s, p, o, _ in triples:
+        if o is None and p in paths:
+            raise ValueError(_NULL_OBJ % (p, s))
     out: set[tuple[str, str, str, str | None]] = set()
     for shape in shapes:
         focus_nodes = {s for s, p, o, _ in triples if p == RDF_TYPE and o == shape.target_class}

@@ -1,14 +1,18 @@
 """Text analysis operators for large-scale corpus pipelines — language
-ID, token counting, PII scrubbing.
+ID, token counting, PII scrubbing — and the document family's one
+whitespace rule.
 
-All pure Column expressions (whole-stage codegen; no UDF). The scalar
-surface mirrors the reference's string/regex normalization family
+The operators are pure Column expressions (whole-stage codegen; no
+UDF). The scalar surface mirrors the reference's string/regex
+normalization family
 (SURVEY.md §2.7: lower/trim key normalization cli/session.py:1202-1204,
 regex numeric extraction :1271-1291, keyword classification
 core/src/physics.rs:446-507, safe-slug trend9.py:267).
 """
 
 from __future__ import annotations
+
+import re
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -24,8 +28,32 @@ LANG_MARKERS: dict[str, tuple[str, ...]] = {
 }
 
 
+# The document family's whitespace rule, as the DuckDB oracle SQL's
+# string_split_regex(trim(text), '\s+') applies it. DuckDB's trim strips
+# the Unicode space separators (category Zs) from both ends, where
+# Spark's trim() strips only U+0020. The split is on RE2's \s, which
+# leaves out the U+000B that Java's \s holds, so Spark code must not
+# write \s for this rule.
+SPACES = " \u00a0\u1680\u2000\u2001\u2002\u2003\u2004\u2005\u2006\u2007\u2008\u2009\u200a\u202f\u205f\u3000"
+WHITESPACE = r"[ \t\n\f\r]+"
+
+
+def trim_spaces(text_col: Column) -> Column:
+    """The oracle SQL's ``trim(text)``."""
+    return F.trim(text_col, F.lit(SPACES))
+
+
 def tokens(text_col: Column) -> Column:
-    return F.split(F.trim(text_col), r"\s+")
+    """Whitespace tokens, as the oracle's
+    ``string_split_regex(trim(text), '\\s+')``: an empty or all-space
+    text is one empty token, and whitespace other than SPACES at an edge
+    leaves an empty edge token."""
+    return F.split(trim_spaces(text_col), WHITESPACE)
+
+
+def reference_tokens(text: str) -> list[str]:
+    """The Python twin of ``tokens``."""
+    return re.split(WHITESPACE, text.strip(SPACES))
 
 
 def token_count(text_col: Column) -> Column:

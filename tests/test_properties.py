@@ -12,7 +12,7 @@ from __future__ import annotations
 import datetime as dt
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -32,6 +32,24 @@ _SETTINGS = dict(
 # printable-ish unicode incl. multi-byte; Spark hashes UTF-8 bytes
 _texts = st.text(min_size=0, max_size=40)
 _longs = st.integers(min_value=-(2**63), max_value=2**63 - 1)
+
+
+def _twin():
+    """tools/gen_value_oracles.py, the module of the twins that generate
+    the VALUES oracles, loaded once."""
+    import importlib.util
+    import os
+    import sys
+
+    if "gen_value_oracles" not in sys.modules:
+        repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        spec = importlib.util.spec_from_file_location(
+            "gen_value_oracles", os.path.join(repo, "tools", "gen_value_oracles.py")
+        )
+        mod = importlib.util.module_from_spec(spec)
+        sys.modules["gen_value_oracles"] = mod
+        spec.loader.exec_module(mod)
+    return sys.modules["gen_value_oracles"]
 
 
 @settings(**_SETTINGS)
@@ -471,31 +489,53 @@ _words = st.lists(
     min_size=0,
     max_size=12,
 )
+# whitespace the oracle's RE2 '\s' splits on, then U+000B (Java's \s
+# only) and two Unicode spaces neither splits on
+_separators = st.sampled_from([" ", "\t", "\n", "\r", "\f", "\x0b", "\xa0", "\u2003"])
+
+
+@st.composite
+def _ws_text(draw):
+    """Drawn words joined by drawn separators, with optional leading and
+    trailing whitespace."""
+    words = draw(_words)
+    edge = st.one_of(st.just(""), _separators)
+    text = draw(edge)
+    for i, w in enumerate(words):
+        text += (draw(_separators) if i else "") + w
+    return text + draw(edge)
+
+
+# each fails a tokenizer the oracle does not use: U+000B splits under
+# Java's \s, U+00A0 and U+2003 under str.split, an edge tab leaves an
+# empty first token the oracle keeps, and the oracle's trim strips edge
+# U+00A0 and U+2003 where Spark's trim strips only U+0020
+_WS_EXAMPLES = [
+    "alpha\x0bbeta gamma delta epsil",
+    "alpha\xa0beta gamma delta epsil",
+    "alpha\u2003beta gamma delta",
+    "\talpha beta gamma delta",
+    "\xa0alpha beta gamma\u2003",
+    "alpha beta gamma delta\n",
+    "",
+    "   ",
+    "\n",
+]
 
 
 @settings(max_examples=5, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
-@given(doc_words=st.lists(_words, min_size=1, max_size=12))
-def test_minhash_twin_matches_spark(spark, doc_words):
+@given(doc_texts=st.lists(_ws_text(), min_size=1, max_size=12))
+@example(doc_texts=_WS_EXAMPLES)
+def test_minhash_twin_matches_spark(spark, doc_texts):
     """The MinHash twin in tools/gen_value_oracles.py GENERATES the
     dedup_minhash_lsh VALUES oracle, so its whole chain — shingling,
     hash-once per-seed values, 64-way min, band-slice xxhash64 fold,
     candidate pairing, agreement estimate — must equal the Spark
     operators on arbitrary texts, not just the seeded sf0.01 corpus.
-    Small word alphabet forces shingle collisions across docs."""
-    import importlib.util
-    import os
-    import sys
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    if "gen_value_oracles" not in sys.modules:
-        spec = importlib.util.spec_from_file_location(
-            "gen_value_oracles", os.path.join(repo, "tools", "gen_value_oracles.py")
-        )
-        mod = importlib.util.module_from_spec(spec)
-        sys.modules["gen_value_oracles"] = mod
-        spec.loader.exec_module(mod)
-    twin = sys.modules["gen_value_oracles"]
+    Small word alphabet forces shingle collisions across docs; the
+    separators and edge whitespace pin the shared tokenizer."""
+    twin = _twin()
     from cyclegraph_spark.operators.dedup import (
         minhash_lsh_pairs,
         minhash_signatures,
@@ -509,7 +549,7 @@ def test_minhash_twin_matches_spark(spark, doc_words):
     )
     from cyclegraph_spark.operators.dedup import reference_shingles
 
-    docs = [(i, " ".join(ws)) for i, ws in enumerate(doc_words)]
+    docs = list(enumerate(doc_texts))
     df = spark.createDataFrame(docs, "doc_id long, text string")
 
     sigs_df = minhash_signatures(df, k=64)
@@ -542,60 +582,79 @@ def test_minhash_twin_matches_spark(spark, doc_words):
 
 @settings(max_examples=5, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
-@given(doc_words=st.lists(_words, min_size=1, max_size=14))
-def test_simhash_twin_matches_spark(spark, doc_words):
+@given(doc_texts=st.lists(_ws_text(), min_size=1, max_size=14))
+@example(doc_texts=_WS_EXAMPLES)
+def test_simhash_twin_matches_spark(spark, doc_texts):
     """The SimHash twin (which generates the dedup_simhash VALUES
     oracle) must equal the Spark operator — signature bit-for-bit
     including vote ties, and near-pair set at max_hamming=6 — on random
     word docs, not just the seeded corpus. The small alphabet yields
     duplicate and near-duplicate docs, so the pair stage is exercised,
-    and repeated tokens pin the frequency-weighted voting."""
-    import importlib.util
-    import os
-    import sys
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    if "gen_value_oracles" not in sys.modules:
-        spec = importlib.util.spec_from_file_location(
-            "gen_value_oracles", os.path.join(repo, "tools", "gen_value_oracles.py")
-        )
-        mod = importlib.util.module_from_spec(spec)
-        sys.modules["gen_value_oracles"] = mod
-        spec.loader.exec_module(mod)
-    twin = sys.modules["gen_value_oracles"]
+    and repeated tokens pin the frequency-weighted voting; the
+    separators and edge whitespace pin the shared tokenizer."""
+    twin = _twin()
     from cyclegraph_spark.operators.dedup import simhash, simhash_near_pairs
 
-    docs = [(i, " ".join(ws)) for i, ws in enumerate(doc_words)]
+    docs = list(enumerate(doc_texts))
     df = spark.createDataFrame(docs, "doc_id long, text string")
 
     sigs_df = simhash(df)
     got_sigs = {r.doc: r.simhash for r in sigs_df.collect()}
-    exp_pairs_list = twin.simhash_twin(docs)
-    # rebuild the twin's signature dict the same way it does internally
-    from cyclegraph_spark.functions.xxh64 import xxh64_bytes
-
-    exp_sigs = {}
-    for doc_id, text in docs:
-        toks = [t for t in text.strip().split() if t != ""]
-        if not toks:
-            continue
-        votes = [0] * 63
-        for t in toks:
-            h = xxh64_bytes(t.encode("utf-8"), 42)
-            for b in range(63):
-                votes[b] += 1 if (h >> b) & 1 else -1
-        sig = 0
-        for b in range(63):
-            if votes[b] > 0:
-                sig |= 1 << b
-        exp_sigs[doc_id] = sig
-    assert got_sigs == exp_sigs
+    assert got_sigs == twin.simhash_signatures(docs)
 
     got_pairs = {
         (r.doc_a, r.doc_b, r.hamming)
         for r in simhash_near_pairs(sigs_df, max_hamming=6).collect()
     }
-    assert got_pairs == set(exp_pairs_list)
+    assert got_pairs == set(twin.simhash_twin(docs))
+
+
+@settings(max_examples=5, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(doc_texts=st.lists(_ws_text(), min_size=1, max_size=8))
+@example(doc_texts=_WS_EXAMPLES)
+def test_whitespace_leaves_match_oracle_sql(spark, tmp_path, doc_texts):
+    """The leaves that count or normalize whitespace tokens equal their
+    committed oracle SQL, run in DuckDB over the same drawn documents.
+    The doc_ids are multiples of 77, so every row passes the % 7 and
+    % 11 filters. Of t_token_count_bpe only n_ws_tokens is compared: the
+    BPE pattern's \\s is Java's in Spark and RE2's in DuckDB."""
+    import tempfile
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from cyclegraph_spark.operators.queries import (
+        all_oracles,
+        all_queries,
+        extended_oracles,
+        extended_queries,
+    )
+
+    # one directory per example: hypothesis shares tmp_path among them
+    sf_dir = tempfile.mkdtemp(dir=tmp_path)
+    ids = pa.array([77 * i for i in range(len(doc_texts))], pa.int64())
+    pq.write_table(
+        pa.table({"doc_id": ids, "text": pa.array(doc_texts, pa.string())}),
+        f"{sf_dir}/documents.parquet",
+    )
+    queries = {**all_queries(), **extended_queries()}
+    oracles = {**all_oracles(), **extended_oracles()}
+    with duckdb.connect() as con:
+        con.execute(
+            f"CREATE VIEW documents AS SELECT * FROM read_parquet('{sf_dir}/documents.parquet')"
+        )
+        for name, cols in (
+            ("t_quality_features", ("doc_id", "n_chars", "n_tokens", "n_punct", "n_stopwords")),
+            ("t_token_count_bpe", ("doc_id", "n_ws_tokens")),
+            ("dedup_exact_md5", ("fingerprint", "keeper_id", "n_dupes")),
+        ):
+            got = sorted(tuple(r[c] for c in cols) for r in queries[name](spark, sf_dir).collect())
+            res = con.execute(oracles[name])
+            at = [[d[0] for d in res.description].index(c) for c in cols]
+            exp = sorted(tuple(row[i] for i in at) for row in res.fetchall())
+            assert got == exp, name
 
 
 @st.composite
@@ -753,19 +812,7 @@ def test_html_lift_twin_matches_udf(spark, pages):
     the corpus's absolute URIs left untested."""
     from collections import Counter
 
-    import importlib.util
-    import os
-    import sys
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    if "gen_value_oracles" not in sys.modules:
-        spec = importlib.util.spec_from_file_location(
-            "gen_value_oracles", os.path.join(repo, "tools", "gen_value_oracles.py")
-        )
-        mod = importlib.util.module_from_spec(spec)
-        sys.modules["gen_value_oracles"] = mod
-        spec.loader.exec_module(mod)
-    twin = sys.modules["gen_value_oracles"]
+    twin = _twin()
     from cyclegraph_spark.operators.triples import lift_html_pages
 
     df = spark.createDataFrame(pages, "url string, html binary")

@@ -288,6 +288,27 @@ def test_value_stored_twice_is_reported_twice(spark, repo_shapes):
     assert got == Counter({(focus, path, "datatype", "abc"): 2, (focus, path, "maxCount", None): 1})
 
 
+def _null_power():
+    """A focus node whose power row has a NULL obj, typed xsd:string."""
+    g = _sample_graph()
+    g.discard((f"{EX}session2", SCHEMA + "power", "220", XSD + "float"))
+    g.add((f"{EX}session2", SCHEMA + "power", None, XSD + "string"))
+    return g
+
+
+def test_null_obj_raises(spark, repo_shapes):
+    """A NULL value under a minCount 1 / xsd:float shape is neither a
+    missing value nor an ill-typed one: the aggregation fails, naming
+    the column, the path and the subject."""
+    with pytest.raises(Exception, match=f"column obj is NULL on path {SCHEMA}power of subject {EX}session2"):
+        validate(_df(spark, _null_power()), repo_shapes).collect()
+
+
+def test_reference_null_obj_raises(repo_shapes):
+    with pytest.raises(ValueError, match=f"column obj is NULL on path {SCHEMA}power of subject {EX}session2"):
+        reference_validate(_null_power(), repo_shapes)
+
+
 CLASSES = [EX + "Ride", EX + "Run"]
 PATHS = [SCHEMA + "power", SCHEMA + "heartRate", SCHEMA + "name"]
 SUBJECTS = [f"{EX}session{i}" for i in range(4)]

@@ -5,7 +5,7 @@ iterative CC, n-gram linking).
 
 THE GENERATOR IS THE SINGLE-NODE TWIN, NEVER THE SPARK OUTPUT:
 - MinHash/SimHash: pure-Python XXH64 (functions/xxh64.py, implemented
-  from the public xxHash spec) over reference_shingles / tokens;
+  from the public xxHash spec) over reference_shingles / reference_tokens;
 - kg_html_lift: parse_islands + the reference literal-coercion rules
   (reference_lift_page semantics, multiset);
 - kg_cc_components: union-find (operators/cc.py reference_components);
@@ -120,8 +120,10 @@ def minhash_lsh_twin(docs: list[tuple[int, str]]) -> list[tuple[int, int, float]
     return out
 
 
-def simhash_twin(docs: list[tuple[int, str]]) -> list[tuple[int, int, int]]:
+def simhash_signatures(docs: list[tuple[int, str]]) -> dict[int, int]:
+    """doc_id -> 63-bit SimHash signature; docs with no token are left out."""
     from cyclegraph_spark.functions.xxh64 import xxh64_bytes
+    from cyclegraph_spark.operators.textstats import reference_tokens
 
     tok_cache: dict[str, int] = {}
 
@@ -134,7 +136,7 @@ def simhash_twin(docs: list[tuple[int, str]]) -> list[tuple[int, int, int]]:
 
     sigs: dict[int, int] = {}
     for doc_id, text in docs:
-        toks = [t for t in text.strip().split() if t != ""]
+        toks = [t for t in reference_tokens(text) if t != ""]
         if not toks:
             continue
         votes = [0] * 63
@@ -147,7 +149,11 @@ def simhash_twin(docs: list[tuple[int, str]]) -> list[tuple[int, int, int]]:
             if votes[b] > 0:
                 sig |= 1 << b
         sigs[doc_id] = sig
+    return sigs
 
+
+def simhash_twin(docs: list[tuple[int, str]]) -> list[tuple[int, int, int]]:
+    sigs = simhash_signatures(docs)
     out = []
     ids = sorted(sigs)
     for i in range(len(ids)):
