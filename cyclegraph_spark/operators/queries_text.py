@@ -551,6 +551,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 # BPE-ish token counting (regex segmentation; RE2- and Java-compatible)
 # --------------------------------------------------------------------------
 _BPE_PATTERN = r"'(?:s|d|m|t|ll|ve|re)| ?[A-Za-zÀ-ÿ]+| ?[0-9]+| ?[^\sA-Za-zÀ-ÿ0-9]+"
+_BPE_SPARK = _BPE_PATTERN.replace(r"\s", r" \t\n\f\r")  # RE2's \s; Java's holds U+000B
 
 
 @query(
@@ -574,7 +575,7 @@ def t_token_count_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.select(
         "doc_id",
         token_count(F.col("text")).cast("long").alias("n_ws_tokens"),
-        F.regexp_count("text", F.lit(_BPE_PATTERN)).cast("long").alias("n_bpe_tokens"),
+        F.regexp_count("text", F.lit(_BPE_SPARK)).cast("long").alias("n_bpe_tokens"),
     )
 
 

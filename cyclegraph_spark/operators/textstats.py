@@ -88,7 +88,7 @@ def lang_id(text_col: Column) -> Column:
 PII_PATTERNS: tuple[tuple[str, str, str], ...] = (
     ("email", r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}", "[EMAIL]"),
     ("ipv4", r"\b(\d{1,3}\.){3}\d{1,3}\b", "[IP]"),
-    ("phone", r"\+?\d[\d().\-\s]{6,}\d", "[PHONE]"),
+    ("phone", r"\+?\d[\d().\- \t\n\f\r]{6,}\d", "[PHONE]"),  # RE2's \s
 )
 
 

@@ -20,6 +20,14 @@ Layout (Iceberg-style: data files + manifest metadata):
     out_dir/manifest.json        {run_id, partitions: {k: {rows, xhash}}, sha256}
     out_dir/lineage.jsonl        one row per (run, stage, partition)
 
+Commit rule: a manifest entry always holds the fingerprint of the rows
+its bucket holds on disk. ``materialize_triples`` writes first and then
+fingerprints the buckets that landed, because its entry is the bucket's
+completion marker. ``recanonicalize_store`` rewrites buckets that are
+already complete; it fingerprints its eager checkpoint of the rewrite
+and saves those entries before the overwrite, so no crash leaves an
+entry that no replay corrects.
+
 Partitioning: part_id = bucket(src, n_buckets) = pmod(xxhash64(src), n) —
 provenance bucketing: a page's url and every triple lifted from it land
 in the same bucket, so a resumed run prunes completed buckets before
@@ -122,42 +130,27 @@ def write_parquet(
     return obs.get["rows"]
 
 
-def _commit_buckets(spark, out_dir: str, run_id: str, stage: str, where: Column) -> list[int]:
-    """Fingerprint the store buckets selected by ``where`` from what
-    landed on disk, record them in the checkpoint manifest, save it, and
-    append one ``stage`` lineage row per bucket. Returns their ids.
+def fingerprint(df: DataFrame) -> list[tuple[int, int, int]]:
+    """``(part_id, rows, xhash)`` per bucket of ``df``, where xhash is
+    ``bit_xor(xxhash64(<every column but part_id>))``: an order-
+    independent content fingerprint, reproducible at any parallelism. It
+    covers every data column (incl. provenance) so duplicate quads from
+    two sources can't cancel out."""
+    cols = ", ".join(c for c in df.columns if c != "part_id")
+    agg = df.groupBy("part_id").agg(F.count(F.lit(1)), F.expr(f"bit_xor(xxhash64({cols}))"))
+    return [tuple(map(int, r)) for r in agg.collect()]
 
-    bit_xor of row hashes is an order-independent content fingerprint,
-    reproducible at any parallelism. It covers every data column (incl.
-    provenance) so duplicate quads from two sources can't cancel out.
-    """
-    store = spark.read.parquet(os.path.join(out_dir, "data"))
-    hash_cols = ", ".join(c for c in store.columns if c != "part_id")
-    stats = (
-        store.filter(where)
-        .groupBy("part_id")
-        .agg(
-            F.count(F.lit(1)).alias("rows"),
-            F.expr(f"bit_xor(xxhash64({hash_cols}))").alias("xhash"),
-        )
-        .collect()
-    )
+
+def _commit(out_dir: str, run_id: str, stage: str, stats: list) -> list[dict]:
+    """Record ``fingerprint`` rows in the checkpoint manifest and save it.
+    Returns their ``stage`` lineage rows, for the caller to append once
+    its write has landed."""
     manifest = CheckpointManifest(out_dir)
-    lineage_rows = []
-    for r in stats:
-        manifest.record(int(r.part_id), int(r.rows), int(r.xhash))
-        lineage_rows.append(
-            {
-                "run_id": run_id,
-                "stage": stage,
-                "partition": int(r.part_id),
-                "output_rows": int(r.rows),
-                "xhash": int(r.xhash),
-            }
-        )
+    for part, rows, xhash in stats:
+        manifest.record(part, rows, xhash)
     manifest.save(run_id)
-    append_lineage(out_dir, lineage_rows)
-    return sorted(int(r.part_id) for r in stats)
+    keys = ("partition", "output_rows", "xhash")
+    return [{"run_id": run_id, "stage": stage, **dict(zip(keys, s))} for s in stats]
 
 
 def materialize_triples(triples: DataFrame, out_dir: str, run_id: str) -> dict:
@@ -174,35 +167,41 @@ def materialize_triples(triples: DataFrame, out_dir: str, run_id: str) -> dict:
     # completed buckets are filtered out here, so the dynamic overwrite
     # never touches them
     pending = ~F.col("part_id").isin(*done) if done else F.lit(True)
-    rows = write_parquet(
-        triples.filter(pending), os.path.join(out_dir, "data"), by="part_id", dynamic=True
-    )
-    written = _commit_buckets(triples.sparkSession, out_dir, run_id, "materialize", pending)
-    return {"written": written, "skipped": done, "rows": rows}
+    data_dir = os.path.join(out_dir, "data")
+    rows = write_parquet(triples.filter(pending), data_dir, by="part_id", dynamic=True)
+    # the manifest entry marks a bucket complete, so it is fingerprinted
+    # from what landed and saved only after the write
+    stats = fingerprint(triples.sparkSession.read.parquet(data_dir).filter(pending))
+    append_lineage(out_dir, _commit(out_dir, run_id, "materialize", stats))
+    return {"written": sorted(s[0] for s in stats), "skipped": done, "rows": rows}
 
 
 LABELS = "labels"
 
 
-def write_labels(labels: DataFrame, out_dir: str) -> None:
+def write_labels(labels: DataFrame, out_dir: str) -> int:
     """Persist the CC labels table (id → canonical component) with an
     atomic-ish directory swap: write to ``labels.tmp``, rotate the old
     dir to ``labels.old``, rename tmp into place. A crash between the
     renames leaves ``labels.old`` for the reader's fallback — prior
     connectivity facts are never lost to a torn overwrite (labels-as-
     edges are monotone facts: component membership stays true forever).
+    Returns the rows written.
     """
     import shutil
 
     labels_dir = os.path.join(out_dir, LABELS)
     tmp, old = labels_dir + ".tmp", labels_dir + ".old"
-    labels.write.mode("overwrite").parquet(tmp)
-    shutil.rmtree(old, ignore_errors=True)
+    rows = write_parquet(labels, tmp)
+    # labels.old is the only copy while labels is missing (a crash
+    # between the renames), so it is dropped only once labels exists
     if os.path.exists(labels_dir):
+        shutil.rmtree(old, ignore_errors=True)
         os.rename(labels_dir, old)
     os.rename(tmp, labels_dir)
     shutil.rmtree(old, ignore_errors=True)
     labels.sparkSession.catalog.refreshByPath(labels_dir)
+    return rows
 
 
 def read_labels(spark, out_dir: str) -> DataFrame | None:
@@ -215,65 +214,63 @@ def read_labels(spark, out_dir: str) -> DataFrame | None:
 
 
 def recanonicalize_store(
-    spark, out_dir: str, remap: DataFrame, run_id: str
+    spark, out_dir: str, labels: DataFrame, prior: DataFrame, run_id: str
 ) -> dict:
     """Rewrite already-materialized buckets whose canonical ids went
     STALE on resume: new edges merged an old component into a smaller
     id, so rows written in earlier runs still carry the old component.
 
-    ``remap(from_id, to_id)`` is small (only the ids whose canonical
-    assignment CHANGED — empty when the resumed buckets don't touch old
-    components), so both probes broadcast. Only partitions that actually
-    contain a stale id are rewritten (dynamic overwrite), their manifest
-    fingerprints recomputed, and a ``recanonicalize`` lineage row logged.
-    Idempotent: a replay finds no stale ids and no-ops.
+    Store rows hold OLD canonical values (``prior``'s component, or the
+    raw id if it had none), so the remap goes FROM the old canonical TO
+    the component in ``labels``, for every id whose assignment changed.
+    It is small (empty when the resumed buckets don't touch old
+    components), so its probes broadcast. Only buckets holding a stale
+    id are rewritten (dynamic overwrite). Their manifest entries are
+    fingerprinted from the rewrite's eager checkpoint and saved BEFORE
+    the overwrite, the ``recanonicalize`` lineage rows after it: a replay
+    redoes a rewrite that did not land and finds no stale ids in one
+    that did, whose entries are already saved.
     """
     data_dir = os.path.join(out_dir, "data")
     if not os.path.exists(data_dir):
         return {"rows": 0, "partitions": []}
     obs = Observation()
     rm = (
-        remap.select(F.col("from_id").alias("_from"), F.col("to_id").alias("_to"))
+        labels.join(prior.select("id", F.col("component").alias("_old")), "id", "left")
+        .select(F.coalesce("_old", "id").alias("_from"), F.col("component").alias("_to"))
+        .filter(F.col("_from") != F.col("_to"))
+        .distinct()
         .observe(obs, F.count(F.lit(1)).alias("n"))
         .localCheckpoint(eager=True)
     )
     if obs.get["n"] == 0:
         return {"rows": 0, "partitions": []}
 
+    rm_s = F.broadcast(rm.select(F.col("_from").alias("_sf"), F.col("_to").alias("_st")))
+    rm_o = F.broadcast(rm.select(F.col("_from").alias("_of"), F.col("_to").alias("_ot")))
+
+    def probe(df: DataFrame) -> DataFrame:  # new ids of stale subj/obj in _st/_ot
+        df = df.join(rm_s, df["subj"] == rm_s["_sf"], "left")
+        return df.join(rm_o, df["obj"] == rm_o["_of"], "left")
+
     store = spark.read.parquet(data_dir)
-    rm_s = rm.select(F.col("_from").alias("_sf"), F.col("_to").alias("_st"))
-    rm_o = rm.select(F.col("_from").alias("_of"), F.col("_to").alias("_ot"))
-    # one scan of the store, probing both broadcast remaps
-    stale = store.select("subj", "obj", "part_id")
-    affected = (
-        stale.join(F.broadcast(rm_s), stale["subj"] == rm_s["_sf"], "left")
-        .join(F.broadcast(rm_o), stale["obj"] == rm_o["_of"], "left")
-        .filter(F.col("_sf").isNotNull() | F.col("_of").isNotNull())
-        .select("part_id")
-        .distinct()
-        .collect()
-    )
-    parts = sorted(int(r.part_id) for r in affected)
+    stale = probe(store.select("subj", "obj", "part_id"))
+    stale = stale.filter(F.col("_st").isNotNull() | F.col("_ot").isNotNull())
+    parts = sorted(r.part_id for r in stale.select("part_id").distinct().collect())
     if not parts:
         return {"rows": 0, "partitions": []}
 
-    sub = store.filter(F.col("part_id").isin(parts))
-    data_cols = [c for c in store.columns if c != "part_id"]
     rewritten = (
-        sub.join(F.broadcast(rm_s), sub["subj"] == rm_s["_sf"], "left")
-        .join(F.broadcast(rm_o), sub["obj"] == rm_o["_of"], "left")
-        .select(
-            F.coalesce(F.col("_st"), F.col("subj")).alias("subj"),
-            *[F.col(c) for c in data_cols if c not in ("subj", "obj")],
-            F.coalesce(F.col("_ot"), F.col("obj")).alias("obj"),
-            F.col("part_id"),
-        )
-        .select(*data_cols, "part_id")  # restore canonical column order
+        probe(store.filter(F.col("part_id").isin(parts)))
+        .withColumn("subj", F.coalesce("_st", "subj"))
+        .withColumn("obj", F.coalesce("_ot", "obj"))
+        .select(*store.columns)  # the store's column order, part_id last
         .distinct()  # merged components can collapse previously-distinct rows
         .localCheckpoint(eager=True)  # materialize BEFORE overwriting the source
     )
+    lineage = _commit(out_dir, run_id, "recanonicalize", fingerprint(rewritten))
     rows = write_parquet(rewritten, data_dir, by="part_id", dynamic=True)
-    _commit_buckets(spark, out_dir, run_id, "recanonicalize", F.col("part_id").isin(parts))
+    append_lineage(out_dir, lineage)
     return {"rows": rows, "partitions": parts}
 
 

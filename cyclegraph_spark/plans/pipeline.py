@@ -183,34 +183,21 @@ def _lift_and_canonicalize(
             prior.select(F.col("id").alias("src"), F.col("component").alias("dst"))
         )
     cc_stats: dict = {}
-    # checkpointed: the remap, the store rewrite and write_labels below
-    # read it without re-running CC
+    # checkpointed: the store rewrite and write_labels below read it
+    # without re-running CC
     labels = connected_components(edges, stats=cc_stats)
     if prior is not None:
-        # stale ids: old canonical assignment != new one. Store rows hold
-        # OLD canonical values (old component minima or never-labeled raw
-        # ids), so remap FROM the old canonical TO the new component.
-        remap = (
-            labels.join(
-                prior.select("id", F.col("component").alias("_old_comp")), "id", "left"
-            )
-            .withColumn("_old_canon", F.coalesce(F.col("_old_comp"), F.col("id")))
-            .filter(F.col("component") != F.col("_old_canon"))
-            .select(
-                F.col("_old_canon").alias("from_id"),
-                F.col("component").alias("to_id"),
-            )
-            .distinct()
-        )
         t_rc = time.time()
-        rc = recanonicalize_store(spark, out_dir, remap, run_id)
+        rc = recanonicalize_store(spark, out_dir, labels, prior, run_id)
         if rc["partitions"]:
             metrics["recanonicalize"] = {"rows": rc["rows"], "sec": round(time.time() - t_rc, 3)}
-    # persist AFTER the store rewrite: if we crash in between, the next
-    # resume recomputes the same merge against the OLD labels and the
-    # rewrite replays as a no-op; persisting first would hide the merge
-    # (prior == new ⇒ empty remap) and leave stale rows forever.
-    write_labels(labels, out_dir)
+    # persist AFTER the store rewrite: a resume after a crash in between
+    # recomputes the same merge against the OLD labels, so it redoes a
+    # rewrite that did not land and finds no stale ids in one that did
+    # (its manifest entries were saved ahead of the overwrite);
+    # persisting first would hide the merge (prior == new ⇒ no stale
+    # ids) and leave stale rows forever.
+    n_labels = write_labels(labels, out_dir)
     written_labels = read_labels(spark, out_dir)
     if written_labels is None:
         raise RuntimeError(
@@ -225,6 +212,7 @@ def _lift_and_canonicalize(
     # through joins/aggs are unreliable; file stats are not).
     canon = canonicalize_triples(triples, written_labels, keep_cols=("src", "part_id"))
     metrics["cc"] = {
+        "rows": n_labels,
         "sec": round(time.time() - t0, 3),
         "rounds": cc_stats["rounds"],
         "edges": cc_stats["edges"],

@@ -157,3 +157,20 @@ def test_every_package_definition_is_reached():
     )
     stale = sorted(n for n in UNREACHED_OK if n not in defs or n in reached)
     assert not stale, f"UNREACHED_OK entries now gone or reached: {stale}"
+
+
+def test_perfbench_traced_names_resolve():
+    """``perfbench/layers.py`` traces the factory by patching names on
+    ``plans.pipeline`` (``PIPELINE_CALLS``) and ``operators.nodes``
+    (``node_table``); a name that no longer resolves there breaks only
+    the traced benchmark run."""
+    import importlib.util
+
+    spec = importlib.util.spec_from_file_location("layers", ROOT / "perfbench" / "layers.py")
+    layers = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(layers)
+    pipeline = importlib.import_module(f"{PKG}.plans.pipeline")
+    nodes = importlib.import_module(f"{PKG}.operators.nodes")
+    missing = sorted(n for n in layers.PIPELINE_CALLS if not callable(getattr(pipeline, n, None)))
+    assert not missing, f"perfbench traces names plans.pipeline lacks: {missing}"
+    assert callable(getattr(nodes, "node_table", None))
